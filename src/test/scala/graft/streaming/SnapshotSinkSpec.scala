@@ -63,6 +63,14 @@ class SnapshotSinkSpec extends SparkSpec {
     val before2 = Layout.manifestReads.get()
     assert(SnapshotSink.appendOnce(Seq(99).toDF("v"), 12L, dir) === false)
     assert(Layout.manifestReads.get() - before2 <= 2)
+    // one keyed upsert on the same history: the replay probe, the
+    // latest-version check and the merge commit stay O(1) too
+    val before3 = Layout.manifestReads.get()
+    assert(SnapshotSink.mergeOnce(Seq(5, 100).toDF("v"), 13L, dir,
+      Seq("v")))
+    val mergeReads = Layout.manifestReads.get() - before3
+    assert(mergeReads <= 5,
+      s"one mergeOnce upsert read $mergeReads manifests")
   }
 
   test("appendOnce: a batchId far below the newest marker fails loudly") {

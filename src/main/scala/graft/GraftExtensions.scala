@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.functions.{MinHashSig, VecDot}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Production registration point for graft's native functions:
   *
@@ -20,27 +18,11 @@ import graft.functions.{MinHashSig, VecDot}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(classOf[graft.functions.PqAdc].getName, "pq_adc"),
-      (exprs: Seq[Expression]) => graft.functions.PqAdc(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) =>
-        MinHashSig(exprs(0), exprs(1).eval().asInstanceOf[Int])))
+    // every native function of the one registry (GraftFunctions)
+    graft.functions.GraftFunctions.registry.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     // interval-containment joins plan as hash joins, not nested loops
     // (opt-in via spark.graft.rangeJoin.binSeconds)
     ext.injectOptimizerRule(session => graft.plans.RangeJoinBinning(session))

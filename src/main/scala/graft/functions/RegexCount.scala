@@ -35,6 +35,11 @@ case class RegexCount(left: Expression, right: Expression)
     if (!right.foldable)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         "regex_count requires a literal pattern")
+    // a NULL literal has nothing to compile: refuse at analysis instead
+    // of an NPE when the pattern is compiled during execution
+    else if (right.eval() == null)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        "regex_count requires a non-NULL pattern")
     else if (left.dataType != org.apache.spark.sql.types.StringType ||
       right.dataType != org.apache.spark.sql.types.StringType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  BloomFilterMightContain, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product over two `array<float>` columns, in double precision.
   *
@@ -20,11 +21,14 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * `(double)a[i] * (double)b[i]` — bit-identical to both the interpreted
   * form and DuckDB's `list_sum(list_transform(list_zip(...)))` left fold,
   * so oracle hash-compares stay exact. Null arrays propagate null; lengths
-  * are clamped to the shorter side.
+  * are clamped to the shorter side. Both inputs must be `array<float>`
+  * (elements are read with `getFloat`): any other type fails analysis
+  * with DATATYPE_MISMATCH instead of a ClassCastException at runtime.
   */
 case class VecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
@@ -61,11 +65,44 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-scoped registration of graft's native functions. Idempotent —
-  * call before building plans that use `call_function("vec_dot", …)`.
-  * Hooked into [[graft.Tables]] so driver-owned sessions (which we don't
-  * construct) get it for free. */
+/** THE registry of graft's native SQL functions, and its session-scoped
+  * registration door. Both doors iterate [[registry]]:
+  * [[graft.GraftExtensions]] injects every entry into sessions built
+  * with the extensions, and [[ensureRegistered]] registers every entry
+  * into sessions we don't construct (hooked into [[graft.Tables]], so
+  * driver-owned sessions get it for free) — a name reachable through
+  * one door is reachable through the other. */
 object GraftFunctions {
+  /** (SQL name, implementing class, builder) of every native function. */
+  val registry: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VecDot], e => VecDot(e(0), e(1))),
+    ("minhash_sig", classOf[MinHashSig],
+      e => MinHashSig(e(0), e(1).eval().asInstanceOf[Int])),
+    ("byte_entropy", classOf[ByteEntropy], e => ByteEntropy(e(0))),
+    ("pq_adc", classOf[PqAdc], e => PqAdc(e(0), e(1))),
+    // Spark's own runtime-filter probe expression, surfaced for explicit
+    // cross-job bloom pruning (ops.Prune): args = (serialized sketch
+    // literal, xxhash64(key))
+    ("bloom_might", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))),
+    ("shingle_minhash", classOf[ShingleMinHash],
+      e => ShingleMinHash(e(0), e(1).eval().asInstanceOf[Int],
+        e(2).eval().asInstanceOf[Int])),
+    ("shingle_hashes", classOf[ShingleHashes],
+      e => ShingleHashes(e(0), e(1).eval().asInstanceOf[Int],
+        e(2).eval().asInstanceOf[Boolean])),
+    ("regex_count", classOf[RegexCount], e => RegexCount(e(0), e(1))),
+    ("lsh_band_keys", classOf[LshBandKeys],
+      e => LshBandKeys(e(0), e(1).eval().asInstanceOf[Int],
+        e(2).eval().asInstanceOf[Int])),
+    // typed Aggregator → SQL surface: SELECT vec_centroid(embedding) …
+    ("vec_centroid", VecCentroid.getClass,
+      e => org.apache.spark.sql.GraftPlanBridge.udafExpression(
+        VecCentroidUdaf, e)))
+
+  private lazy val VecCentroidUdaf =
+    org.apache.spark.sql.functions.udaf(VecCentroid).withName("vec_centroid")
+
   /** Sessions already registered — re-registering on every `Tables.table`
     * call emitted a "SimpleFunctionRegistry … replaced" WARN per scan,
     * burying Bench's JSON contract line in log noise. Weak keys: a closed
@@ -74,48 +111,14 @@ object GraftFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
+  /** Register every [[registry]] entry into `spark`. Idempotent — call
+    * before building plans that use `call_function("vec_dot", …)`. */
   def ensureRegistered(spark: SparkSession): Unit = {
     if (registered.containsKey(spark)) return
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig",
-      (exprs: Seq[Expression]) => MinHashSig(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "byte_entropy", (exprs: Seq[Expression]) => ByteEntropy(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pq_adc", (exprs: Seq[Expression]) => PqAdc(exprs(0), exprs(1)), "built-in")
-    // Spark's own runtime-filter probe expression, surfaced for explicit
-    // cross-job bloom pruning (ops.Prune): args = (serialized sketch
-    // literal, xxhash64(key))
-    reg.createOrReplaceTempFunction(
-      "bloom_might",
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_minhash",
-      (exprs: Seq[Expression]) => ShingleMinHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes",
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Boolean]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "regex_count",
-      (exprs: Seq[Expression]) => RegexCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "lsh_band_keys",
-      (exprs: Seq[Expression]) => LshBandKeys(exprs(0),
-        exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
-    // typed Aggregator → SQL surface: SELECT vec_centroid(embedding) …
-    spark.udf.register("vec_centroid",
-      org.apache.spark.sql.functions.udaf(VecCentroid))
+    registry.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
     registered.put(spark, java.lang.Boolean.TRUE)
   }
 }

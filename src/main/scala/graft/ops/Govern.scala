@@ -294,7 +294,7 @@ object Govern {
           val gfs = govRoot.getFileSystem(
             spark.sparkContext.hadoopConfiguration)
           gfs.mkdirs(govRoot)
-          require(Layout.atomicCreate(gfs,
+          require(SnapshotManifest.atomicCreate(gfs,
               new org.apache.hadoop.fs.Path(govRoot,
                 s"$ledgerId.$suffix"),
               (lines.map(_ + "\n") :+ s"$marker\n").mkString

@@ -235,10 +235,8 @@ object SnapshotSink {
   private def unlessReplay(spark: org.apache.spark.sql.SparkSession,
       batchId: Long, dir: String,
       branch: Option[String] = None)(commit: => Unit): Boolean = {
-    val newest = (branch match {
-      case Some(b) => Layout.snapshotBranchNewestMeta(spark, dir, b, BatchTag)
-      case None    => Layout.snapshotNewestMeta(spark, dir, BatchTag)
-    }).map(_.stripPrefix(BatchTag).toLong)
+    val newest = Layout.snapshotNewestMeta(spark, dir, BatchTag, branch)
+      .map(_.stripPrefix(BatchTag).toLong)
     newest match {
       case Some(n) if batchId < n - 1 =>
         throw new IllegalStateException(

@@ -32,6 +32,17 @@ object GraftPlanBridge {
   def columnOf(e: catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** The Catalyst aggregate a typed-`Aggregator` UDAF (`functions.udaf`)
+    * builds over `children` — what `spark.udf.register` installs, in the
+    * builder form `SparkSessionExtensions.injectFunction` takes
+    * (`UserDefinedAggregator` and `ScalaAggregator` are `private[sql]`). */
+  def udafExpression(udaf: expressions.UserDefinedFunction,
+      children: Seq[catalyst.expressions.Expression])
+      : catalyst.expressions.Expression =
+    execution.aggregate.ScalaAggregator(
+      udaf.asInstanceOf[expressions.UserDefinedAggregator[Any, Any, Any]],
+      children)
+
   /** True when RE-EXECUTING `df`'s plan several times is both STABLE
     * (same rows every time) and CHEAPER than materializing a pinning
     * copy: every leaf is an IN-MEMORY relation (local data / range —

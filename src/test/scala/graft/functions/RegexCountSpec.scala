@@ -45,4 +45,12 @@ class RegexCountSpec extends SparkSpec {
     assert(r(1L) === -999L)
     assert(r(2L) === 2L)
   }
+
+  test("a NULL literal pattern is rejected at analysis") {
+    GraftFunctions.ensureRegistered(spark)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT regex_count(CAST(id AS STRING), " +
+        "CAST(NULL AS STRING)) FROM range(3)").collect()
+    }
+  }
 }

@@ -4144,7 +4144,7 @@ object Layout {
       publishedAt: Option[Long],
       rebase: Option[(Long, Long, Set[String])])
       : (Set[String], Set[String]) = {
-    def linesOf(v: Long): Manifest =
+    def manifestOf(v: Long): Manifest =
       if (v == tip.version) tip else read(spark, dir, v, branchSub(name))
     def stateOf(m: Manifest, dropDirs: Set[String])
         : (Set[String], Set[String]) = {
@@ -4156,9 +4156,9 @@ object Layout {
     }
     (publishedAt, rebase) match {
       case (Some(w), r) if r.forall(_._1 <= w) =>
-        stateOf(linesOf(w), Set.empty)
-      case (_, Some((vR, _, dirs))) => stateOf(linesOf(vR), dirs)
-      case _ => stateOf(linesOf(bvs.head), Set.empty)
+        stateOf(manifestOf(w), Set.empty)
+      case (_, Some((vR, _, dirs))) => stateOf(manifestOf(vR), dirs)
+      case _ => stateOf(manifestOf(bvs.head), Set.empty)
     }
   }
 
@@ -5489,9 +5489,7 @@ object Layout {
         s"snapshotRebase: copying $what $oldRel -> $newRel at $dir " +
           "failed")
     def listRel(newRel: String): Seq[String] =
-      fs.listStatus(new Path(dir, newRel)).map(_.getPath.getName)
-        .filter(n => !n.startsWith("_") && !n.startsWith("."))
-        .sorted.toSeq.map(f => s"$newRel/$f")
+      dataFiles(spark, new Path(dir, newRel)).map(f => s"$newRel/$f")
     val stagedByDir = staged.groupBy(stagedDirOf)
     val tipColmapsParsed = tipM.colmaps
     var nextW = floorW

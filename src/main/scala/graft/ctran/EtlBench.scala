@@ -38,15 +38,12 @@ object EtlBench {
         .write.json(in)
 
       val t0 = System.nanoTime()
-      val raw = spark.read.schema(Schemas.rawBreadcrumb).json(in).cache()
-      val consumed = raw.count()
-      val (bc, trips) = Load.prepare(raw)
-      Load.insertTrips(spark, trips, s"$dir/trip")
-      val inserted = bc.count()
-      Load.insertBreadcrumbs(bc, s"$dir/bc")
-      raw.unpersist()
+      val raw = spark.read.schema(Schemas.rawBreadcrumb).json(in)
+      val (consumed, inserted, skipped) = Load.ingest(spark, raw, s"$dir/trip") {
+        bc => Load.insertBreadcrumbs(bc, s"$dir/bc"); true
+      }
       val sec = (System.nanoTime() - t0) / 1e9
-      Result(consumed / sec, consumed, inserted, consumed - inserted, sec)
+      Result(consumed / sec, consumed, inserted, skipped, sec)
     } finally
       // staged JSON + written tables are sizable; don't leak them per run
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

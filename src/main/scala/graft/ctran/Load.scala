@@ -1,6 +1,6 @@
 package graft.ctran
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch load paths (reference load_inserts.py / update_inserts.py) onto
@@ -24,21 +24,35 @@ object Load {
   def readRawJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", value = true).schema(Schemas.rawBreadcrumb).json(path)
 
-  /** Transform + validate + split into the two table-shaped frames. No
-    * counting here — callers derive skipped = consumed − inserted (the
-    * reference's own invariant) instead of paying extra passes. */
-  def prepare(raw: DataFrame): (DataFrame, DataFrame) = {
-    val valid = Transform.enrich(raw).filter(Transform.isValid)
-    (Transform.toBreadcrumbs(valid)
-       .withColumn("opd_date", to_date(col("tstamp"))),
-     Transform.toTrips(valid))
+  /** The one ingest body of [[loadFile]] and [[graft.streaming.StreamEtl]]:
+    * transform → validate → idempotent trip insert → breadcrumb `sink`.
+    * The validated rows are persisted once (and released however the call
+    * ends), so both writes share one read of `raw`. The counters come from
+    * one observation ([[graft.streaming.Metrics.observed]]) before the
+    * validity filter, collected when the trip insert every call runs
+    * builds the cache — no counting job. `sink` returns false when it
+    * wrote nothing (an exactly-once replay): consumed, not inserted. */
+  def ingest(spark: SparkSession, raw: DataFrame, tripDir: String)(
+      sink: DataFrame => Boolean): (Long, Long, Long) = {
+    val valid = graft.streaming.Metrics
+      .observed(Transform.enrich(raw), "ingest", Transform.isValid)
+      .filter(Transform.isValid).persist()
+    try {
+      insertTrips(spark, Transform.toTrips(valid), tripDir)
+      val wrote = sink(Transform.toBreadcrumbs(valid)
+        .withColumn("opd_date", to_date(col("tstamp"))))
+      val m = GraftPlanBridge.cachedObservedMetrics(valid)("ingest")
+      val consumed = m.getAs[Long]("consumed")
+      val inserted = if (wrote) m.getAs[Long]("kept") else 0L
+      (consumed, inserted, consumed - inserted)
+    } finally { valid.unpersist(); () }
   }
 
   /** Idempotent append of new trips (insert-if-absent on the PK). */
   def insertTrips(spark: SparkSession, trips: DataFrame, tripDir: String): Unit = {
     val fresh =
       if (tableExists(spark, tripDir)) {
-        val existing = spark.read.parquet(tripDir).select("trip_id")
+        val existing = readTable(spark, tripDir).select("trip_id")
         trips.join(existing, Seq("trip_id"), "left_anti")
       } else trips
     fresh.write.mode(SaveMode.Append).parquet(tripDir)
@@ -50,23 +64,14 @@ object Load {
   def insertBreadcrumbs(bc: DataFrame, bcDir: String): Unit =
     bc.write.mode(SaveMode.Append).partitionBy("opd_date").parquet(bcDir)
 
-  /** End-to-end batch load (load_inserts.py parity). Returns counters —
-    * the reference's reconciliation oracle (consumed = inserted + skipped).
-    */
+  /** End-to-end batch load (load_inserts.py parity) through [[ingest]]:
+    * one JSON parse; returns the reference's reconciliation counters
+    * (consumed = inserted + skipped) from observed metrics. */
   def loadFile(spark: SparkSession, jsonPath: String,
-      bcDir: String, tripDir: String): (Long, Long, Long) = {
-    // cache the parsed input: the trips and breadcrumbs branches (and
-    // their counts) would otherwise each re-parse the JSON
-    val raw = readRawJson(spark, jsonPath).cache()
-    try {
-      val consumed = raw.count()
-      val (bc, trips) = prepare(raw)
-      insertTrips(spark, trips, tripDir)
-      val inserted = bc.count()
-      insertBreadcrumbs(bc, bcDir)
-      (consumed, inserted, consumed - inserted)
-    } finally { raw.unpersist(); () }
-  }
+      bcDir: String, tripDir: String): (Long, Long, Long) =
+    ingest(spark, readRawJson(spark, jsonPath), tripDir) { bc =>
+      insertBreadcrumbs(bc, bcDir); true
+    }
 
   /** Keyed update of Trip from stop events (J2, stop_consumer.py:76-78):
     * match on (trip_id, vehicle_id, service_key), set route_id/direction.
@@ -86,7 +91,7 @@ object Load {
   def mergeStopEvents(spark: SparkSession, updates: DataFrame, tripDir: String,
       orderCol: Option[String] = None): Unit = {
     val u = firstSeenPerTrip(updates, orderCol)
-    val merged = applyTripUpdates(spark.read.parquet(tripDir), u)
+    val merged = applyTripUpdates(readTable(spark, tripDir), u)
     graft.ops.Layout.atomicOverwrite(merged, tripDir)
   }
 
@@ -136,6 +141,10 @@ object Load {
         col("service_key"),
         coalesce(col("u_direction"), col("t.direction")).as("direction"))
   }
+
+  /** A plain parquet table under its footer schema: no inference job. */
+  private def readTable(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(GraftPlanBridge.parquetSchemaOf(spark, dir)).parquet(dir)
 
   private def tableExists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)

@@ -1144,35 +1144,15 @@ object Layout {
     }.reduce(_ unionByName _)
   }
 
-  /** [[mappedRead]] with the stock batch parquet reader. */
-  /** Footer schema of one manifest-relative file, read on the DRIVER —
-    * replaces the `spark.read.parquet(path).schema` idiom, whose schema
-    * inference runs a one-task Spark job per call (30–50 ms of pure
-    * scheduling for a ~1 ms local footer read; StageProbe r19 showed
-    * 1–2 such jobs on every snapshot open). Same schema by construction:
-    * [[org.apache.spark.sql.GraftPlanBridge.parquetSchemaOf]] uses
-    * Spark's own footer-to-schema converter under the session conf. */
+  /** Footer schema of one manifest-relative file or data directory, read
+    * on the driver by [[org.apache.spark.sql.GraftPlanBridge.parquetSchemaOf]]
+    * instead of a one-task schema-inference job. */
   private def fileSchema(spark: SparkSession, dir: String,
-      rel: String): org.apache.spark.sql.types.StructType = {
-    // manifest rels are DIRECTORIES (data/vNNNNNNNN-token/part-*.parquet)
-    // — resolve to one data file; footers agree within a commit by
-    // construction (one writer, one schema)
-    val p = new Path(dir, rel)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val file =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).iterator
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath)
-          .toSeq.sortBy(_.getName)
-          .headOption
-          .getOrElse(sys.error(
-            s"fileSchema: no parquet data file under $p"))
-      else p
+      rel: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.GraftPlanBridge.parquetSchemaOf(
-      spark, file.toString)
-  }
+      spark, new Path(dir, rel).toString)
 
+  /** [[mappedRead]] with the stock batch parquet reader. */
   private def mappedParquetRead(spark: SparkSession, dir: String,
       rels: Seq[String], schema: Option[org.apache.spark.sql.types.StructType],
       colmaps: Seq[(Long, Map[Int, String])]): DataFrame = {
@@ -3131,7 +3111,13 @@ object Layout {
     * [[snapshotAppend]]), carry NO null key, and hold at most one row
     * per key (ambiguous multi-row upserts refuse — pre-aggregate
     * last-writer-wins upstream). Concurrency is the optimistic retry of
-    * every derived commit. Returns the committed version. */
+    * every derived commit. Returns the committed version.
+    *
+    * Cost: `updates` is persisted once, before anything reads it, so its
+    * upstream plan runs once; a change set within the IN-list threshold
+    * is analysed (counts, refusals, IN lists) in ONE bounded job; the
+    * probe and rewrite read under the footer-derived table schema, with
+    * no schema-inference job. */
   def snapshotMergeInto(spark: SparkSession, dir: String,
       updates: DataFrame, keyCols: Seq[String],
       meta: Seq[String] = Nil,
@@ -3147,212 +3133,204 @@ object Layout {
     }
     requireKeys(updates, "updates")
     deletes.foreach(requireKeys(_, "deletes"))
-    // ONE driver round-trip analyzes BOTH sides: key tuples are tagged
-    // by side and rolled up — each side's row carries its count /
-    // distinct-key count / per-key null counts / min-max bounds, and
-    // the rollup's grand-total row detects updates∩deletes overlap with
-    // arithmetic (|U ∪ D| < |U| + |D| ⇔ a shared key) instead of a
-    // second join job. mergeOnce runs this before EVERY micro-batch, so
-    // fixed driver cost here is CDC-apply latency.
-    val updTagged = updates.select(
-      keyCols.map(col) :+ lit(false).as("_gdel"): _*)
-    val tagged = deletes.map(d => updTagged.unionByName(
-      d.select(keyCols.map(col) :+ lit(true).as("_gdel"): _*)))
-      .getOrElse(updTagged)
-    val aggs = Seq(count(lit(1)).as("_n"),
-      count_distinct(struct(keyCols.map(col): _*)).as("_nd")) ++
-      keyCols.flatMap(k => Seq(
-        sum(col(k).isNull.cast("long")).as(s"_nul_$k"),
-        min(col(k)).as(s"_mn_$k"), max(col(k)).as(s"_mx_$k")))
-    val chk = tagged.rollup(col("_gdel")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-    def rowOf(tag: Option[Boolean]) = chk.find(r => tag match {
-      case None    => r.isNullAt(0)
-      case Some(b) => !r.isNullAt(0) && r.getBoolean(0) == b
-    })
-    def nOf(tag: Option[Boolean]): Long =
-      rowOf(tag).map(_.getAs[Long]("_n")).getOrElse(0L)
-    def ndOf(tag: Option[Boolean]): Long =
-      rowOf(tag).map(_.getAs[Long]("_nd")).getOrElse(0L)
-    Seq(false -> "updates", true -> "deletes").foreach { case (t, what) =>
-      rowOf(Some(t)).foreach { r =>
-        keyCols.foreach { k =>
-          require(r.getAs[Long](s"_nul_$k") == 0,
-            s"snapshotMergeInto: $what carry NULL in key column '$k' — a " +
-              "null key matches nothing and cannot be applied")
+    // the change set feeds the key analysis and several actions (probe
+    // and rewrite build sides, the upsert union, the change records) —
+    // persist it FIRST, O(batch) memory, so the caller's upstream plan
+    // runs once. The probe's semi-join output is likewise cached: EXACTLY
+    // the matched (file, key) pairs, shared by the touched-file collect
+    // and the change record's dropped-key set. Every pin is released when
+    // the merge settles: refusals, no-ops and retries included.
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { pins += df; df.persist() }
+    val updCached = pin(updates)
+    try {
+      val updKeys = updCached.select(keyCols.map(col): _*)
+      val sides = (false -> updKeys) +:
+        deletes.map(d => true -> d.select(keyCols.map(col): _*)).toSeq
+      def tagged(limit: Option[Int]): DataFrame = sides.map { case (d, df) =>
+        val t = df.withColumn("_gdel", lit(d))
+        limit.fold(t)(t.limit)
+      }.reduce(_ unionByName _)
+      // ONE bounded job analyzes a change set within the IN-list threshold
+      // (every streaming upsert — mergeOnce pays this per micro-batch): the
+      // first InMax + 1 key rows of each side, grouped per key tuple with
+      // each side's multiplicity, give every count, duplicate, null key,
+      // the updates∩deletes overlap and the IN lists. A side past the
+      // threshold falls back to a rollup whose per-side rows carry count /
+      // distinct-key count / per-key null counts / min-max bounds, and
+      // whose grand-total row shows an overlap as |U ∪ D| < |U| + |D|.
+      val InMax = 1024
+      val sample = tagged(Some(InMax + 1)).groupBy(keyCols.map(col): _*)
+        .agg(count(when(!col("_gdel"), 1)), count(when(col("_gdel"), 1)),
+          count(lit(1))).collect()
+      def cnt(tag: Option[Boolean])(r: org.apache.spark.sql.Row): Long =
+        r.getLong(keyCols.size + tag.fold(2)(d => if (d) 1 else 0))
+      final case class KeyStats(n: Long, nd: Long, nulls: Seq[Long],
+          bounds: Option[org.apache.spark.sql.Row] = None)
+      def sampled(tag: Option[Boolean]): KeyStats = {
+        val rs = sample.filter(cnt(tag)(_) > 0)
+        KeyStats(rs.map(cnt(tag)).sum, rs.length.toLong,
+          keyCols.indices.map(i => rs.filter(_.isNullAt(i)).map(cnt(tag)).sum))
+      }
+      val stats: Map[Option[Boolean], KeyStats] =
+        if (Seq(false, true).forall(d => sampled(Some(d)).n <= InMax))
+          Seq(Some(false), Some(true), None).map(t => t -> sampled(t)).toMap
+        else {
+          val aggs = Seq(count(lit(1)).as("_n"),
+            count_distinct(struct(keyCols.map(col): _*)).as("_nd")) ++
+            keyCols.flatMap(k => Seq(
+              sum(col(k).isNull.cast("long")).as(s"_nul_$k"),
+              min(col(k)).as(s"_mn_$k"), max(col(k)).as(s"_mx_$k")))
+          tagged(None).rollup(col("_gdel")).agg(aggs.head, aggs.tail: _*)
+            .collect().map(r => Option.when(!r.isNullAt(0))(r.getBoolean(0)) ->
+              KeyStats(r.getAs[Long]("_n"), r.getAs[Long]("_nd"),
+                keyCols.map(k => r.getAs[Long](s"_nul_$k")), Some(r))).toMap
+        }
+      def nOf(tag: Option[Boolean]): Long = stats.get(tag).map(_.n).getOrElse(0L)
+      def ndOf(tag: Option[Boolean]): Long = stats.get(tag).map(_.nd).getOrElse(0L)
+      Seq(false -> "updates", true -> "deletes").foreach { case (t, what) =>
+        stats.get(Some(t)).foreach { st =>
+          keyCols.zip(st.nulls).foreach { case (k, nul) =>
+            require(nul == 0,
+              s"snapshotMergeInto: $what carry NULL in key column '$k' — a " +
+                "null key matches nothing and cannot be applied")
+          }
         }
       }
-    }
-    val nUpd = nOf(Some(false)); val ndUpd = ndOf(Some(false))
-    require(ndUpd == nUpd,
-      s"snapshotMergeInto: updates hold ${nUpd - ndUpd} " +
-        "duplicate key(s) — at most one row per key (pre-aggregate " +
-        "last-writer-wins upstream)")
-    // tombstones may legitimately repeat — they dedupe to a key SET
-    val nDel = nOf(Some(true)); val ndDel = ndOf(Some(true))
-    if (nUpd == 0 && nDel == 0)
-      return snapshotVersions(spark, dir).lastOption
-        .getOrElse(sys.error(s"no committed snapshot at $dir")) // no-op
-    require(ndOf(None) == ndUpd + ndDel,
-      "snapshotMergeInto: a key appears in BOTH updates and deletes — " +
-        "ambiguous; fold the CDC stream last-writer-wins upstream " +
-        "(SnapshotSink.mergeOnce's seqCol does this)")
-    // probe predicate per side: a small change set becomes per-column IN
-    // lists — min/max ranges prune NOTHING for scattered CDC keys (two
-    // keys at the corpus's ends cover every file), while the stats
-    // pruner drops a file from an IN iff EVERY listed value misses its
-    // range, which is exact for a single-column key. Large change sets
-    // keep the O(1)-size range predicate (a 10⁶-literal IN would bloat
-    // the plan past what it saves). BOTH sides' IN values come from one
-    // aggregate job (side-filtered collect_set), never one job per
-    // key column per side.
-    val inUpd = nUpd > 0 && nUpd <= 1024
-    val inDel = nDel > 0 && nDel <= 1024
-    val inVals: Map[String, Array[Any]] =
-      if (!inUpd && !inDel) Map.empty
-      else {
-        val setAggs = keyCols.flatMap { k =>
-          (if (inUpd)
-            Seq(collect_set(when(!col("_gdel"), col(k))).as(s"_su_$k"))
-          else Nil) ++
-          (if (inDel)
-            Seq(collect_set(when(col("_gdel"), col(k))).as(s"_sd_$k"))
-          else Nil)
-        }
-        val r = tagged.agg(setAggs.head, setAggs.tail: _*).collect()(0)
-        setAggs.indices.map(i =>
-          r.schema.fields(i).name -> r.getSeq[Any](i).toArray).toMap
+      val nUpd = nOf(Some(false)); val ndUpd = ndOf(Some(false))
+      require(ndUpd == nUpd,
+        s"snapshotMergeInto: updates hold ${nUpd - ndUpd} " +
+          "duplicate key(s) — at most one row per key (pre-aggregate " +
+          "last-writer-wins upstream)")
+      // tombstones may legitimately repeat — they dedupe to a key SET
+      val nDel = nOf(Some(true)); val ndDel = ndOf(Some(true))
+      if (nUpd == 0 && nDel == 0)
+        return snapshotVersions(spark, dir).lastOption
+          .getOrElse(sys.error(s"no committed snapshot at $dir")) // no-op
+      require(ndOf(None) == ndUpd + ndDel,
+        "snapshotMergeInto: a key appears in BOTH updates and deletes — " +
+          "ambiguous; fold the CDC stream last-writer-wins upstream " +
+          "(SnapshotSink.mergeOnce's seqCol does this)")
+      // probe predicate per side: a small change set becomes per-column IN
+      // lists — min/max ranges prune NOTHING for scattered CDC keys (two
+      // keys at the corpus's ends cover every file), while the stats
+      // pruner drops a file from an IN iff EVERY listed value misses its
+      // range, which is exact for a single-column key. Large change sets
+      // keep the O(1)-size range predicate (a 10⁶-literal IN would bloat
+      // the plan past what it saves). A side within the threshold is
+      // whole in the sample, which holds its IN values.
+      def predOf(del: Boolean): Option[Column] = {
+        val n = nOf(Some(del))
+        if (n == 0) None
+        else if (n <= InMax) Some(keyCols.zipWithIndex.map { case (k, i) =>
+          col(k).isin(sample.filter(cnt(Some(del))(_) > 0).map(_.get(i))
+            .distinct.toIndexedSeq: _*)
+        }.reduce(_ && _))
+        else stats.get(Some(del)).flatMap(_.bounds).map(r => keyCols.map { k =>
+          col(k) >= lit(r.getAs[Any](s"_mn_$k")) &&
+            col(k) <= lit(r.getAs[Any](s"_mx_$k"))
+        }.reduce(_ && _))
       }
-    def predOf(n: Long, inList: Boolean, pfx: String,
-        tag: Option[Boolean]): Option[Column] =
-      if (n == 0) None
-      else if (inList) Some(keyCols.map(k =>
-        col(k).isin(inVals(s"$pfx$k").toIndexedSeq: _*)).reduce(_ && _))
-      else rowOf(tag).map(r => keyCols.map { k =>
-        col(k) >= lit(r.getAs[Any](s"_mn_$k")) &&
-          col(k) <= lit(r.getAs[Any](s"_mx_$k"))
-      }.reduce(_ && _))
-    val updPred = predOf(nUpd, inUpd, "_su_", Some(false))
-    val delPred = predOf(nDel, inDel, "_sd_", Some(true))
-    val updKeys = updates.select(keyCols.map(col): _*)
-    val delKeys = deletes.filter(_ => nDel > 0)
-      .map(_.select(keyCols.map(col): _*).distinct())
-    // the change set is consumed by several actions (probe build side,
-    // rewrite anti-join build side, the upsert union, the change-record
-    // writes) — persist it once, O(batch) memory, instead of recomputing
-    // the caller's upstream plan per action. The probe's semi-join
-    // output is likewise cached: it is EXACTLY the matched (file, key)
-    // pairs — bounded by the change-set size — and both its consumers
-    // (the touched-file collect and the change record's dropped-key
-    // set) then share one scan instead of re-reading the touched files.
-    // All pins are released when the commit settles (retries included).
-    val updCached = updates.persist()
-    val dropKeysCached = delKeys
-      .map(dk => updKeys.unionByName(dk)).getOrElse(updKeys).persist()
-    var probedCache: Option[DataFrame] = None
-    def dropCache(): Unit = {
-      probedCache.foreach(_.unpersist())
-      probedCache = None
-    }
-    try commitFileGranular(spark, dir, "snapshotMergeInto",
-        (touched, carried) =>
-          meta :+ s"$MergeTag${touched.size}/$carried") {
-      (base, reader, tableSchema) =>
-        if (nUpd > 0) require(schemaKey(tableSchema) == schemaKey(updates.schema),
-          s"snapshotMergeInto: updates schema " +
-            s"${updates.schema.catalogString} does not match the " +
-            s"table's ${tableSchema.catalogString} at $dir — merges are " +
-            "same-schema by contract (add columns via snapshotEvolve " +
-            "first)")
-        val outCols = tableSchema.fieldNames.toSeq.map(col)
-        val dropKeys = dropKeysCached
-        // each side's predicate prunes the manifest's file list
-        // INDEPENDENTLY (a tight update range and a tight delete range
-        // each prune better than their disjunction, which the
-        // conjunct-wise pruner cannot use) — but the surviving union is
-        // probed in ONE key-column scan, not one per side: a file a
-        // side's stats pruned provably holds none of that side's keys,
-        // so the single semi-join against the combined change-key set
-        // touches exactly the union the two per-side probes would. The
-        // file path is materialized BEFORE the semi-join: a file-backed
-        // probe partner would make `_metadata` ambiguous after it.
-        dropCache() // a lost race's probe is stale — rebuild on retry
-        val touched =
-          if (updPred.isEmpty && delPred.isEmpty) Nil
-          else {
-            val rels = base.files
-            val kept = (updPred.map(statsKeptRels(spark, rels, base.meta, _))
-              .getOrElse(Nil) ++
-              delPred.map(statsKeptRels(spark, rels, base.meta, _))
-                .getOrElse(Nil)).distinct
-            if (kept.isEmpty) Nil
+      val updPred = predOf(false)
+      val delPred = predOf(true)
+      val delKeys = deletes.filter(_ => nDel > 0)
+        .map(_.select(keyCols.map(col): _*).distinct())
+      val dropKeys = delKeys.map(dk => pin(updKeys.unionByName(dk)))
+        .getOrElse(updKeys)
+      commitFileGranular(spark, dir, "snapshotMergeInto",
+          (touched, carried) =>
+            meta :+ s"$MergeTag${touched.size}/$carried") {
+        (base, reader, tableSchema) =>
+          if (nUpd > 0) require(schemaKey(tableSchema) == schemaKey(updates.schema),
+            s"snapshotMergeInto: updates schema " +
+              s"${updates.schema.catalogString} does not match the " +
+              s"table's ${tableSchema.catalogString} at $dir — merges are " +
+              "same-schema by contract (add columns via snapshotEvolve " +
+              "first)")
+          val outCols = tableSchema.fieldNames.toSeq.map(col)
+          // each side's predicate prunes the manifest's file list
+          // INDEPENDENTLY (a tight update range and a tight delete range
+          // each prune better than their disjunction, which the
+          // conjunct-wise pruner cannot use) — but the surviving union is
+          // probed in ONE key-column scan, not one per side: a file a
+          // side's stats pruned provably holds none of that side's keys,
+          // so the single semi-join against the combined change-key set
+          // touches exactly the union the two per-side probes would. The
+          // file path is materialized BEFORE the semi-join: a file-backed
+          // probe partner would make `_metadata` ambiguous after it. A lost
+          // race's probe is stale: each attempt pins its own.
+          var probed: Option[DataFrame] = None
+          val touched =
+            if (updPred.isEmpty && delPred.isEmpty) Nil
             else {
-              // row-group skipping hint only — exactness is the semi-join
-              val anyPred = (updPred.toSeq ++ delPred.toSeq).reduce(_ || _)
-              val probed = reader(kept)
-                .select(col("_metadata.file_path").as("_gfile") +:
-                  keyCols.map(col): _*)
-                .filter(anyPred)
-                .join(dropKeys, keyCols, "left_semi")
-                .persist()
-              probedCache = Some(probed)
-              probeTouchedFiles(probed)
+              val rels = base.files
+              val kept = (updPred.map(statsKeptRels(spark, rels, base.meta, _))
+                .getOrElse(Nil) ++
+                delPred.map(statsKeptRels(spark, rels, base.meta, _))
+                  .getOrElse(Nil)).distinct
+              if (kept.isEmpty) Nil
+              else {
+                // row-group skipping hint only — exactness is the semi-join
+                val anyPred = (updPred.toSeq ++ delPred.toSeq).reduce(_ || _)
+                val p = pin(reader(kept)
+                  .select(col("_metadata.file_path").as("_gfile") +:
+                    keyCols.map(col): _*)
+                  .filter(anyPred)
+                  .join(dropKeys, keyCols, "left_semi"))
+                probed = Some(p)
+                probeTouchedFiles(p)
+              }
             }
-          }
-        val rows =
-          if (touched.isEmpty && nUpd == 0) None
-          else if (touched.isEmpty) Some(updCached.select(outCols: _*))
-          else {
-            val survivors = reader(touched)
-              .join(dropKeys, keyCols, "left_anti")
-              .select(outCols: _*)
-            // bound the rewrite's file count near the touched count: the
-            // union's partitioning (touched files + the batch's own
-            // partitions) would otherwise GROW the file census on EVERY
-            // merge of a long CDC stream, inflating every later
-            // probe/scan — coalesce is shuffle-free; the small floor
-            // keeps write parallelism on small tables
-            Some((if (nUpd == 0) survivors
-              else survivors.unionByName(updCached.select(outCols: _*)))
-              .coalesce(math.max(touched.size, 8)))
-          }
-        // change record for the typed feed: delete side = the keys whose
-        // rows were ACTUALLY dropped (matched in a touched file — a
-        // tombstone for an absent key is a no-op, not a change); upsert
-        // side = every update row. An updated key thus replays as
-        // delete(old key) + insert(new row), an unmatched one as a bare
-        // insert — exactly the CDC shape downstream consumers apply.
-        val matchedKeys =
-          if (touched.isEmpty) None
-          else probedCache.map(_.select(keyCols.map(col): _*).distinct())
-        // opt-in update pre-images: the old rows the update keys
-        // replace, captured by one more semi-join scan of the touched
-        // files. Opt-IN here (unlike snapshotUpdateWhere's default-on)
-        // because the merge probe reads key columns only — the pre
-        // side is a scan the commit was NOT already doing, and merge
-        // apply latency is the CDC pipeline's tracked floor.
-        val pre =
-          if (!preImages || touched.isEmpty || nUpd == 0) None
-          else Some(reader(touched)
-            .join(updCached.select(keyCols.map(col): _*), keyCols,
-              "left_semi")
-            .select(outCols: _*))
-        val cdc =
-          if (nUpd == 0 && matchedKeys.isEmpty) None
-          else Some(CdcData(
-            if (nUpd > 0) Some(updCached.select(outCols: _*)) else None,
-            matchedKeys, keyCols, pre = pre))
-        // a concurrently-appended file whose stats admit one of the
-        // change set's keys would leave a duplicate live row after a
-        // staged retry — the key-range/IN disjunction is the exact
-        // conflict filter
-        (touched, rows, cdc,
-          (updPred.toSeq ++ delPred.toSeq).reduceOption(_ || _))
-    } finally {
-      dropCache()
-      updCached.unpersist()
-      dropKeysCached.unpersist()
-    }
+          val rows =
+            if (touched.isEmpty && nUpd == 0) None
+            else if (touched.isEmpty) Some(updCached.select(outCols: _*))
+            else {
+              val survivors = reader(touched)
+                .join(dropKeys, keyCols, "left_anti")
+                .select(outCols: _*)
+              // bound the rewrite's file count near the touched count: the
+              // union's partitioning (touched files + the batch's own
+              // partitions) would otherwise GROW the file census on EVERY
+              // merge of a long CDC stream, inflating every later
+              // probe/scan — coalesce is shuffle-free; the small floor
+              // keeps write parallelism on small tables
+              Some((if (nUpd == 0) survivors
+                else survivors.unionByName(updCached.select(outCols: _*)))
+                .coalesce(math.max(touched.size, 8)))
+            }
+          // change record for the typed feed: delete side = the keys whose
+          // rows were ACTUALLY dropped (matched in a touched file — a
+          // tombstone for an absent key is a no-op, not a change); upsert
+          // side = every update row. An updated key thus replays as
+          // delete(old key) + insert(new row), an unmatched one as a bare
+          // insert — exactly the CDC shape downstream consumers apply.
+          val matchedKeys =
+            if (touched.isEmpty) None
+            else probed.map(_.select(keyCols.map(col): _*).distinct())
+          // opt-in update pre-images: the old rows the update keys
+          // replace, captured by one more semi-join scan of the touched
+          // files. Opt-IN here (unlike snapshotUpdateWhere's default-on)
+          // because the merge probe reads key columns only — the pre
+          // side is a scan the commit was NOT already doing, and merge
+          // apply latency is the CDC pipeline's tracked floor.
+          val pre =
+            if (!preImages || touched.isEmpty || nUpd == 0) None
+            else Some(reader(touched)
+              .join(updKeys, keyCols, "left_semi")
+              .select(outCols: _*))
+          val cdc =
+            if (nUpd == 0 && matchedKeys.isEmpty) None
+            else Some(CdcData(
+              if (nUpd > 0) Some(updCached.select(outCols: _*)) else None,
+              matchedKeys, keyCols, pre = pre))
+          // a concurrently-appended file whose stats admit one of the
+          // change set's keys would leave a duplicate live row after a
+          // staged retry — the key-range/IN disjunction is the exact
+          // conflict filter
+          (touched, rows, cdc,
+            (updPred.toSeq ++ delPred.toSeq).reduceOption(_ || _))
+      }
+    } finally pins.foreach(_.unpersist())
   }
 
   /** Distinct manifest-relative paths (`data/<vdir>/<file>`) of the
@@ -3440,8 +3418,7 @@ object Layout {
           "overlay (snapshotDeleteKeys) — run snapshotCompact to " +
           "materialize it before a file-granular rewrite")
       val schemaLine = base.line(SchemaTag)
-      val recorded = base.schema
-      val tableSchema = recorded
+      val tableSchema = base.schema
         .orElse(prev.headOption.map(rel =>
           fileSchema(spark, dir, rel)))
         .getOrElse(sys.error(
@@ -3485,11 +3462,11 @@ object Layout {
       val st = staged.getOrElse {
         attempt += 1
         require(attempt <= 8, s"$op: lost the commit race 8× at $dir")
-        def readerOf(rels: Seq[String]): DataFrame = {
-          val paths = rels.map(r => new Path(dir, r).toString)
-          recorded.map(s => spark.read.schema(s)).getOrElse(spark.read)
-            .parquet(paths: _*)
-        }
+        // the schema of record, else the first file's footer: no
+        // one-task schema-inference job per probe or rewrite read
+        def readerOf(rels: Seq[String]): DataFrame =
+          spark.read.schema(tableSchema)
+            .parquet(rels.map(r => new Path(dir, r).toString): _*)
         val (touched, replacement, cdcData, conflict) =
           touch(base, readerOf, tableSchema)
         val prevSet = prev.toSet

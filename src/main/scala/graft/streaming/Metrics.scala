@@ -20,7 +20,7 @@ object Metrics {
   def observed(df: DataFrame, name: String, validPredicate: org.apache.spark.sql.Column): DataFrame =
     df.observe(name,
       count(lit(1)).as("consumed"),
-      sum(when(validPredicate, 1L).otherwise(0L)).as("kept"))
+      count(when(validPredicate, 1L)).as("kept"))
 
   /** Accumulates input-row counts per streaming query (K6 / A4). */
   final class CountListener extends StreamingQueryListener {

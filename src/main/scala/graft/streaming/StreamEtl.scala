@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ctran.{Load, Schemas, Transform}
+import graft.ctran.{Load, Schemas}
 
 /** Structured-Streaming form of the breadcrumb ETL (SURVEY §2.9, §3.1).
   *
@@ -28,14 +28,16 @@ object StreamEtl {
     * (consumed = inserted + skipped, topic_consumer.py:286-289). */
   final case class Counters(consumed: Long, inserted: Long, skipped: Long)
 
-  /** Shared pipeline body: parse → transform → validate → idempotent
-    * trip insert, with the breadcrumb SINK injected — [[run]] and
-    * [[runExactlyOnce]] differ only there, so the transform/validation
-    * graph cannot drift between the two delivery modes. The sink returns
-    * the rows it durably inserted for this batch. */
+  /** Shared pipeline body: each micro-batch runs [[Load.ingest]] (parse →
+    * transform → validate → idempotent trip insert, one read of the
+    * batch, counters from observed metrics rather than counting jobs)
+    * with the breadcrumb SINK injected — [[run]] and [[runExactlyOnce]]
+    * differ only there, so the transform/validation graph cannot drift
+    * between the two delivery modes, nor from the batch load. The sink
+    * returns whether it durably wrote the batch. */
   private def runWith(spark: SparkSession, inputDir: String,
       tripDir: String, checkpointDir: String, maxFilesPerTrigger: Int)(
-      bcSink: (DataFrame, Long) => Long): Counters = {
+      bcSink: (DataFrame, Long) => Boolean): Counters = {
     @volatile var consumed = 0L
     @volatile var inserted = 0L
     val raw = spark.readStream
@@ -46,13 +48,9 @@ object StreamEtl {
       .option("checkpointLocation", checkpointDir)      // T3: offsets + commits
       .trigger(Trigger.AvailableNow())                  // T2: drain then stop
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = batch.count()
-        val valid = Transform.enrich(batch).filter(Transform.isValid)
-        val bc = Transform.toBreadcrumbs(valid)
-          .withColumn("opd_date", to_date(col("tstamp")))
-        Load.insertTrips(spark, Transform.toTrips(valid), tripDir)
+        val (n, ins, _) = Load.ingest(spark, batch, tripDir)(bcSink(_, batchId))
         consumed += n
-        inserted += bcSink(bc, batchId)
+        inserted += ins
         ()
       }
       .start()
@@ -67,10 +65,7 @@ object StreamEtl {
       tripDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10): Counters =
     runWith(spark, inputDir, tripDir, checkpointDir, maxFilesPerTrigger) {
-      (bc, _) =>
-        val nBc = bc.count()
-        Load.insertBreadcrumbs(bc, bcDir)
-        nBc
+      (bc, _) => Load.insertBreadcrumbs(bc, bcDir); true
     }
 
   /** Exactly-once variant of [[run]]: breadcrumb appends commit through
@@ -80,15 +75,14 @@ object StreamEtl {
     * Trips were already replay-safe via the anti-join insert. The
     * breadcrumb table gains the `ingest_batch` partition column (the
     * replay audit handle). A replayed batch still counts as consumed
-    * but inserts 0, so the reconciliation invariant
+    * but inserts 0 — its counters come from the trip insert, which runs
+    * on replay too — so the reconciliation invariant
     * (consumed = inserted + skipped) keeps holding under replay. */
   def runExactlyOnce(spark: SparkSession, inputDir: String, bcDir: String,
       tripDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10): Counters =
     runWith(spark, inputDir, tripDir, checkpointDir, maxFilesPerTrigger) {
-      (bc, batchId) =>
-        val nBc = bc.count()
-        if (IdempotentSink.appendOnce(bc, batchId, bcDir)) nBc else 0L
+      (bc, batchId) => IdempotentSink.appendOnce(bc, batchId, bcDir)
     }
 
   /** Watermarked dedup variant (T6): drop replayed breadcrumbs within the

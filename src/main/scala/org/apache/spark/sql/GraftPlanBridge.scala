@@ -79,29 +79,50 @@ object GraftPlanBridge {
       plan.collect { case p => p }.forall(_.expressions.forall(exprOk))
   }
 
-  /** Schema of ONE parquet file, read from its footer ON THE DRIVER —
-    * no Spark job. `spark.read.parquet(path).schema` (and a schemaless
+  /** Schema of a parquet file (or a directory's first data file by name)
+    * read from its footer ON THE DRIVER — no Spark job.
+    * `spark.read.parquet(path).schema` (and a schemaless
     * `spark.read.parquet(...)`) run parquet schema inference as a
     * one-task Spark JOB per call (`readParquetFootersInParallel`):
     * StageProbe shows every snapshot-table open paying 1–2 such jobs at
     * 30–50 ms wall each — pure scheduling overhead for a ~1 ms local
     * footer read, and at 100 TB driver-side jobs do not parallelize
     * (round-19 metadata-plane pass; the scaling block's ≈1.0 ratios).
-    * Conversion uses Spark's OWN ParquetToSparkSchemaConverter driven by
-    * the session's SQLConf, so binaryAsString / int96 / timestampNTZ /
-    * legacy-nanos decisions are identical to what inference would have
-    * produced. */
+    * Decoded by inference's own per-footer step: Spark's row schema
+    * (`org.apache.spark.sql.parquet.row.metadata`) first, so field
+    * metadata survives, else the session-conf schema converter — the
+    * inferred schema, before a read relaxes its nullability. */
   def parquetSchemaOf(spark: SparkSession, path: String): types.StructType = {
     val cs = spark.asInstanceOf[classic.SparkSession]
     val hconf = cs.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf)
+    val fs = p.getFileSystem(hconf)
+    val file =
+      if (!fs.getFileStatus(p).isDirectory) p
+      else fs.listStatus(p).iterator
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .map(_.getPath).toSeq.sortBy(_.getName).headOption
+        .getOrElse(sys.error(s"parquetSchemaOf: no parquet data file under $p"))
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, hconf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val msg = try reader.getFooter.getFileMetaData.getSchema
-    finally reader.close()
-    new execution.datasources.parquet.ParquetToSparkSchemaConverter(
-      cs.sessionState.conf).convert(msg)
+    val footer = try reader.getFooter finally reader.close()
+    import execution.datasources.parquet._
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(cs.sessionState.conf))
   }
+
+  /** By name, what the `observe(name, …)` nodes in `df`'s CACHED plan
+    * collected — final once an action over `df` has ended. Unlike an
+    * `Observation`: no listener-bus wait, and no session-wide observation
+    * manager (that session field is not serializable, so once set it
+    * breaks later closures capturing the session). */
+  def cachedObservedMetrics(df: Dataset[_]): Map[String, Row] =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+      .map(c => execution.CollectMetricsExec.collect(
+        c.cachedRepresentation.cacheBuilder.cachedPlan))
+      .getOrElse(Map.empty)
 
   /** A parquet scan over an explicit file list, tagged `isStreaming` —
     * what a V1 streaming `Source.getBatch` must return (the engine

@@ -134,6 +134,48 @@ class StreamEtlSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/bc").count() === 2)
   }
 
+  test("runExactlyOnce: an in-stream replay counts the batch consumed, inserts 0") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = tmpDir("stream5")
+    val in = s"$dir/in"; new java.io.File(in).mkdirs()
+    writeBatch(in, "b1.json", Seq(crumb(1, 3600), crumb(1, 3605), crumb(2, 100)))
+    val ckpt = s"$dir/ckpt"
+    def drain() = StreamEtl.runExactlyOnce(spark, in, s"$dir/bc", s"$dir/trip", ckpt)
+    assert(drain() === StreamEtl.Counters(3, 3, 0))
+    // the crash window: batch 0's sinks committed, its commit-log entry
+    // did not — the restarted query replays batch 0 itself
+    Seq("0", ".0.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete())
+    // a counter that waited on a write the replay skips would hang here
+    assert(Await.result(Future(drain()), 2.minutes) === StreamEtl.Counters(3, 0, 3))
+    assert(spark.read.parquet(s"$dir/bc").count() === 3)
+    assert(spark.read.parquet(s"$dir/trip").count() === 2)
+  }
+
+  test("an all-invalid micro-batch: consumed n, inserted 0; an empty one counts 0") {
+    val dir = tmpDir("stream6")
+    val in = s"$dir/in"; new java.io.File(in).mkdirs()
+    def drain() = StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+    writeBatch(in, "b1.json",
+      Seq(crumb(1, 3600, vel = "999"), crumb(2, 100, vel = "999"), crumb(2, 105, vel = "-1")))
+    assert(drain() === StreamEtl.Counters(3, 0, 3))
+    writeBatch(in, "b2.json", Nil)
+    assert(drain() === StreamEtl.Counters(0, 0, 0))
+  }
+
+  test("a micro-batch whose trips all exist: breadcrumbs insert, no trip is added") {
+    val dir = tmpDir("stream7")
+    val in = s"$dir/in"; new java.io.File(in).mkdirs()
+    writeBatch(in, "b1.json", Seq(crumb(1, 3600), crumb(2, 100)))
+    StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+    writeBatch(in, "b2.json", Seq(crumb(1, 3700), crumb(2, 200), crumb(2, 205)))
+    val c = StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+    assert(c === StreamEtl.Counters(3, 3, 0))
+    assert(spark.read.parquet(s"$dir/trip").count() === 2)
+    assert(spark.read.parquet(s"$dir/bc").count() === 5)
+  }
+
   test("replay with a fresh checkpoint: trips stay unique (anti-join idempotency)") {
     val dir = tmpDir("stream3")
     val in = s"$dir/in"; new java.io.File(in).mkdirs()

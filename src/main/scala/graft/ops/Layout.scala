@@ -510,17 +510,13 @@ object Layout {
       val prev = base.files
       // table schema of record: the manifest's schema line once one
       // exists (post-evolution, file footers legitimately disagree),
-      // else a carried file's footer. A FOOTER-derived schema is not a
-      // declaration: Spark round-trips field metadata through the
-      // parquet footer, so a first commit written from another graft
-      // table's read carries that table's policy flags in its files —
-      // stripping here keeps the later evolve's inherit path from
-      // adopting them as "the table's declared policy" (the
-      // footer-fallback half of the ADVICE r12 leak; the schema-line
-      // half is [[snapshotCreate]]'s declare gate)
+      // else a carried file's footer, which declares no policy: the
+      // later evolve's inherit path must not adopt a foreign table's
+      // flags from it (the footer-fallback half of the ADVICE r12 leak,
+      // closed in [[fileSchema]]; the schema-line half is
+      // [[snapshotCreate]]'s declare gate)
       val tableSchema = base.schema.orElse(prev.headOption.map(rel =>
-        stripUndeclaredPolicy(
-          fileSchema(spark, dir, rel))))
+        fileSchema(spark, dir, rel)))
       tableSchema.foreach { ts =>
         if (evolve) {
           val byName = df.schema.fields.map(f =>
@@ -649,9 +645,9 @@ object Layout {
     * [[snapshotDeclareKeys]], [[snapshotDeclareCluster]],
     * [[snapshotDeclareCdcImages]]). */
   private def stripUndeclaredPolicy(
-      s: org.apache.spark.sql.types.StructType)
+      s: org.apache.spark.sql.types.StructType, alsoKeys: String*)
       : org.apache.spark.sql.types.StructType = {
-    val policy = Seq(CdcImagesKey, KeyColKey, ClusterPosKey)
+    val policy = Seq(CdcImagesKey, KeyColKey, ClusterPosKey) ++ alsoKeys
     if (!s.fields.exists(f => policy.exists(f.metadata.contains))) s
     else org.apache.spark.sql.types.StructType(s.fields.map { f =>
       if (!policy.exists(f.metadata.contains)) f
@@ -1146,11 +1142,14 @@ object Layout {
 
   /** Footer schema of one manifest-relative file or data directory, read
     * on the driver by [[org.apache.spark.sql.GraftPlanBridge.parquetSchemaOf]]
-    * instead of a one-task schema-inference job. */
+    * instead of a one-task schema-inference job. A footer keeps the
+    * writing frame's field metadata — for a frame read from another
+    * graft table, THAT table's policy flags and field IDs — but declares
+    * nothing, so every schema-of-record fallback gets them stripped. */
   private def fileSchema(spark: SparkSession, dir: String,
       rel: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.GraftPlanBridge.parquetSchemaOf(
-      spark, new Path(dir, rel).toString)
+    stripUndeclaredPolicy(org.apache.spark.sql.GraftPlanBridge
+      .parquetSchemaOf(spark, new Path(dir, rel).toString), FieldIdKey)
 
   /** [[mappedRead]] with the stock batch parquet reader. */
   private def mappedParquetRead(spark: SparkSession, dir: String,
@@ -3135,18 +3134,20 @@ object Layout {
     deletes.foreach(requireKeys(_, "deletes"))
     // the change set feeds the key analysis and several actions (probe
     // and rewrite build sides, the upsert union, the change records) —
-    // persist it FIRST, O(batch) memory, so the caller's upstream plan
-    // runs once. The probe's semi-join output is likewise cached: EXACTLY
+    // persist it FIRST (the deletes as their key columns), O(batch)
+    // memory, so the caller's upstream plans run once. The probe's
+    // semi-join output is likewise cached: EXACTLY
     // the matched (file, key) pairs, shared by the touched-file collect
     // and the change record's dropped-key set. Every pin is released when
     // the merge settles: refusals, no-ops and retries included.
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { pins += df; df.persist() }
     val updCached = pin(updates)
+    val delCached = deletes.map(d => pin(d.select(keyCols.map(col): _*)))
+    var probed: Option[DataFrame] = None
     try {
       val updKeys = updCached.select(keyCols.map(col): _*)
-      val sides = (false -> updKeys) +:
-        deletes.map(d => true -> d.select(keyCols.map(col): _*)).toSeq
+      val sides = (false -> updKeys) +: delCached.map(true -> _).toSeq
       def tagged(limit: Option[Int]): DataFrame = sides.map { case (d, df) =>
         val t = df.withColumn("_gdel", lit(d))
         limit.fold(t)(t.limit)
@@ -3233,8 +3234,7 @@ object Layout {
       }
       val updPred = predOf(false)
       val delPred = predOf(true)
-      val delKeys = deletes.filter(_ => nDel > 0)
-        .map(_.select(keyCols.map(col): _*).distinct())
+      val delKeys = delCached.filter(_ => nDel > 0).map(_.distinct())
       val dropKeys = delKeys.map(dk => pin(updKeys.unionByName(dk)))
         .getOrElse(updKeys)
       commitFileGranular(spark, dir, "snapshotMergeInto",
@@ -3258,8 +3258,8 @@ object Layout {
           // touches exactly the union the two per-side probes would. The
           // file path is materialized BEFORE the semi-join: a file-backed
           // probe partner would make `_metadata` ambiguous after it. A lost
-          // race's probe is stale: each attempt pins its own.
-          var probed: Option[DataFrame] = None
+          // race's probe is stale: an attempt releases the previous one's.
+          probed.foreach(_.unpersist()); probed = None
           val touched =
             if (updPred.isEmpty && delPred.isEmpty) Nil
             else {
@@ -3272,11 +3272,11 @@ object Layout {
               else {
                 // row-group skipping hint only — exactness is the semi-join
                 val anyPred = (updPred.toSeq ++ delPred.toSeq).reduce(_ || _)
-                val p = pin(reader(kept)
+                val p = reader(kept)
                   .select(col("_metadata.file_path").as("_gfile") +:
                     keyCols.map(col): _*)
                   .filter(anyPred)
-                  .join(dropKeys, keyCols, "left_semi"))
+                  .join(dropKeys, keyCols, "left_semi").persist()
                 probed = Some(p)
                 probeTouchedFiles(p)
               }
@@ -3330,7 +3330,7 @@ object Layout {
           (touched, rows, cdc,
             (updPred.toSeq ++ delPred.toSeq).reduceOption(_ || _))
       }
-    } finally pins.foreach(_.unpersist())
+    } finally (pins ++ probed).foreach(_.unpersist())
   }
 
   /** Distinct manifest-relative paths (`data/<vdir>/<file>`) of the
@@ -4813,8 +4813,7 @@ object Layout {
     val mainSchemaLine = mainM.schema
     val mainSchemaReal = mainSchemaLine
       .orElse(mainM.files.headOption
-        .map(rel => stripUndeclaredPolicy(
-          fileSchema(spark, dir, rel))))
+        .map(rel => fileSchema(spark, dir, rel)))
     def lower(n: String): String = n.toLowerCase(java.util.Locale.ROOT)
     // MAIN-SIDE RENAMES RIDE THE REBASE (round 16, judge ask #3): a
     // rename is metadata-only on main (a `colmap=` line mapping the

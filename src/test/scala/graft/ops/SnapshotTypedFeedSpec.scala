@@ -335,6 +335,44 @@ class SnapshotTypedFeedSpec extends SparkSpec {
       "declared flags must survive an evolve with a metadata-less batch")
   }
 
+  test("rename / drop / retype of a table with no schema line adopt no " +
+      "flag or field ID from its file footers") {
+    // a plain append records no schema line; its footers keep the
+    // batch's field metadata — here a foreign table's key and
+    // clustering flags, and one field ID on both columns (the shape of
+    // a join of two renamed tables). The metadata-only evolutions fall
+    // back to a footer for the schema of record they then write.
+    def md(k: String, v: Long) = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong(Layout.FieldIdKey, 1L).putLong(k, v).build()
+    val kmd = new org.apache.spark.sql.types.MetadataBuilder()
+      .withMetadata(md(Layout.ClusterPosKey, 0L))
+      .putBoolean(Layout.KeyColKey, true).build()
+    val flagged = (1 to 5).map(i => (i, s"a$i", i.toLong)).toDF("k", "s", "n")
+      .select(col("k").as("k", kmd), col("s").as("s", md(Layout.ClusterPosKey, 1L)),
+        col("n"))
+    val ops: Seq[(String, String => Unit, Seq[String])] = Seq(
+      ("rename", d => Layout.snapshotRename(spark, d, Map("s" -> "t")),
+        Seq("k", "t", "n")),
+      ("drop", d => Layout.snapshotDropColumns(spark, d, Seq("n")),
+        Seq("k", "s")),
+      ("retype", d => Layout.snapshotRetype(spark, d,
+        Map("k" -> org.apache.spark.sql.types.LongType)), Seq("k", "s", "n")))
+    ops.foreach { case (what, op, cols) =>
+      val dir = s"${tmpDir("typedfeed_footer")}/$what"
+      Layout.snapshotAppend(flagged, dir)
+      op(dir)
+      assert(Layout.snapshotKeyCols(spark, dir).isEmpty,
+        s"$what must not adopt a footer's graft.key")
+      assert(Layout.snapshotClusterCols(spark, dir).isEmpty,
+        s"$what must not adopt a footer's clustering")
+      val back = Layout.snapshotRead(spark, dir)
+      assert(back.columns.toSeq === cols)
+      assert(back.select(col("k").cast("int"), col(cols(1)))
+        .as[(Int, String)].collect().sorted.toSeq ===
+        (1 to 5).map(i => (i, s"a$i")), s"$what read-back")
+    }
+  }
+
   test("updateImages pairs a publish's same-key delete+insert on " +
       "declared keys; unpaired rows keep their plain types") {
     val dir = s"${tmpDir("typedfeed_pubimg")}/t"

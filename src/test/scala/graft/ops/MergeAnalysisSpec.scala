@@ -2,9 +2,13 @@ package graft.ops
 
 import graft.SparkSpec
 
-/** `snapshotMergeInto` past its 1024-key IN-list threshold: the change
-  * set's analysis falls back to the rollup (range predicates, counts,
-  * refusals), and a refused merge still releases the change set's cache. */
+/** `snapshotMergeInto`'s change-set analysis and merge semantics: past the
+  * 1024-key IN-list threshold the analysis falls back to the rollup (range
+  * predicates, counts, refusals) and a refused merge still releases the
+  * change set's cache. The pins below hold the row-level semantics
+  * every analysis and probe form must keep: NULL-key table rows survive,
+  * floating-point keys compare with Spark's equality, and the matched-key
+  * change record replays the merge. */
 class MergeAnalysisSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,5 +37,77 @@ class MergeAnalysisSpec extends SparkSpec {
     assert(got === ((1101 to 2000).map(i => i -> s"a$i") ++
       (2001 to 3500).map(i => i -> s"u$i") :+ (9999 -> "n")).toMap)
     assert(cached === before)
+  }
+
+  test("a NULL-key table row survives an upsert of its file") {
+    val dir = tmpDir("merge-nullkey") + "/t"
+    Layout.snapshotAppend(Seq((Some(1), "a1"), (None, "n"), (Some(2), "a2"))
+      .toDF("k", "s").repartition(1), dir, statsCols = Seq("k"))
+    Layout.snapshotMergeInto(spark, dir, Seq((Some(1), "U")).toDF("k", "s"),
+      Seq("k"), deletes = Some(Seq(2).toDF("k")))
+    assert(Layout.snapshotRead(spark, dir).as[(Option[Int], String)]
+      .collect().toMap === Map(Some(1) -> "U", None -> "n"))
+    // composite key: a row NULL in either key part matches no change key
+    val ck = tmpDir("merge-nullkey-ck") + "/t"
+    Layout.snapshotAppend(Seq[(Option[String], Option[Int], String)](
+      (Some("a"), Some(1), "x"), (Some("a"), None, "n1"), (None, Some(1), "n2"))
+      .toDF("g", "k", "s").repartition(1), ck)
+    Layout.snapshotMergeInto(spark, ck,
+      Seq[(Option[String], Option[Int], String)]((Some("a"), Some(1), "U"))
+        .toDF("g", "k", "s"), Seq("g", "k"))
+    assert(Layout.snapshotRead(spark, ck)
+      .as[(Option[String], Option[Int], String)].collect().toSet === Set(
+        (Some("a"), Some(1), "U"), (Some("a"), None, "n1"), (None, Some(1), "n2")))
+  }
+
+  test("a double key: 0.0 and -0.0 are one key, as Spark's equality has it") {
+    val dir = tmpDir("merge-double") + "/t"
+    Layout.snapshotAppend(Seq((0.0, "zero"), (1.5, "x")).toDF("k", "s"), dir)
+    def merge(ups: Seq[(Double, String)], dels: Seq[Double] = Nil): Long =
+      Layout.snapshotMergeInto(spark, dir, ups.toDF("k", "s"), Seq("k"),
+        deletes = Option.when(dels.nonEmpty)(dels.toDF("k")))
+    // one change set holding both zeros holds a duplicate key...
+    val dup = intercept[IllegalArgumentException](
+      merge(Seq((0.0, "p"), (-0.0, "m"))))
+    assert(dup.getMessage.contains("1 duplicate key"))
+    // ...or the same key on both sides
+    val both = intercept[IllegalArgumentException](
+      merge(Seq((0.0, "p")), Seq(-0.0)))
+    assert(both.getMessage.contains("BOTH"))
+    // -0.0 replaces the table's 0.0 row
+    merge(Seq((-0.0, "neg")))
+    val got = Layout.snapshotRead(spark, dir).as[(Double, String)].collect()
+    assert(got.map(_._2).sorted.toSeq === Seq("neg", "x"))
+    assert(got.exists(r => r._2 == "neg" &&
+      java.lang.Double.doubleToRawLongBits(r._1) ==
+        java.lang.Double.doubleToRawLongBits(-0.0)))
+    // and a -0.0 tombstone deletes the 0.0-equal row
+    merge(Nil, Seq(0.0))
+    assert(Layout.snapshotRead(spark, dir).as[(Double, String)].collect()
+      .toSeq === Seq((1.5, "x")))
+  }
+
+  test("the matched-key change record is one file and replays the merge") {
+    val dir = tmpDir("merge-cdcd") + "/t"
+    (0 until 3).foreach(f => Layout.snapshotAppend(
+      (f * 10 + 1 to f * 10 + 10).map(i => (i, s"a$i")).toDF("k", "s")
+        .repartition(1), dir, statsCols = Seq("k")))
+    // five matched keys across two files (two of them tombstones), one
+    // insert, one tombstone for an absent key
+    val v = Layout.snapshotMergeInto(spark, dir,
+      Seq((2, "U2"), (5, "U5"), (23, "U23"), (99, "N99")).toDF("k", "s")
+        .repartition(4), Seq("k"), deletes = Some(Seq(7, 28, 500).toDF("k")))
+    val cdcd = new java.io.File(s"$dir/data").listFiles()
+      .filter(_.getName.endsWith("-cdcd"))
+    assert(cdcd.length === 1)
+    assert(cdcd.head.listFiles().count(_.getName.endsWith(".parquet")) === 1)
+    val ev = Layout.snapshotChangesTyped(spark, dir, 3L)
+      .select("_commit_version", "_change_type", "k", "s")
+      .as[(Long, String, Int, Option[String])].collect().sorted.toSeq
+    assert(ev === Seq(
+      (v, "delete", 2, None), (v, "delete", 5, None), (v, "delete", 7, None),
+      (v, "delete", 23, None), (v, "delete", 28, None),
+      (v, "insert", 2, Some("U2")), (v, "insert", 5, Some("U5")),
+      (v, "insert", 23, Some("U23")), (v, "insert", 99, Some("N99"))))
   }
 }

@@ -650,7 +650,7 @@ object Dedup {
     // ROUND-19 REVERT to the window-df + posting-self-join form. Round 18
     // replaced it with a collect_list bucket form (one groupBy(h), pairs
     // streamed from a sorted-bucket explode) on stage-count evidence, but
-    // the judge-mandated interleaved same-JVM A/B (graft.FormProbe, 8
+    // the interleaved same-JVM A/B of round 19 (VERDICT.md; 8
     // alternating reps at sf0.1) measured the bucket form 1.52× SLOWER on
     // q46 and 1.33× on q98 — the per-pair `slice` array copies and the
     // double bucket aggregation cost more than the exchange they saved:
@@ -662,8 +662,8 @@ object Dedup {
     // [[shingleHashIndex]] this round (explode_outer). The join streams
     // pairs with zero per-pair allocation; the window df cap filters rows
     // BEFORE anything aggregates, so per-task memory stays O(maxDF).
-    // Results bit-identical in both directions (the r18→r19 FormProbe
-    // equality check and the standing oracle pin it).
+    // Results bit-identical in both directions (the round-19 A/B's
+    // equality check in VERDICT.md and the standing oracle pin it).
     val filtered = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .filter(col("df") <= maxShingleDocFreq).drop("df")

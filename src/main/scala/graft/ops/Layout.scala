@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.ops.SnapshotManifest._
 
@@ -3080,11 +3082,14 @@ object Layout {
     *     a key-clustered table (the shape key-ranged ingest or
     *     [[zorderWrite]] produces) the candidate set is the handful of
     *     files overlapping the update's keys, not the corpus;
-    *  2. a key-column-only probe of the candidates (semi-join against
-    *     the updates keys, grouped by `_metadata.file_path`) finds the
-    *     files with a REAL match;
-    *  3. touched files are rewritten as (their rows anti-join the
-    *     updates keys) ∪ updates; every untouched file is carried
+    *  2. a key-column-only probe of the candidates finds the files
+    *     with a REAL match, and the matched keys: for a small change
+    *     set with driver-comparable keys, ONE collect of the
+    *     `(_metadata.file_path, key…)` rows an exact key predicate
+    *     admits; otherwise a semi-join against the change keys;
+    *  3. touched files are rewritten as (their rows matching no change
+    *     key — the null-safe negation of the exact predicate, else an
+    *     anti-join) ∪ updates; every untouched file is carried
     *     forward byte-identical, stats lines included, and new files
     *     get fresh stats over the same tracked column set.
     *
@@ -3114,9 +3119,17 @@ object Layout {
     *
     * Cost: `updates` is persisted once, before anything reads it, so its
     * upstream plan runs once; a change set within the IN-list threshold
-    * is analysed (counts, refusals, IN lists) in ONE bounded job; the
-    * probe and rewrite read under the footer-derived table schema, with
-    * no schema-inference job. */
+    * is analysed (counts, refusals, IN lists) in ONE bounded job. When
+    * its keys are also integral, boolean, decimal, date/time or
+    * binary-collated strings, that job takes at most InMax + 1 key rows
+    * per partition to the driver, the probe is one collect with no
+    * broadcast, join, shuffle or cache, and the matched-key change record
+    * is written from the collected keys as one file: a streaming upsert
+    * runs 5 jobs (analysis, probe, rewrite and two change records).
+    * Floating-point and collated keys, and change sets past the
+    * threshold, keep the executor-side grouping and the semi-join probe.
+    * The probe and rewrite read under the footer-derived table schema,
+    * with no schema-inference job. */
   def snapshotMergeInto(spark: SparkSession, dir: String,
       updates: DataFrame, keyCols: Seq[String],
       meta: Seq[String] = Nil,
@@ -3133,13 +3146,13 @@ object Layout {
     requireKeys(updates, "updates")
     deletes.foreach(requireKeys(_, "deletes"))
     // the change set feeds the key analysis and several actions (probe
-    // and rewrite build sides, the upsert union, the change records) —
-    // persist it FIRST (the deletes as their key columns), O(batch)
-    // memory, so the caller's upstream plans run once. The probe's
-    // semi-join output is likewise cached: EXACTLY
-    // the matched (file, key) pairs, shared by the touched-file collect
-    // and the change record's dropped-key set. Every pin is released when
-    // the merge settles: refusals, no-ops and retries included.
+    // and rewrite, the upsert union, the change records) — persist it
+    // FIRST (the deletes as their key columns), O(batch) memory, so the
+    // caller's upstream plans run once. A probe that joins against the
+    // change keys is likewise cached: EXACTLY the matched (file, key)
+    // pairs, shared by the touched-file collect and the change record's
+    // dropped-key set. Every pin is released when the merge settles:
+    // refusals, no-ops and retries included.
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { pins += df; df.persist() }
     val updCached = pin(updates)
@@ -3152,29 +3165,63 @@ object Layout {
         val t = df.withColumn("_gdel", lit(d))
         limit.fold(t)(t.limit)
       }.reduce(_ unionByName _)
-      // ONE bounded job analyzes a change set within the IN-list threshold
-      // (every streaming upsert — mergeOnce pays this per micro-batch): the
-      // first InMax + 1 key rows of each side, grouped per key tuple with
-      // each side's multiplicity, give every count, duplicate, null key,
+      // a change set within the IN-list threshold (every streaming upsert
+      // — mergeOnce pays this per micro-batch) is analysed from its first
+      // InMax + 1 key rows per side, grouped per key tuple with each
+      // side's multiplicity: that gives every count, duplicate, null key,
       // the updates∩deletes overlap and the IN lists. A side past the
       // threshold falls back to a rollup whose per-side rows carry count /
       // distinct-key count / per-key null counts / min-max bounds, and
       // whose grand-total row shows an overlap as |U ∪ D| < |U| + |D|.
       val InMax = 1024
-      val sample = tagged(Some(InMax + 1)).groupBy(keyCols.map(col): _*)
-        .agg(count(when(!col("_gdel"), 1)), count(when(col("_gdel"), 1)),
-          count(lit(1))).collect()
-      def cnt(tag: Option[Boolean])(r: org.apache.spark.sql.Row): Long =
+      // Keys whose Spark equality is the driver values' own equality —
+      // integral, boolean, decimal, date/time and binary-collated string
+      // keys, typed alike on both sides — are grouped on the DRIVER from
+      // ONE job that takes InMax + 1 rows of every partition, however many
+      // partitions the change set spans (a side whose take stays within
+      // InMax is whole). Floating point (±0.0, NaN) and non-binary
+      // collations compare otherwise, and a binary key's Array[Byte]
+      // compares by reference: those keep the executor-side grouping.
+      val keyTypes = updKeys.schema.map(_.dataType)
+      val onDriver = sides.forall(_._2.schema.map(_.dataType) == keyTypes) &&
+        keyTypes.forall {
+          case BooleanType | ByteType | ShortType | IntegerType | LongType |
+              DateType | TimestampType | TimestampNTZType | _: DecimalType =>
+            true
+          case t: StringType => UnsafeRowUtils.isBinaryStable(t)
+          case _ => false
+        }
+      val sample: Array[Row] =
+        if (onDriver) {
+          // the driver keeps at most InMax + 1 rows of each side
+          val taken = Map(false -> scala.collection.mutable.ArrayBuffer.empty[Row],
+            true -> scala.collection.mutable.ArrayBuffer.empty[Row])
+          spark.sparkContext.runJob(
+            spark.sparkContext.union(sides.map { case (d, df) => df.rdd.map(d -> _) }),
+            (it: Iterator[(Boolean, Row)]) => it.take(InMax + 1).toArray,
+            (_: Int, rs: Array[(Boolean, Row)]) => rs.foreach { case (d, r) =>
+              if (taken(d).size <= InMax) taken(d) += r
+            })
+          taken.toSeq.flatMap { case (d, rs) => rs.map(d -> _) }
+            .groupBy(_._2).map { case (k, rs) =>
+              val nDel = rs.count(_._1).toLong
+              Row.fromSeq(k.toSeq ++ Seq(rs.size - nDel, nDel, rs.size.toLong))
+            }.toArray
+        } else tagged(Some(InMax + 1)).groupBy(keyCols.map(col): _*)
+          .agg(count(when(!col("_gdel"), 1)), count(when(col("_gdel"), 1)),
+            count(lit(1))).collect()
+      def cnt(tag: Option[Boolean])(r: Row): Long =
         r.getLong(keyCols.size + tag.fold(2)(d => if (d) 1 else 0))
       final case class KeyStats(n: Long, nd: Long, nulls: Seq[Long],
-          bounds: Option[org.apache.spark.sql.Row] = None)
+          bounds: Option[Row] = None)
       def sampled(tag: Option[Boolean]): KeyStats = {
         val rs = sample.filter(cnt(tag)(_) > 0)
         KeyStats(rs.map(cnt(tag)).sum, rs.length.toLong,
           keyCols.indices.map(i => rs.filter(_.isNullAt(i)).map(cnt(tag)).sum))
       }
+      val inList = Seq(false, true).forall(d => sampled(Some(d)).n <= InMax)
       val stats: Map[Option[Boolean], KeyStats] =
-        if (Seq(false, true).forall(d => sampled(Some(d)).n <= InMax))
+        if (inList)
           Seq(Some(false), Some(true), None).map(t => t -> sampled(t)).toMap
         else {
           val aggs = Seq(count(lit(1)).as("_n"),
@@ -3234,8 +3281,24 @@ object Layout {
       }
       val updPred = predOf(false)
       val delPred = predOf(true)
-      val delKeys = delCached.filter(_ => nDel > 0).map(_.distinct())
-      val dropKeys = delKeys.map(dk => pin(updKeys.unionByName(dk)))
+      // a change set whose keys are all on the driver matches EXACTLY by
+      // predicate: the IN lists (kept for stats and row-group pruning),
+      // and for a composite key the key tuple IN the change set's tuples
+      // (per-column INs alone would match (a,2) against {(a,1),(b,2)}). A
+      // NULL key part makes it NULL, never true
+      val exactPred: Option[Column] =
+        Option.when(onDriver && inList) {
+          val anyIn = (updPred.toSeq ++ delPred.toSeq).reduce(_ || _)
+          if (keyCols.size == 1) anyIn
+          else {
+            def tuple(field: Int => Column) =
+              struct(keyCols.indices.map(i => field(i).as(s"_$i")): _*)
+            anyIn && tuple(i => col(keyCols(i))).isin(sample.toIndexedSeq
+              .map(r => tuple(i => lit(r.get(i)).cast(keyTypes(i)))): _*)
+          }
+        }
+      lazy val dropKeys = delCached.filter(_ => nDel > 0)
+        .map(dk => pin(updKeys.unionByName(dk.distinct())))
         .getOrElse(updKeys)
       commitFileGranular(spark, dir, "snapshotMergeInto",
           (touched, carried) =>
@@ -3248,45 +3311,72 @@ object Layout {
               "same-schema by contract (add columns via snapshotEvolve " +
               "first)")
           val outCols = tableSchema.fieldNames.toSeq.map(col)
+          // the driver's key equality holds for the table's rows only when
+          // its key columns carry the change set's types (a delete-only
+          // merge may name its keys in another type)
+          val exact = exactPred.filter(_ => keyCols.map(k =>
+            tableSchema.find(_.name.equalsIgnoreCase(k)).map(_.dataType)) ==
+            keyTypes.map(Some(_)))
           // each side's predicate prunes the manifest's file list
           // INDEPENDENTLY (a tight update range and a tight delete range
           // each prune better than their disjunction, which the
           // conjunct-wise pruner cannot use) — but the surviving union is
           // probed in ONE key-column scan, not one per side: a file a
           // side's stats pruned provably holds none of that side's keys,
-          // so the single semi-join against the combined change-key set
-          // touches exactly the union the two per-side probes would. The
-          // file path is materialized BEFORE the semi-join: a file-backed
-          // probe partner would make `_metadata` ambiguous after it. A lost
-          // race's probe is stale: an attempt releases the previous one's.
+          // so one probe against the combined change keys touches exactly
+          // the union the two per-side probes would. An exact probe is
+          // ONE collect of the matching (file, key) rows — the touched
+          // files and the matched keys, no join; otherwise a semi-join
+          // against the change keys finds them. The file path is
+          // materialized BEFORE any join: a file-backed probe partner
+          // would make `_metadata` ambiguous after it. A lost race's probe
+          // is stale: an attempt releases the previous one's.
           probed.foreach(_.unpersist()); probed = None
-          val touched =
-            if (updPred.isEmpty && delPred.isEmpty) Nil
+          val (touched, matchedKeys) =
+            if (updPred.isEmpty && delPred.isEmpty) (Nil, None)
             else {
               val rels = base.files
               val kept = (updPred.map(statsKeptRels(spark, rels, base.meta, _))
                 .getOrElse(Nil) ++
                 delPred.map(statsKeptRels(spark, rels, base.meta, _))
                   .getOrElse(Nil)).distinct
-              if (kept.isEmpty) Nil
+              if (kept.isEmpty) (Nil, None)
               else {
-                // row-group skipping hint only — exactness is the semi-join
+                // row-group skipping hint; exactness is the exact predicate
+                // or the semi-join
                 val anyPred = (updPred.toSeq ++ delPred.toSeq).reduce(_ || _)
-                val p = reader(kept)
+                val scan = reader(kept)
                   .select(col("_metadata.file_path").as("_gfile") +:
                     keyCols.map(col): _*)
-                  .filter(anyPred)
-                  .join(dropKeys, keyCols, "left_semi").persist()
-                probed = Some(p)
-                probeTouchedFiles(p)
+                  .filter(exact.getOrElse(anyPred))
+                exact match {
+                  case Some(_) =>
+                    val hits = scan.collect()
+                    val keys = hits.map(r => Row.fromSeq(r.toSeq.tail)).distinct
+                    (hits.map(r => relOfFilePath(r.getString(0))).distinct.toSeq,
+                      // the dropped-key record as ONE file: a local relation
+                      // would spread it over defaultParallelism partitions
+                      Option.when(keys.nonEmpty)(spark.createDataFrame(
+                        java.util.Arrays.asList(keys: _*),
+                        StructType(scan.schema.tail)).coalesce(1)))
+                  case None =>
+                    val p = scan.join(dropKeys, keyCols, "left_semi").persist()
+                    probed = Some(p)
+                    val files = probeTouchedFiles(p)
+                    (files, Option.when(files.nonEmpty)(
+                      p.select(keyCols.map(col): _*).distinct()))
+                }
               }
             }
           val rows =
             if (touched.isEmpty && nUpd == 0) None
             else if (touched.isEmpty) Some(updCached.select(outCols: _*))
             else {
-              val survivors = reader(touched)
-                .join(dropKeys, keyCols, "left_anti")
+              // a touched file's rows that match no change key — a NULL
+              // key included, as under left_anti
+              val survivors = exact.fold(
+                reader(touched).join(dropKeys, keyCols, "left_anti"))(p =>
+                reader(touched).filter(!coalesce(p, lit(false))))
                 .select(outCols: _*)
               // bound the rewrite's file count near the touched count: the
               // union's partitioning (touched files + the batch's own
@@ -3298,15 +3388,6 @@ object Layout {
                 else survivors.unionByName(updCached.select(outCols: _*)))
                 .coalesce(math.max(touched.size, 8)))
             }
-          // change record for the typed feed: delete side = the keys whose
-          // rows were ACTUALLY dropped (matched in a touched file — a
-          // tombstone for an absent key is a no-op, not a change); upsert
-          // side = every update row. An updated key thus replays as
-          // delete(old key) + insert(new row), an unmatched one as a bare
-          // insert — exactly the CDC shape downstream consumers apply.
-          val matchedKeys =
-            if (touched.isEmpty) None
-            else probed.map(_.select(keyCols.map(col): _*).distinct())
           // opt-in update pre-images: the old rows the update keys
           // replace, captured by one more semi-join scan of the touched
           // files. Opt-IN here (unlike snapshotUpdateWhere's default-on)
@@ -3318,6 +3399,12 @@ object Layout {
             else Some(reader(touched)
               .join(updKeys, keyCols, "left_semi")
               .select(outCols: _*))
+          // change record for the typed feed: delete side = the keys whose
+          // rows were ACTUALLY dropped (matched in a touched file — a
+          // tombstone for an absent key is a no-op, not a change); upsert
+          // side = every update row. An updated key thus replays as
+          // delete(old key) + insert(new row), an unmatched one as a bare
+          // insert — exactly the CDC shape downstream consumers apply.
           val cdc =
             if (nUpd == 0 && matchedKeys.isEmpty) None
             else Some(CdcData(
@@ -3344,10 +3431,14 @@ object Layout {
   private def probeTouchedFiles(matches: DataFrame): Seq[String] =
     matches.select("_gfile")
       .distinct().collect()
-      .map { r =>
-        val p = new Path(r.getString(0))
-        s"${p.getParent.getParent.getName}/${p.getParent.getName}/${p.getName}"
-      }.toSeq
+      .map(r => relOfFilePath(r.getString(0))).toSeq
+
+  /** The manifest-relative path (`data/<vdir>/<file>`) of a scan's
+    * `_metadata.file_path`. */
+  private def relOfFilePath(path: String): String = {
+    val p = new Path(path)
+    s"${p.getParent.getParent.getName}/${p.getParent.getName}/${p.getName}"
+  }
 
   /** Optimistic FILE-GRANULAR commit (shared by [[snapshotDeleteWhere]]
     * and [[snapshotMergeInto]]): `touch(base, readerOf, tableSchema)`

@@ -1,11 +1,14 @@
 package graft.ops
 
-import graft.SparkSpec
+import org.apache.spark.sql.functions.col
+
+import graft.{SparkJobs, SparkSpec}
 
 /** `snapshotMergeInto`'s change-set analysis and merge semantics: past the
   * 1024-key IN-list threshold the analysis falls back to the rollup (range
   * predicates, counts, refusals) and a refused merge still releases the
-  * change set's cache. The pins below hold the row-level semantics
+  * change set's cache; within it, one job analyses the change set however
+  * many partitions it spans. The pins below hold the row-level semantics
   * every analysis and probe form must keep: NULL-key table rows survive,
   * floating-point keys compare with Spark's equality, and the matched-key
   * change record replays the merge. */
@@ -60,6 +63,30 @@ class MergeAnalysisSpec extends SparkSpec {
         (Some("a"), Some(1), "U"), (Some("a"), None, "n1"), (None, Some(1), "n2")))
   }
 
+  test("a change set spread over 4 partitions is analysed in one job") {
+    val dir = tmpDir("merge-4parts") + "/t"
+    Layout.snapshotAppend((0 until 50).map(i => (i.toLong, s"a$i")).toDF("k", "s"), dir)
+    // spark.range spreads over 4 partitions with no shuffle: each refusal
+    // below is decided by the analysis alone, so its jobs are the analysis
+    def ids = spark.range(0, 40, 1, 4)
+    def refusal(ups: org.apache.spark.sql.DataFrame,
+        dels: Option[org.apache.spark.sql.DataFrame]): (String, Int) = {
+      assert(ups.rdd.getNumPartitions === 4)
+      var msg = ""
+      val jobs = SparkJobs.jobsOf(spark) {
+        msg = intercept[IllegalArgumentException](Layout.snapshotMergeInto(
+          spark, dir, ups, Seq("k"), deletes = dels)).getMessage
+      }
+      assert(jobs.size === 1, s"analysis ran ${jobs.size} jobs:${SparkJobs.labels(jobs)}")
+      (msg, jobs.size)
+    }
+    def ups(k: org.apache.spark.sql.Column) =
+      ids.select(k.as("k"), col("id").cast("string").as("s"))
+    assert(refusal(ups(col("id") % 39), None)._1.contains("1 duplicate key"))
+    assert(refusal(ups(col("id")), Some(spark.range(39, 45, 1, 4).toDF("k")))
+      ._1.contains("BOTH"))
+  }
+
   test("a double key: 0.0 and -0.0 are one key, as Spark's equality has it") {
     val dir = tmpDir("merge-double") + "/t"
     Layout.snapshotAppend(Seq((0.0, "zero"), (1.5, "x")).toDF("k", "s"), dir)
@@ -110,4 +137,33 @@ class MergeAnalysisSpec extends SparkSpec {
       (v, "insert", 2, Some("U2")), (v, "insert", 5, Some("U5")),
       (v, "insert", 23, Some("U23")), (v, "insert", 99, Some("N99"))))
   }
+
+  test("date/decimal composite keys and wider-typed tombstones match exactly") {
+    val dir = tmpDir("merge-typed") + "/t"
+    val d1 = java.sql.Date.valueOf("2020-10-05")
+    val d2 = java.sql.Date.valueOf("2020-10-06")
+    def dec(s: String) = new java.math.BigDecimal(s)
+    Layout.snapshotAppend(Seq((d1, dec("1.50"), "a"), (d1, dec("2.00"), "b"),
+      (d2, dec("1.50"), "c"), (d2, dec("2.00"), "d")).toDF("d", "m", "s")
+      .repartition(1), dir, statsCols = Seq("d", "m"))
+    // (d1, 2.00) updates and (d2, 1.50) is tombstoned; per-column INs
+    // alone would also admit (d1, 1.50) and (d2, 2.00)
+    Layout.snapshotMergeInto(spark, dir,
+      Seq((d1, dec("2.00"), "U"), (d2, dec("3.00"), "N")).toDF("d", "m", "s"),
+      Seq("d", "m"), deletes = Some(Seq((d2, dec("1.50"))).toDF("d", "m")))
+    def rows(path: String) = Layout.snapshotRead(spark, path)
+      .as[(java.sql.Date, java.math.BigDecimal, String)].collect()
+      .map(r => (r._1.toString, r._2.setScale(2).toPlainString, r._3)).toSet
+    assert(rows(dir) === Set(("2020-10-05", "1.50", "a"),
+      ("2020-10-05", "2.00", "U"), ("2020-10-06", "2.00", "d"),
+      ("2020-10-06", "3.00", "N")))
+    // tombstones typed wider than the table's int key still delete
+    val ik = tmpDir("merge-wide") + "/t"
+    Layout.snapshotAppend((1 to 5).map(i => (i, s"a$i")).toDF("k", "s"), ik)
+    Layout.snapshotMergeInto(spark, ik, spark.emptyDataset[(Int, String)]
+      .toDF("k", "s"), Seq("k"), deletes = Some(Seq(2L, 4L).toDF("k")))
+    assert(Layout.snapshotRead(spark, ik).as[(Int, String)].collect().toMap ===
+      Map(1 -> "a1", 3 -> "a3", 5 -> "a5"))
+  }
 }
+

@@ -7,8 +7,10 @@ import graft.SparkJobs.Job
   * `StreamEtl.run` micro-batch and a `SnapshotSink.mergeOnce` upsert.
   * Their fixed cost is mostly Spark jobs, each a scheduling round trip,
   * so the bounds are the counts measured once the counters came from
-  * observed metrics and the change set was analysed in one job (9 and 15
-  * jobs before); a change that adds a job fails here first. Parquet
+  * observed metrics (9 jobs before) and a small change set's keys stayed
+  * on the driver: one analysis job, one probe collect and the three
+  * writes (15, then 10 jobs before); a change that adds a job fails here
+  * first. Composite keys and tombstones take the same path. Parquet
   * schema-inference jobs (`parquet at …`, a one-task footer read) must
   * not come back at all. */
 class JobCountSpec extends SparkSpec {
@@ -40,12 +42,34 @@ class JobCountSpec extends SparkSpec {
     assertBound("one micro-batch", jobs, 5)
   }
 
-  test("one SnapshotSink.mergeOnce upsert: at most 10 jobs, no schema inference") {
+  test("one SnapshotSink.mergeOnce upsert: at most 5 jobs, no schema inference") {
     val dir = tmpDir("jobs-merge") + "/t"
     val rows = (1 to 40).map(i => (i, s"r$i", i % 3))
     assert(SnapshotSink.mergeOnce(rows.toDF("k", "v", "d"), 0L, dir, Seq("k")))
     val ups = Seq((5, "x", 1), (41, "y", 2)).toDF("k", "v", "d")
     val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(ups, 1L, dir, Seq("k"))))
-    assertBound("one upsert", jobs, 10)
+    assertBound("one upsert", jobs, 5)
+  }
+
+  test("one composite-key mergeOnce upsert: at most 5 jobs, no schema inference") {
+    val dir = tmpDir("jobs-merge-ck") + "/t"
+    val rows = (1 to 40).map(i => (s"g${i % 4}", i, s"r$i"))
+    assert(SnapshotSink.mergeOnce(rows.toDF("g", "k", "v"), 0L, dir, Seq("g", "k")))
+    val ups = Seq(("g1", 5, "x"), ("g0", 5, "y"), ("g3", 41, "z")).toDF("g", "k", "v")
+    val jobs = SparkJobs.jobsOf(spark)(
+      assert(SnapshotSink.mergeOnce(ups, 1L, dir, Seq("g", "k"))))
+    assertBound("one composite-key upsert", jobs, 5)
+  }
+
+  test("one mergeOnce upsert with tombstones: at most 5 jobs, no schema inference") {
+    val dir = tmpDir("jobs-merge-del") + "/t"
+    val rows = (1 to 40).map(i => (i, s"r$i", false))
+    assert(SnapshotSink.mergeOnce(rows.toDF("k", "v", "del"), 0L, dir, Seq("k"),
+      deleteCol = Some("del")))
+    val ups = Seq((5, "x", false), (7, null, true), (41, "y", false))
+      .toDF("k", "v", "del")
+    val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(ups, 1L, dir,
+      Seq("k"), deleteCol = Some("del"))))
+    assertBound("one upsert with tombstones", jobs, 5)
   }
 }

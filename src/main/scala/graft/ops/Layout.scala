@@ -3178,10 +3178,11 @@ object Layout {
       // integral, boolean, decimal, date/time and binary-collated string
       // keys, typed alike on both sides — are grouped on the DRIVER from
       // ONE job that takes InMax + 1 rows of every partition, however many
-      // partitions the change set spans (a side whose take stays within
-      // InMax is whole). Floating point (±0.0, NaN) and non-binary
-      // collations compare otherwise, and a binary key's Array[Byte]
-      // compares by reference: those keep the executor-side grouping.
+      // partitions the change set spans (a side with at most InMax rows
+      // taken had no partition cut short). Floating point (±0.0, NaN)
+      // and non-binary collations compare otherwise, and a binary key's
+      // Array[Byte] compares by reference: those keep the executor-side
+      // grouping.
       val keyTypes = updKeys.schema.map(_.dataType)
       val onDriver = sides.forall(_._2.schema.map(_.dataType) == keyTypes) &&
         keyTypes.forall {

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
+
 import graft.{SparkJobs, SparkSpec}
 import graft.SparkJobs.Job
 
@@ -42,34 +44,34 @@ class JobCountSpec extends SparkSpec {
     assertBound("one micro-batch", jobs, 5)
   }
 
-  test("one SnapshotSink.mergeOnce upsert: at most 5 jobs, no schema inference") {
+  /** The jobs of one `mergeOnce` upsert of `ups` into a table bootstrapped
+    * from `rows`. */
+  private def upsertJobs(rows: DataFrame, ups: DataFrame, keyCols: Seq[String],
+      deleteCol: Option[String] = None): Seq[Job] = {
     val dir = tmpDir("jobs-merge") + "/t"
-    val rows = (1 to 40).map(i => (i, s"r$i", i % 3))
-    assert(SnapshotSink.mergeOnce(rows.toDF("k", "v", "d"), 0L, dir, Seq("k")))
-    val ups = Seq((5, "x", 1), (41, "y", 2)).toDF("k", "v", "d")
-    val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(ups, 1L, dir, Seq("k"))))
+    assert(SnapshotSink.mergeOnce(rows, 0L, dir, keyCols, deleteCol = deleteCol))
+    SparkJobs.jobsOf(spark)(
+      assert(SnapshotSink.mergeOnce(ups, 1L, dir, keyCols, deleteCol = deleteCol)))
+  }
+
+  test("one SnapshotSink.mergeOnce upsert: at most 5 jobs, no schema inference") {
+    val jobs = upsertJobs((1 to 40).map(i => (i, s"r$i", i % 3)).toDF("k", "v", "d"),
+      Seq((5, "x", 1), (41, "y", 2)).toDF("k", "v", "d"), Seq("k"))
     assertBound("one upsert", jobs, 5)
   }
 
   test("one composite-key mergeOnce upsert: at most 5 jobs, no schema inference") {
-    val dir = tmpDir("jobs-merge-ck") + "/t"
-    val rows = (1 to 40).map(i => (s"g${i % 4}", i, s"r$i"))
-    assert(SnapshotSink.mergeOnce(rows.toDF("g", "k", "v"), 0L, dir, Seq("g", "k")))
-    val ups = Seq(("g1", 5, "x"), ("g0", 5, "y"), ("g3", 41, "z")).toDF("g", "k", "v")
-    val jobs = SparkJobs.jobsOf(spark)(
-      assert(SnapshotSink.mergeOnce(ups, 1L, dir, Seq("g", "k"))))
+    val jobs = upsertJobs(
+      (1 to 40).map(i => (s"g${i % 4}", i, s"r$i")).toDF("g", "k", "v"),
+      Seq(("g1", 5, "x"), ("g0", 5, "y"), ("g3", 41, "z")).toDF("g", "k", "v"),
+      Seq("g", "k"))
     assertBound("one composite-key upsert", jobs, 5)
   }
 
   test("one mergeOnce upsert with tombstones: at most 5 jobs, no schema inference") {
-    val dir = tmpDir("jobs-merge-del") + "/t"
-    val rows = (1 to 40).map(i => (i, s"r$i", false))
-    assert(SnapshotSink.mergeOnce(rows.toDF("k", "v", "del"), 0L, dir, Seq("k"),
-      deleteCol = Some("del")))
-    val ups = Seq((5, "x", false), (7, null, true), (41, "y", false))
-      .toDF("k", "v", "del")
-    val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(ups, 1L, dir,
-      Seq("k"), deleteCol = Some("del"))))
+    val jobs = upsertJobs((1 to 40).map(i => (i, s"r$i", false)).toDF("k", "v", "del"),
+      Seq((5, "x", false), (7, null, true), (41, "y", false)).toDF("k", "v", "del"),
+      Seq("k"), deleteCol = Some("del"))
     assertBound("one upsert with tombstones", jobs, 5)
   }
 }

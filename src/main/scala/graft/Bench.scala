@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract → BENCH_r{N}.json).
   *
@@ -36,16 +34,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // legacy ns-int64 events.ts generations decode as long (Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.envCores(32), "graft-bench")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -239,20 +228,20 @@ object Bench {
       // (judge r11: at max-of-2 a committed fwd reading of 5,585 —
       // half the healthy band — sailed past the old 5,500 floor, so a
       // genuine 2× regression could pass silently)
+      val fwd = graft.streaming.StreamAsOfBench.forward
       val fReps = (1 to 3)
-        .map(_ => graft.streaming.StreamAsOfBench.probeForward(spark))
+        .map(_ => graft.streaming.StreamAsOfBench.probe(spark, op = fwd))
       val f = requeueRate("asof_fwd_rows_per_sec", FwdFloor,
         fReps.maxBy(_.rowsPerSec),
         (x: graft.streaming.StreamAsOfBench.Result) => x.rowsPerSec,
-        3)(() => graft.streaming.StreamAsOfBench.probeForward(spark))
+        3)(() => graft.streaming.StreamAsOfBench.probe(spark, op = fwd))
+      val near = graft.streaming.StreamAsOfBench.nearest
       val nReps = (1 to 3)
-        .map(_ => graft.streaming.StreamAsOfBench
-          .probeForward(spark, nearest = true))
+        .map(_ => graft.streaming.StreamAsOfBench.probe(spark, op = near))
       val n = requeueRate("asof_near_rows_per_sec", NearFloor,
         nReps.maxBy(_.rowsPerSec),
         (x: graft.streaming.StreamAsOfBench.Result) => x.rowsPerSec,
-        3)(() => graft.streaming.StreamAsOfBench
-          .probeForward(spark, nearest = true))
+        3)(() => graft.streaming.StreamAsOfBench.probe(spark, op = near))
       // snapshot change-feed pipeline: SnapshotSink commits drained by
       // the graft-snapshot-changes source (bootstrap + tail); max of 2
       val sfReps = (1 to 2)

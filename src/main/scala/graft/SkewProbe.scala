@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew evidence probe — measures the claim SCALE.md makes about hot
@@ -38,15 +38,9 @@ object SkewProbe {
     val sfDir = if (args.length > 0) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-skew-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder(32, "graft-skew-probe")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      // legacy ns-int64 events.ts generations decode as long (Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // thresholds sized for this corpus — the 256 MB production default
       // is tuned for hundred-GB shuffles and would never fire at sf0.1
       .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
@@ -59,8 +53,6 @@ object SkewProbe {
       // that at probe scale
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -15,8 +15,9 @@ object Tables {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     // explicit schema from ONE footer read on the driver: a schemaless
     // read runs parquet schema inference as a one-task Spark job —
-    // StageProbe r19 showed every headline query paying ~25-45 ms of
-    // scheduling for it ("parquet at Tables.scala") on every rep. The
+    // round 19's stage attribution (OPTIMIZATION_r19.md) showed every
+    // headline query paying ~25-45 ms of scheduling for it ("parquet at
+    // Tables.scala") on every rep. The
     // footer goes through Spark's own ParquetToSparkSchemaConverter
     // under the session conf, which is exactly what inference runs on
     // the file it picks (mergeSchema is off; these tables are

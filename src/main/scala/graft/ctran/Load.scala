@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * left-anti join against existing keys (J3) — the Spark-native
   * insert-if-absent. The stop-event path is the reference's keyed UPDATE
   * (J2) as a MERGE-shaped join + full dimension rewrite (fine at Trip
-  * scale; a transactional table format would make it a row-level MERGE).
+  * scale). Its O(batch) form is the snapshot table's file-granular MERGE:
+  * [[graft.streaming.SnapshotSink.mergeOnce]] →
+  * [[graft.ops.Layout.snapshotMergeInto]] rewrites only the files holding
+  * updated keys.
   */
 object Load {
 
@@ -93,20 +96,6 @@ object Load {
     val u = firstSeenPerTrip(updates, orderCol)
     val merged = applyTripUpdates(readTable(spark, tripDir), u)
     graft.ops.Layout.atomicOverwrite(merged, tripDir)
-  }
-
-  /** The same keyed UPDATE against a key-bucketed dimension
-    * ([[graft.ops.Layout.writeKeyBucketed]] on `trip_id`): only buckets
-    * containing updated trips are read and rewritten. This removes the
-    * full-dimension-rewrite cliff — a stop-event batch touches a bounded
-    * set of trips, so the merge cost is O(batch), not O(dimension), no
-    * matter how large Trip grows. */
-  def mergeStopEventsBucketed(spark: SparkSession, updates: DataFrame,
-      tripDir: String, orderCol: Option[String] = None,
-      numBuckets: Int = 64): Unit = {
-    val u = firstSeenPerTrip(updates, orderCol)
-    graft.ops.Layout.partialOverwrite(spark, tripDir, "trip_id", numBuckets,
-      u.select("trip_id"))(existing => applyTripUpdates(existing, u))
   }
 
   /** First-seen-per-trip dedup (A3): arrival order wins when `orderCol`

@@ -29,12 +29,10 @@ object TripBoxAggregator {
       minLat: Double, maxLat: Double, minLon: Double, maxLon: Double,
       n: Long, avgSpeed: Option[Double])
 
-  val empty: Box = Box(
-    Double.PositiveInfinity, Double.NegativeInfinity,
-    Double.PositiveInfinity, Double.NegativeInfinity, 0L, 0.0, 0L)
-
   object TripBoxAgg extends Aggregator[GpsPoint, Box, TripBox] {
-    override def zero: Box = empty
+    override def zero: Box = Box(
+      Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.PositiveInfinity, Double.NegativeInfinity, 0L, 0.0, 0L)
 
     override def reduce(b: Box, p: GpsPoint): Box = Box(
       math.min(b.minLat, p.latitude.getOrElse(Double.PositiveInfinity)),

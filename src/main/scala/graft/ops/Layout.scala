@@ -82,99 +82,6 @@ object Layout {
     ()
   }
 
-  // -------------------------------------------------- partial rewrite
-
-  /** Stable key-hash bucket: the same key always lands in the same bucket
-    * directory, across writes and batches. (Named `kbucket`, not `_kb` —
-    * a leading underscore would make the partition dirs invisible to
-    * Spark's hidden-path filter.) */
-  private def bucketCol(key: String, numBuckets: Int) =
-    pmod(xxhash64(col(key)), lit(numBuckets.toLong)).cast("int")
-
-  /** Write a table hash-partitioned by key bucket — the layout
-    * [[partialOverwrite]] merges into. One directory per bucket; a merge
-    * batch touching K distinct keys rewrites at most K buckets, never the
-    * whole table. */
-  def writeKeyBucketed(df: DataFrame, dir: String, key: String,
-      numBuckets: Int): Unit =
-    df.withColumn("kbucket", bucketCol(key, numBuckets))
-      .write.mode(SaveMode.Overwrite).partitionBy("kbucket").parquet(dir)
-
-  /** Read a key-bucketed table without the layout column. */
-  def readKeyBucketed(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).drop("kbucket")
-
-  /** Partial-rewrite MERGE for a key-bucketed table: rewrite ONLY the
-    * buckets containing updated keys, leaving every other bucket's files
-    * physically untouched. This is the answer to the full-dimension-rewrite
-    * cliff: a batch updating 0.1% of keys rewrites ~0.1% of the table
-    * (bucket granularity), not 100% of it — at a fact-sized dimension the
-    * difference between seconds and hours.
-    *
-    *  - `updateKeys`: a frame holding `key` for every updated row; its
-    *    distinct bucket ids (≤ numBuckets ints) are the only driver-side
-    *    collect.
-    *  - `merge`: existing rows of the touched buckets (partition-pruned
-    *    scan) → their replacement rows. Keys must not change inside
-    *    `merge` (rows would silently switch buckets).
-    *
-    * Commit protocol mirrors [[atomicOverwrite]], per bucket: stage the
-    * merged buckets under `<dir>.__staged`, then swap each touched bucket
-    * directory by metadata-only renames (live → `<dir>.__old_b<i>`,
-    * staged → live). A crash before the swap loop loses nothing. The
-    * window between a bucket's two renames would leave that bucket
-    * silently ABSENT (partition discovery just returns fewer rows — no
-    * loud failure like a missing table root), so each swap is bracketed
-    * by a hidden `_graft_commit_b<i>` marker in the table root: a marker
-    * present at read/startup time means a swap was in flight, and
-    * [[recoverPartialOverwrite]] completes it forward (staged half
-    * exists) or rolls it back (only the old half left) and clears the
-    * marker. */
-  def partialOverwrite(spark: SparkSession, dir: String, key: String,
-      numBuckets: Int, updateKeys: DataFrame)(
-      merge: DataFrame => DataFrame): Unit = {
-    // A crashed prior merge leaves a commit marker with the live bucket
-    // renamed away and its only copies in the .__staged / .__old_b<b>
-    // halves — which the writes below would overwrite and delete. Repair
-    // FIRST (idempotent, metadata-only), so this merge reads a complete
-    // table and never destroys the halves recovery needs.
-    recoverPartialOverwrite(spark, dir)
-    val touched = updateKeys
-      .select(bucketCol(key, numBuckets).as("kbucket")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (touched.isEmpty) return
-    val existing = spark.read.parquet(dir)
-      .filter(col("kbucket").isin(touched.map(Integer.valueOf).toIndexedSeq: _*))
-      .drop("kbucket")
-    val merged = merge(existing)
-    val stagedRoot = hiddenSibling(dir, ".__staged").toString
-    merged.withColumn("kbucket", bucketCol(key, numBuckets))
-      .write.mode(SaveMode.Overwrite).partitionBy("kbucket").parquet(stagedRoot)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach { b =>
-      val live = new Path(dir, s"kbucket=$b")
-      val staged = new Path(stagedRoot, s"kbucket=$b")
-      val old = hiddenSibling(dir, s".__old_b$b")
-      if (fs.exists(old)) fs.delete(old, true)
-      // underscore prefix keeps the marker invisible to readers; its
-      // presence = this bucket's swap is in flight (see recover below)
-      val marker = new Path(dir, s"_graft_commit_b$b")
-      fs.create(marker).close()
-      if (fs.exists(live)) {
-        if (!fs.rename(live, old)) sys.error(s"rename $live -> $old failed")
-      }
-      // a touched bucket can legitimately vanish (merge dropped all its
-      // rows) or appear (first keys hashed into it)
-      if (fs.exists(staged)) {
-        if (!fs.rename(staged, live)) sys.error(s"rename $staged -> $live failed")
-      }
-      fs.delete(old, true)
-      fs.delete(marker, false)
-    }
-    fs.delete(new Path(stagedRoot), true)
-    ()
-  }
-
   /** Small-file compaction: rewrite a parquet directory into
     * ⌈size/targetBytes⌉ files. Streaming appends and per-batch commits
     * accumulate thousands of KB-sized files; at scan time each costs a
@@ -186,11 +93,7 @@ object Layout {
     * partitioned table, compact each partition directory (the unit
     * appends accumulate in) — the staging/old siblings are dot-prefixed,
     * so a concurrent reader of the PARENT table never discovers them as
-    * extra partitions. Do NOT point this at a key-bucketed root
-    * ([[writeKeyBucketed]]): reading the root drops rows into a flat
-    * layout and loses the `kbucket=` dirs [[partialOverwrite]] swaps —
-    * compact per bucket directory instead. Returns the target file
-    * count. */
+    * extra partitions. Returns the target file count. */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Int = {
     val p = new Path(dir)
@@ -199,36 +102,6 @@ object Layout {
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     atomicOverwrite(spark.read.parquet(dir).coalesce(nOut), dir)
     nOut
-  }
-
-  /** Complete or roll back [[partialOverwrite]] swaps interrupted by a
-    * crash. For every `_graft_commit_b<i>` marker left in the table root:
-    * if the live bucket is missing, restore it from the staged half
-    * (roll forward) or the old half (roll back); then drop leftovers and
-    * the marker. Idempotent; returns the number of buckets repaired.
-    * Run before reading a table that may have seen an unclean shutdown. */
-  def recoverPartialOverwrite(spark: SparkSession, dir: String): Int = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val markers = fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("_graft_commit_b"))
-    markers.foreach { m =>
-      val b = m.getName.stripPrefix("_graft_commit_b")
-      val live = new Path(dir, s"kbucket=$b")
-      val staged = new Path(hiddenSibling(dir, ".__staged"), s"kbucket=$b")
-      val old = hiddenSibling(dir, s".__old_b$b")
-      if (!fs.exists(live)) {
-        if (fs.exists(staged)) {
-          if (!fs.rename(staged, live)) sys.error(s"recover $staged -> $live failed")
-        } else if (fs.exists(old)) {
-          if (!fs.rename(old, live)) sys.error(s"recover $old -> $live failed")
-        }
-      }
-      if (fs.exists(old)) fs.delete(old, true)
-      fs.delete(m, false)
-    }
-    markers.length
   }
 
   // -------------------------------------------------- manifest snapshots
@@ -1751,10 +1624,9 @@ object Layout {
       // stable file-backed plans: the ~6 validation/commit jobs each
       // re-scan the source, and the A/B on the branch-merge bench
       // workload measured that ~12% slower than one pin write
-      // (BranchMergeProfile)
+      // (SCALE.md)
       def pinFrame(df: DataFrame, name: String): DataFrame =
-        if (org.apache.spark.sql.GraftPlanBridge
-            .stableReplayablePlan(df) || mergePinSkipForAB.get()) df
+        if (org.apache.spark.sql.GraftPlanBridge.stableReplayablePlan(df)) df
         else {
           mergePinWrites.incrementAndGet()
           df.write.mode(SaveMode.Overwrite)
@@ -1926,32 +1798,19 @@ object Layout {
     } finally fs.delete(scratch, true)
   }
 
-  /** A/B seam for [[graft.ops.BranchMergeProfile]] ONLY: forces the
-    * merge's pin fast path for frames the policy would pin, so the
-    * "stable file-backed plans re-scan instead of pinning" arm stays
-    * measurable per round (the break-even moves whenever the commit
-    * path's job count changes — e.g. the round-16 one-commit merge
-    * dropped a manifest round-trip). Only sound when every frame in
-    * the window is DETERMINISTIC — the harness's arms are.
-    *
-    * PROCESS-GLOBAL seam, single-threaded-JVM assumption (ADVICE r16
-    * #4, this field and [[mergeCommitHook]] alike): a concurrent
-    * snapshotBranchMerge in the same JVM while a profile/spec has the
-    * seam set would skip pinning or crash-inject the WRONG caller.
-    * Safe today because the only writers are the A/B harness and
-    * forked test JVMs, which run suites sequentially
-    * (Test/testForkedParallel defaults false, pinned by the build).
-    * Never set either seam in a JVM that serves production commits. */
-  private[graft] val mergePinSkipForAB =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** Test seam: runs after a [[snapshotBranchMerge]] attempt wrote its
     * key/data files, immediately before the manifest PUT — the widest
     * crash window the one-commit grammar has. The spec injects a crash
     * here and asserts NOTHING became visible: tip, staged view, and
     * publish all unchanged (the written dirs are unreferenced orphans
-    * until the sweep). Process-global with the same single-threaded-JVM
-    * assumption as [[mergePinSkipForAB]] — see the warning there. */
+    * until the sweep).
+    *
+    * PROCESS-GLOBAL seam, single-threaded-JVM assumption (ADVICE r16
+    * #4): a concurrent snapshotBranchMerge in the same JVM while the
+    * seam is set would crash-inject the WRONG caller. Its only writers,
+    * SnapshotBranchSpec and the q158 fixture, set it around one merge
+    * and clear it. Never set it in a JVM that serves production
+    * commits. */
   private[graft] val mergeCommitHook =
     new java.util.concurrent.atomic.AtomicReference[() => Unit](() => ())
 
@@ -2283,7 +2142,7 @@ object Layout {
       dels.drop(i).foldLeft(reader(group)) { case (df, (_, delRel, cols)) =>
         df.join(
           // explicit footer schema: a schemaless read pays a one-task
-          // inference job per delete overlay per read (StageProbe r19)
+          // inference job per delete overlay per read (OPTIMIZATION_r19.md)
           spark.read.schema(fileSchema(spark, dir, delRel))
             .parquet(new Path(dir, delRel).toString),
           cols, "left_anti")

@@ -67,11 +67,11 @@ object MergeBench {
   * Same deterministic modulo-derived change sets as [[MergeBench]]
   * (update and delete key sets are disjoint by construction — branch
   * MERGE refuses a key in both frames). The batches are FILE-BACKED
-  * plans, so they take the scratch-pin path by design — the A/B
-  * harness ([[BranchMergeProfile]]) measured pinning such a source
-  * once FASTER than re-scanning it across the ~6 validation/commit
-  * jobs, which is why the round-15 fast path covers in-memory
-  * batches only. Tracked as BENCH.json
+  * plans, so they take the scratch-pin path by design — the
+  * branch-merge A/B (SCALE.md) measured pinning such a source once
+  * FASTER than re-scanning it across the ~6 validation/commit jobs,
+  * which is why the round-15 fast path covers in-memory batches
+  * only. Tracked as BENCH.json
   * `streaming.branch_merge_rows_per_sec`. */
 object BranchMergeBench {
 

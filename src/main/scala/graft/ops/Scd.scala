@@ -65,9 +65,9 @@ object Scd {
     * `merge(historize(log₁), log₂) ≡ historize(log₁ ∪ log₂)` whenever
     * every batch event is at-or-after the key's open interval start —
     * the usual append-only log discipline. Closed intervals are carried
-    * through UNTOUCHED (at scale: the history is key-bucketed and only
-    * open rows join the batch — see [[Layout.partialOverwrite]] for the
-    * physical form); only each key's open row and the batch rows are
+    * through UNTOUCHED (at scale only open rows join the batch — the
+    * file-granular [[Layout.snapshotMergeInto]] rewrites just the files
+    * holding them); only each key's open row and the batch rows are
     * re-segmented, so per-batch cost is O(batch + open rows), not
     * O(history).
     */

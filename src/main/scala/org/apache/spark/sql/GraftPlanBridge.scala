@@ -59,8 +59,8 @@ object GraftPlanBridge {
     * end-to-end than pinning once and re-reading the small scratch
     * copy — ~12% on the round-15 two-commit merge, re-A/B'd at ~5%
     * on the round-16 one-commit merge (one fewer manifest round-trip
-    * narrows the gap but does not flip it; BranchMergeProfile's
-    * file(NO pin) arm keeps the break-even measurable) — the pin is
+    * narrows the gap but does not flip it; both A/Bs are recorded in
+    * SCALE.md) — the pin is
     * a cost FLOOR of O(batch), the re-executions cost O(source scan)
     * each. Conservative on everything else: a
     * DSv2 relation, a stream, a subquery, or any nondeterministic
@@ -84,9 +84,10 @@ object GraftPlanBridge {
     * `spark.read.parquet(path).schema` (and a schemaless
     * `spark.read.parquet(...)`) run parquet schema inference as a
     * one-task Spark JOB per call (`readParquetFootersInParallel`):
-    * StageProbe shows every snapshot-table open paying 1–2 such jobs at
-    * 30–50 ms wall each — pure scheduling overhead for a ~1 ms local
-    * footer read, and at 100 TB driver-side jobs do not parallelize
+    * round 19's stage attribution (OPTIMIZATION_r19.md) showed every
+    * snapshot-table open paying 1–2 such jobs at 30–50 ms wall each —
+    * pure scheduling overhead for a ~1 ms local footer read, and at
+    * 100 TB driver-side jobs do not parallelize
     * (round-19 metadata-plane pass; the scaling block's ≈1.0 ratios).
     * Decoded by inference's own per-footer step: Spark's row schema
     * (`org.apache.spark.sql.parquet.row.metadata`) first, so field

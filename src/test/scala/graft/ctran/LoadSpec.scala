@@ -119,30 +119,6 @@ class LoadSpec extends SparkSpec {
     assert(spark.read.parquet(tripDir).head().getAs[Int]("route_id") === 65)
   }
 
-  test("mergeStopEventsBucketed: same result as the full rewrite, replay order kept") {
-    val dir = tmpDir("mergeb")
-    val (fullDir, bucketedDir) = (s"$dir/full", s"$dir/bucketed")
-    val trips = (1 to 200).map(i => (i, 0, 4000 + i % 7, "Weekday", "Out"))
-      .toDF("trip_id", "route_id", "vehicle_id", "service_key", "direction")
-    trips.write.parquet(fullDir)
-    graft.ops.Layout.writeKeyBucketed(trips, bucketedDir, "trip_id", numBuckets = 16)
-    // conflicting updates for trip 3 — arrival offset decides on both paths
-    val updates = Seq(
-        (3, 4003, 99, "Out", "Weekday", 9L),
-        (3, 4003, 65, "Back", "Weekday", 2L),
-        (17, 4003, 40, "Back", "Weekday", 4L))
-      .toDF("trip_id", "vehicle_id", "route_id", "direction", "service_key", "offset")
-      .repartition(8)
-    Load.mergeStopEvents(spark, updates, fullDir, orderCol = Some("offset"))
-    Load.mergeStopEventsBucketed(spark, updates, bucketedDir,
-      orderCol = Some("offset"), numBuckets = 16)
-    val full = spark.read.parquet(fullDir)
-    val bucketed = graft.ops.Layout.readKeyBucketed(spark, bucketedDir)
-    assert(bucketed.count() === 200)
-    assert(bucketed.except(full).isEmpty && full.except(bucketed).isEmpty)
-    assert(bucketed.filter($"trip_id" === 3).head().getAs[Int]("route_id") === 65)
-  }
-
   test("mergeStopEvents: no match on (trip, vehicle, service_key) leaves row unchanged") {
     val dir = tmpDir("merge2")
     val tripDir = s"$dir/trip"

@@ -55,53 +55,6 @@ class LayoutSpec extends SparkSpec {
     assert(spark.read.parquet(dir).as[Int].collect().min === 101)
   }
 
-  test("partialOverwrite: rewrites only touched buckets, others byte-identical") {
-    val dir = tmpDir("partial") + "/t"
-    val base = (1 to 1000).map(i => (i, i * 10)).toDF("k", "v")
-    Layout.writeKeyBucketed(base, dir, "k", numBuckets = 16)
-    // snapshot every bucket's file list + sizes + mtimes before the merge
-    def snapshot(): Map[String, Seq[(String, Long, Long)]] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(_.getName.startsWith("kbucket=")).map { b =>
-        b.getName -> b.listFiles().toSeq.map(f =>
-          (f.getName, f.length(), f.lastModified())).sortBy(_._1)
-      }.toMap
-    }
-    val before = snapshot()
-    val updates = Seq((7, -7), (500, -500)).toDF("k", "v")
-    Layout.partialOverwrite(spark, dir, "k", 16, updates.select("k")) { existing =>
-      existing.as("e").join(updates.as("u"), Seq("k"), "left_outer")
-        .select($"k", coalesce($"u.v", $"e.v").as("v"))
-    }
-    val after = snapshot()
-    // correctness: exactly the two keys changed
-    val got = Layout.readKeyBucketed(spark, dir).as[(Int, Int)].collect().toMap
-    assert(got.size === 1000)
-    assert(got(7) === -7 && got(500) === -500)
-    assert(got(8) === 80 && got(999) === 9990)
-    // physical invariant: untouched bucket dirs have identical files
-    // same bucket derivation as Layout.bucketCol: pmod(xxhash64(k), 16)
-    val touched = Set(7, 500).map(k => s"kbucket=${Math.floorMod(
-      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        k, org.apache.spark.sql.types.IntegerType, 42L), 16L)}")
-    val untouched = before.keySet -- touched
-    assert(untouched.nonEmpty)
-    untouched.foreach(b => assert(after(b) === before(b),
-      s"bucket $b was rewritten but carried no updated key"))
-    touched.foreach(b => assert(after(b) !== before(b)))
-  }
-
-  test("partialOverwrite: crash before the swap leaves the live table intact") {
-    val dir = tmpDir("partial2") + "/t"
-    Layout.writeKeyBucketed((1 to 100).toDF("k"), dir, "k", numBuckets = 8)
-    // simulate the stage phase only: write the staged root, no renames
-    val staged = dir + ".__staged"
-    (1 to 5).toDF("k")
-      .withColumn("kbucket", lit(0))
-      .write.partitionBy("kbucket").parquet(staged)
-    assert(Layout.readKeyBucketed(spark, dir).count() === 100)
-  }
-
   test("compact: merges small files without losing a row, crash-safe rewrite") {
     val dir = tmpDir("compact") + "/t"
     (1 to 10000).toDF("v").repartition(40).write.parquet(dir)
@@ -126,67 +79,6 @@ class LayoutSpec extends SparkSpec {
     val back = spark.read.parquet(root)
     assert(back.count() === 300)
     assert(back.select($"p").distinct().as[Int].collect().sorted === Array(0, 1, 2))
-  }
-
-  test("recoverPartialOverwrite: crash between the rename pair rolls forward or back") {
-    val dir = tmpDir("recover") + "/t"
-    Layout.writeKeyBucketed((1 to 100).toDF("k"), dir, "k", numBuckets = 4)
-    val all = Layout.readKeyBucketed(spark, dir).as[Int].collect().sorted
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // temp dirs are dot-prefixed SIBLINGS of the table root (hidden from
-    // discovery) — the crash simulation must use the same names recover
-    // looks for
-    val parent = new org.apache.hadoop.fs.Path(dir).getParent
-    val base = new org.apache.hadoop.fs.Path(dir).getName
-    def crashBucket(b: Int, stageNew: Boolean): Unit = {
-      // simulate the mid-swap crash: marker down, live renamed away
-      fs.createNewFile(new org.apache.hadoop.fs.Path(dir, s"_graft_commit_b$b"))
-      fs.rename(new org.apache.hadoop.fs.Path(dir, s"kbucket=$b"),
-        new org.apache.hadoop.fs.Path(parent, s".$base.__old_b$b"))
-      if (stageNew) {
-        // the staged replacement for this bucket exists → roll forward
-        val staged = new org.apache.hadoop.fs.Path(parent, s".$base.__staged")
-        (201 to 203).toDF("k").withColumn("kbucket", lit(b))
-          .write.mode("append").partitionBy("kbucket").parquet(staged.toString)
-      }
-    }
-    crashBucket(0, stageNew = false)
-    assert(Layout.readKeyBucketed(spark, dir).count() < 100) // silent absence
-    assert(Layout.recoverPartialOverwrite(spark, dir) === 1)
-    // rolled BACK: original rows restored
-    assert(Layout.readKeyBucketed(spark, dir).as[Int].collect().sorted === all)
-    crashBucket(1, stageNew = true)
-    assert(Layout.recoverPartialOverwrite(spark, dir) === 1)
-    // rolled FORWARD: bucket 1 now holds the staged rows
-    val after = Layout.readKeyBucketed(spark, dir).as[Int].collect().sorted
-    assert(after.containsSlice(Seq(201, 202, 203)))
-    assert(Layout.recoverPartialOverwrite(spark, dir) === 0) // idempotent
-  }
-
-  test("partialOverwrite after a mid-swap crash repairs first, loses nothing") {
-    val dir = tmpDir("recover2") + "/t"
-    val base = (1 to 100).map(i => (i, i * 10)).toDF("k", "v")
-    Layout.writeKeyBucketed(base, dir, "k", numBuckets = 4)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = new org.apache.hadoop.fs.Path(dir).getParent
-    val baseName = new org.apache.hadoop.fs.Path(dir).getName
-    // crash state: marker down, bucket 2's only copy is the .__old_b2 half
-    fs.createNewFile(new org.apache.hadoop.fs.Path(dir, "_graft_commit_b2"))
-    fs.rename(new org.apache.hadoop.fs.Path(dir, "kbucket=2"),
-      new org.apache.hadoop.fs.Path(parent, s".$baseName.__old_b2"))
-    assert(Layout.readKeyBucketed(spark, dir).count() < 100)
-    // the next merge must NOT read the truncated table or delete the
-    // backup half — it repairs before staging anything
-    val updates = Seq((7, -7)).toDF("k", "v")
-    Layout.partialOverwrite(spark, dir, "k", 4, updates.select("k")) { existing =>
-      existing.as("e").join(updates.as("u"), Seq("k"), "left_outer")
-        .select($"k", coalesce($"u.v", $"e.v").as("v"))
-    }
-    val got = Layout.readKeyBucketed(spark, dir).as[(Int, Int)].collect().toMap
-    assert(got.size === 100, "rows from the crashed bucket were lost")
-    assert(got(7) === -7 && got(8) === 80)
   }
 
   test("snapshotCommit: versioned reads, self-referential rewrite, time travel") {

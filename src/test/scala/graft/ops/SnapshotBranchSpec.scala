@@ -992,8 +992,7 @@ class SnapshotBranchSpec extends SparkSpec {
       "a deterministic local batch must skip the scratch pin")
     // a file-backed batch pins even though its replay is stable: the
     // ~6 validation/commit jobs would each re-scan the source, which
-    // the A/B harness (BranchMergeProfile) measured slower than one
-    // pin write
+    // the branch-merge A/B measured slower than one pin write (SCALE.md)
     val fileBacked = Layout.snapshotRead(spark, dir)
       .filter(col("k") <= 3)
       .withColumn("s", concat(col("s"), lit("!")))

@@ -10,36 +10,6 @@ import org.apache.spark.sql.streaming.Trigger
 class TripStateSpec extends SparkSpec {
   import spark.implicits._
 
-  test("mapGroupsWithState: running trip stats across two micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[GpsPoint]
-    val q = TripState.runningTripStats(input.toDS())
-      .writeStream.format("memory").queryName("trip_state")
-      .outputMode(TripState.outputMode)
-      .trigger(Trigger.ProcessingTime(0))
-      .start()
-    try {
-      input.addData(
-        GpsPoint(1, Some(45.5), Some(-122.7), Some(10.0)),
-        GpsPoint(1, Some(45.6), Some(-122.6), Some(20.0)))
-      q.processAllAvailable()
-      input.addData(GpsPoint(1, Some(45.4), Some(-122.8), None),
-        GpsPoint(2, Some(45.0), Some(-122.0), Some(5.0)))
-      q.processAllAvailable()
-      val rows = spark.table("trip_state").collect()
-        .map(r => (r.getAs[Int]("trip_id"), r.getAs[Long]("n"))) // update mode: latest per key last
-      // trip 1 was emitted twice: n=2 after batch 1, n=3 after batch 2
-      assert(rows.contains((1, 2L)))
-      assert(rows.contains((1, 3L)))
-      assert(rows.contains((2, 1L)))
-      val last = spark.table("trip_state")
-        .filter($"trip_id" === 1 && $"n" === 3).head()
-      assert(last.getAs[Double]("minLat") === 45.4)
-      assert(last.getAs[Double]("maxLat") === 45.6)
-      assert(last.getAs[Double]("avgSpeed") === 15.0)
-    } finally q.stop()
-  }
-
   test("transformWithState (V2): same semantics on the RocksDB store") {
     implicit val sqlCtx = spark.sqlContext
     // transformWithState runs on the RocksDB state store provider
@@ -48,7 +18,7 @@ class TripStateSpec extends SparkSpec {
     spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[GpsPoint]
-    val q = TripStateV2.runningTripStats(input.toDS())
+    val q = TripState.runningTripStats(input.toDS())
       .writeStream.format("memory").queryName("trip_state_v2")
       .outputMode("update")
       .option("checkpointLocation", tmpDir("tws-ckpt"))

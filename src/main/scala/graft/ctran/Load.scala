@@ -37,6 +37,7 @@ object Load {
     * wrote nothing (an exactly-once replay): consumed, not inserted. */
   def ingest(spark: SparkSession, raw: DataFrame, tripDir: String)(
       sink: DataFrame => Boolean): (Long, Long, Long) = {
+    graft.io.LocalFs.ensureInstalled(spark)
     val valid = graft.streaming.Metrics
       .observed(Transform.enrich(raw), "ingest", Transform.isValid)
       .filter(Transform.isValid).persist()
@@ -93,6 +94,7 @@ object Load {
     */
   def mergeStopEvents(spark: SparkSession, updates: DataFrame, tripDir: String,
       orderCol: Option[String] = None): Unit = {
+    graft.io.LocalFs.ensureInstalled(spark)
     val u = firstSeenPerTrip(updates, orderCol)
     val merged = applyTripUpdates(readTable(spark, tripDir), u)
     graft.ops.Layout.atomicOverwrite(merged, tripDir)

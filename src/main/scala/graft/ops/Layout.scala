@@ -1032,7 +1032,7 @@ object Layout {
       colmaps: Seq[(Long, Map[Int, String])]): DataFrame = {
     def read(paths: Seq[String],
         s: org.apache.spark.sql.types.StructType): DataFrame =
-      spark.read.schema(s).parquet(paths: _*)
+      org.apache.spark.sql.GraftPlanBridge.parquetFiles(spark, paths, s)
     schema match {
       case Some(s) => mappedRead(dir, rels, s, colmaps, read)
       case None    =>
@@ -1043,8 +1043,7 @@ object Layout {
         // exactly the file inference would have picked).
         val paths = rels.map(r => new Path(dir, r).toString)
         if (rels.isEmpty) spark.read.parquet(paths: _*)
-        else spark.read.schema(fileSchema(spark, dir, rels.head))
-          .parquet(paths: _*)
+        else read(paths, fileSchema(spark, dir, rels.head))
     }
   }
 
@@ -2375,7 +2374,7 @@ object Layout {
         if (paths.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else spark.read.schema(schema).parquet(paths: _*),
+        else org.apache.spark.sql.GraftPlanBridge.parquetFiles(spark, paths, schema),
       updateImages = updateImages,
       // the batch path may pair a publish/restore's same-key
       // delete+insert into image pairs (both sides here are plain
@@ -3416,8 +3415,8 @@ object Layout {
         // the schema of record, else the first file's footer: no
         // one-task schema-inference job per probe or rewrite read
         def readerOf(rels: Seq[String]): DataFrame =
-          spark.read.schema(tableSchema)
-            .parquet(rels.map(r => new Path(dir, r).toString): _*)
+          org.apache.spark.sql.GraftPlanBridge.parquetFiles(spark,
+            rels.map(r => new Path(dir, r).toString), tableSchema)
         val (touched, replacement, cdcData, conflict) =
           touch(base, readerOf, tableSchema)
         val prevSet = prev.toSet

@@ -496,6 +496,7 @@ object SnapshotManifest {
   def commit(spark: SparkSession, dir: String, op: String, budget: Budget,
       sub: String = MainSub, floor: Long = 0L)(
       body: (Tip, Long) => Attempt): Long = {
+    graft.io.LocalFs.ensureInstalled(spark)
     val fs = fsOf(spark, dir)
     var attempt = 0
     var out = -1L

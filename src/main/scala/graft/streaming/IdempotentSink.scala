@@ -31,6 +31,7 @@ object IdempotentSink {
     * }}} */
   def appendOnce(batch: DataFrame, batchId: Long, tableDir: String): Boolean = {
     val spark = batch.sparkSession
+    graft.io.LocalFs.ensureInstalled(spark)
     val committed = new Path(tableDir, s"ingest_batch=$batchId")
     val fs = committed.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(committed)) return false

@@ -40,6 +40,8 @@ object StreamEtl {
       bcSink: (DataFrame, Long) => Boolean): Counters = {
     @volatile var consumed = 0L
     @volatile var inserted = 0L
+    // before start(): the stream runs on a clone of the session's conf
+    graft.io.LocalFs.ensureInstalled(spark)
     val raw = spark.readStream
       .schema(Schemas.rawBreadcrumb)
       .option("maxFilesPerTrigger", maxFilesPerTrigger) // T1: bound batch size

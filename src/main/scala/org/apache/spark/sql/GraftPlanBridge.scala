@@ -113,6 +113,43 @@ object GraftPlanBridge {
       new ParquetToSparkSchemaConverter(cs.sessionState.conf))
   }
 
+  /** A batch parquet scan over files the caller already knows — a
+    * snapshot manifest names every data file: the relation
+    * `spark.read.schema(schema).parquet(paths: _*)` builds, with each
+    * file's status handed to the file index up front. The reader lists
+    * its paths again, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * it does so in a "Listing leaf files and directories" Spark job. A
+    * path that names a directory is listed as the reader lists it. */
+  def parquetFiles(spark: SparkSession, paths: Seq[String],
+      schema: types.StructType): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import execution.datasources._
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val hconf = cs.sessionState.newHadoopConf()
+    val statuses = paths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(hconf).getFileStatus(path)
+    }
+    val known = statuses.filter(_.isFile).map(s => s.getPath ->
+      Array(new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize,
+        s.getModificationTime, s.getPath))).toMap
+    val index = new InMemoryFileIndex(cs, statuses.map(_.getPath), Map.empty,
+      Some(schema), new FileStatusCache {
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] = known.get(p)
+        def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      })
+    // the reader's split: partition columns found in the paths come from
+    // the index, the rest of the schema is the data schema, all nullable
+    val parts = index.partitionSchema
+    val resolver = cs.sessionState.conf.resolver
+    val data = types.StructType(
+      schema.filterNot(f => parts.exists(p => resolver(p.name, f.name))))
+    classic.Dataset.ofRows(cs, LogicalRelation(HadoopFsRelation(index, parts,
+      data.asNullable, None, new parquet.ParquetFileFormat, Map.empty)(cs)))
+  }
+
   /** By name, what the `observe(name, …)` nodes in `df`'s CACHED plan
     * collected — final once an action over `df` has ended. Unlike an
     * `Observation`: no listener-bus wait, and no session-wide observation

@@ -293,7 +293,6 @@ object Govern {
           // fail the cascade at the open-record write
           val gfs = govRoot.getFileSystem(
             spark.sparkContext.hadoopConfiguration)
-          gfs.mkdirs(govRoot)
           require(SnapshotManifest.atomicCreate(gfs,
               new org.apache.hadoop.fs.Path(govRoot,
                 s"$ledgerId.$suffix"),

@@ -3839,7 +3839,6 @@ object Layout {
     read(spark, dir, v)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = new Path(dir, s"_snapshots/tags/$name.tag")
-    fs.mkdirs(tag.getParent)
     require(atomicCreate(fs, tag, s"$v\n".getBytes("UTF-8")),
       s"snapshotTag: tag '$name' already exists at $dir (drop it first " +
         "to re-point — tags are create-once, like commits)")
@@ -4135,7 +4134,6 @@ object Layout {
       .getOrElse(sys.error(s"snapshotBranch: no committed snapshot at $dir"))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = manifestPath(dir, branchSub(name), base.version)
-    fs.mkdirs(target.getParent)
     require(atomicCreate(fs, target,
         SnapshotManifest.encode(base.meta, base.files)),
       s"snapshotBranch: branch '$name' already exists at $dir (drop it " +

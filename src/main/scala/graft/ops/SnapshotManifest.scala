@@ -379,14 +379,17 @@ object SnapshotManifest {
   // ------------------------------------------------------------ commit
 
   /** Create `target` with `body` iff it does not already exist; false =
-    * lost the race (someone else owns this version). The commit linchpin,
+    * lost the race (someone else owns this version). The target's parent
+    * directory is created first if missing. The commit linchpin,
     * so the create must be genuinely conditional per filesystem:
     *
     *  - `file:` — Hadoop's LocalFileSystem does exists-then-create, which
     *    is NOT atomic, so instead the body is written to a writer-unique
     *    temp object and promoted via `Files.createLink` — one link(2)
     *    syscall that the kernel fails with EEXIST atomically. Bonus: the
-    *    manifest appears fully written (no torn-read window at all).
+    *    manifest appears fully written (no torn-read window at all). The
+    *    parent comes from `Files.createDirectories` too: without
+    *    `libhadoop`, a Hadoop `mkdirs` runs a `chmod` process.
     *  - HDFS — `create(overwrite=false)` IS atomic (a single namenode
     *    operation), used directly.
     *  - object stores — stands in for the store's conditional PUT
@@ -405,12 +408,14 @@ object SnapshotManifest {
       val dst = Paths.get(target.toUri.getPath)
       val tmp = dst.resolveSibling(
         s".${dst.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      Files.createDirectories(dst.getParent)
       Files.write(tmp, body)
       try { Files.createLink(dst, tmp); true }
       catch { case _: NioExists => false }
       finally Files.deleteIfExists(tmp)
     } else {
       try {
+        fs.mkdirs(target.getParent)
         val out = fs.create(target, false)
         try out.write(body) finally out.close()
         true
@@ -512,7 +517,6 @@ object SnapshotManifest {
         case NoOp(v) => out = v
         case Write(meta, files, onLost) =>
           val target = manifestPath(dir, sub, slot)
-          fs.mkdirs(target.getParent)
           if (atomicCreate(fs, target, encode(meta, files))) out = slot
           else onLost()
       }

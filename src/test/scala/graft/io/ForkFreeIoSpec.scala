@@ -66,12 +66,14 @@ class ForkFreeIoSpec extends SparkSpec {
     }
   }
 
-  test("a SnapshotSink.mergeOnce upsert starts no chmod/readlink/ls/stat process") {
+  test("SnapshotSink.mergeOnce into a new table, then an upsert, starts no chmod/readlink/ls/stat process") {
     val dir = tmpDir("fork-free-merge") + "/t"
-    assert(SnapshotSink.mergeOnce((1 to 40).map(i => (i, s"r$i")).toDF("k", "v"),
-      0L, dir, Seq("k")))
-    assertNoHelpers("SnapshotSink.mergeOnce")(assert(SnapshotSink.mergeOnce(
-      Seq((5, "x"), (41, "y")).toDF("k", "v"), 1L, dir, Seq("k"))))
+    assertNoHelpers("SnapshotSink.mergeOnce") {
+      assert(SnapshotSink.mergeOnce((1 to 40).map(i => (i, s"r$i")).toDF("k", "v"),
+        0L, dir, Seq("k")))
+      assert(SnapshotSink.mergeOnce(
+        Seq((5, "x"), (41, "y")).toDF("k", "v"), 1L, dir, Seq("k")))
+    }
   }
 
   test("a Load.loadFile starts no chmod/readlink/ls/stat process") {

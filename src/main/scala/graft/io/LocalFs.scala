@@ -65,7 +65,7 @@ class NioRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
   override def getUriDefaultPort: Int = -1
   override def getServerDefaults(f: Path): FsServerDefaults =
     LocalConfigKeys.getServerDefaults()
-  @deprecated("as AbstractFileSystem.getServerDefaults()", "")
+  @deprecated("overrides a deprecated AbstractFileSystem method", "")
   override def getServerDefaults(): FsServerDefaults =
     LocalConfigKeys.getServerDefaults()
   override def isValidName(src: String): Boolean = true
@@ -110,6 +110,5 @@ object LocalFs {
       spark.conf.set("fs.file.impl.disable.cache", "true")
     }
     installed.put(spark, java.lang.Boolean.TRUE)
-    ()
   }
 }

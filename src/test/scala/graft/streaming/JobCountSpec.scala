@@ -9,10 +9,12 @@ import graft.SparkJobs.Job
   * `StreamEtl.run` micro-batch and a `SnapshotSink.mergeOnce` upsert.
   * Their fixed cost is mostly Spark jobs, each a scheduling round trip,
   * so the bounds are the counts measured once the counters came from
-  * observed metrics (9 jobs before) and a small change set's keys stayed
-  * on the driver: one analysis job, one probe collect and the three
-  * writes (15, then 10 jobs before); a change that adds a job fails here
-  * first. Composite keys and tombstones take the same path. Parquet
+  * observed metrics (9 jobs before) and a small change set's rows and
+  * small candidate files stayed on the driver: one analysis job and one
+  * probe collect, the driver writing the rewrite and both change records
+  * (15, 10, then 5 jobs before); a change that adds a job fails here
+  * first. Composite keys and tombstones take the same path; candidate
+  * files past the driver's byte bound keep the executor writes. Parquet
   * schema-inference jobs (`parquet at …`, a one-task footer read) must
   * not come back at all. */
 class JobCountSpec extends SparkSpec {
@@ -54,24 +56,48 @@ class JobCountSpec extends SparkSpec {
       assert(SnapshotSink.mergeOnce(ups, 1L, dir, keyCols, deleteCol = deleteCol)))
   }
 
-  test("one SnapshotSink.mergeOnce upsert: at most 5 jobs, no schema inference") {
+  test("one SnapshotSink.mergeOnce upsert: at most 2 jobs, no schema inference") {
     val jobs = upsertJobs((1 to 40).map(i => (i, s"r$i", i % 3)).toDF("k", "v", "d"),
       Seq((5, "x", 1), (41, "y", 2)).toDF("k", "v", "d"), Seq("k"))
-    assertBound("one upsert", jobs, 5)
+    assertBound("one upsert", jobs, 2)
   }
 
-  test("one composite-key mergeOnce upsert: at most 5 jobs, no schema inference") {
+  test("one composite-key mergeOnce upsert: at most 2 jobs, no schema inference") {
     val jobs = upsertJobs(
       (1 to 40).map(i => (s"g${i % 4}", i, s"r$i")).toDF("g", "k", "v"),
       Seq(("g1", 5, "x"), ("g0", 5, "y"), ("g3", 41, "z")).toDF("g", "k", "v"),
       Seq("g", "k"))
-    assertBound("one composite-key upsert", jobs, 5)
+    assertBound("one composite-key upsert", jobs, 2)
   }
 
-  test("one mergeOnce upsert with tombstones: at most 5 jobs, no schema inference") {
+  test("one mergeOnce upsert with tombstones: at most 2 jobs, no schema inference") {
     val jobs = upsertJobs((1 to 40).map(i => (i, s"r$i", false)).toDF("k", "v", "del"),
       Seq((5, "x", false), (7, null, true), (41, "y", false)).toDF("k", "v", "del"),
       Seq("k"), deleteCol = Some("del"))
-    assertBound("one upsert with tombstones", jobs, 5)
+    assertBound("one upsert with tombstones", jobs, 2)
+  }
+
+  test("an upsert whose candidate files pass 4 MiB keeps the executor writes: at most 5 jobs") {
+    import org.apache.spark.sql.functions.{col, sha2}
+    // ~150k incompressible 64-char values: well past the driver's 4 MiB
+    // bound on candidate bytes, so the rewrite and change records stay
+    // Spark write jobs
+    val rows = spark.range(1, 150001).select(col("id").cast("int").as("k"),
+      sha2(col("id").cast("string"), 256).as("v"))
+    val dir = tmpDir("jobs-merge-big") + "/t"
+    assert(SnapshotSink.mergeOnce(rows, 0L, dir, Seq("k")))
+    val onDisk = org.apache.commons.io.FileUtils.sizeOfDirectory(
+      new java.io.File(s"$dir/data"))
+    assert(onDisk > (4L << 20), s"table holds only $onDisk bytes")
+    val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(
+      Seq((5, "x"), (150001, "y")).toDF("k", "v"), 1L, dir, Seq("k"))))
+    assertBound("one upsert into large files", jobs, 5)
+    assert(jobs.size > 2, "large candidate files took the driver writes:" +
+      SparkJobs.labels(jobs))
+    val got = graft.Tables.snapshot(spark, dir)
+    assert(got.count() === 150001L)
+    assert(got.filter(col("k").isin(5, 150001)).as[(Int, String)].collect()
+      .sorted.toSeq === Seq((5, "x"), (150001, "y")))
+    assert(got.filter(col("k") === 6).as[(Int, String)].head()._2.length === 64)
   }
 }

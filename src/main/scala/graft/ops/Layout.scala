@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1471,9 +1473,18 @@ object Layout {
     * carries the replaced rows' OLD values (update pre-images) when
     * the writer opted in — one extra O(batch) write, never a second
     * table scan the commit wasn't already doing. */
-  private[ops] final case class CdcData(ups: Option[DataFrame],
-      delKeys: Option[DataFrame], keyCols: Seq[String],
-      pre: Option[DataFrame] = None)
+  private[ops] final case class CdcData(ups: Option[StageRows],
+      delKeys: Option[StageRows], keyCols: Seq[String],
+      pre: Option[StageRows] = None)
+
+  /** Rows a file-granular commit stages as one data directory: a frame
+    * Spark writes in a write job, or rows already on the driver, which
+    * the driver writes as ONE file with no job
+    * ([[org.apache.spark.sql.GraftPlanBridge.writeParquetFile]]). */
+  private[ops] sealed trait StageRows
+  private[ops] final case class FrameRows(df: DataFrame) extends StageRows
+  private[ops] final case class DriverRows(schema: StructType,
+      rows: Seq[InternalRow]) extends StageRows
 
   /** MERGE-ON-READ row deletion: commit a parquet file of KEY TUPLES and
     * a `delete=` manifest line — zero data files touched, O(keys) write —
@@ -2802,17 +2813,17 @@ object Layout {
           .select(col("_metadata.file_path").as("_gfile")))
       val survivors =
         if (touched.isEmpty) None
-        else Some(reader(touched)
+        else Some(FrameRows(reader(touched)
           // keep FALSE and NULL — SQL DELETE removes only TRUE
-          .filter(!coalesce(cond, lit(false))))
+          .filter(!coalesce(cond, lit(false)))))
       val cdc =
         if (keyCols.isEmpty || touched.isEmpty) None
         else {
           val keyFields = resolveKeyFields(tableSchema, keyCols,
             "snapshotDeleteWhere")
           Some(CdcData(None,
-            Some(reader(touched).filter(coalesce(cond, lit(false)))
-              .select(keyFields.map(col): _*)),
+            Some(FrameRows(reader(touched).filter(coalesce(cond, lit(false)))
+              .select(keyFields.map(col): _*))),
             keyFields))
         }
       // a concurrently-appended file whose stats admit a matching row
@@ -2893,14 +2904,14 @@ object Layout {
         }: _*)
       val survivors =
         if (touched.isEmpty) None
-        else Some(reader(touched).select(tableSchema.fields.map { f =>
+        else Some(FrameRows(reader(touched).select(tableSchema.fields.map { f =>
           asg.get(f.name) match {
             // assign only where cond is TRUE — FALSE and NULL keep the row
             case Some(v) => when(coalesce(cond, lit(false)),
                 v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
             case None => col(f.name)
           }
-        }: _*))
+        }: _*)))
       val cdc =
         if (keyFields.isEmpty || touched.isEmpty) None
         else {
@@ -2914,14 +2925,20 @@ object Layout {
           // of delete + insert. `preImages = false` opts a
           // latency-sensitive writer out of the extra write; its
           // commits degrade honestly to delete + insert in the feed
-          Some(CdcData(Some(assigned(matched)),
-            Some(matched.select(keyFields.map(col): _*)), keyFields,
-            pre = if (preImages) Some(matched) else None))
+          Some(CdcData(Some(FrameRows(assigned(matched))),
+            Some(FrameRows(matched.select(keyFields.map(col): _*))), keyFields,
+            pre = if (preImages) Some(FrameRows(matched)) else None))
         }
       (touched, survivors, cdc, Some(cond))
     }
   }
 
+
+  /** On-disk bytes of candidate files at or under which an exact merge
+    * runs on the driver (collects the candidates' rows, writes the
+    * rewrite and change records itself); SCALE.md "Driver-written small
+    * upserts" gives the memory bound. */
+  private val DriverMergeMaxBytes = 1L << 20
 
   /** FILE-GRANULAR copy-on-write MERGE (upsert): every row of `updates`
     * whose `keyCols` match an existing row REPLACES it; every other
@@ -2940,9 +2957,10 @@ object Layout {
     *     a key-clustered table (the shape key-ranged ingest or
     *     [[zorderWrite]] produces) the candidate set is the handful of
     *     files overlapping the update's keys, not the corpus;
-    *  2. a key-column-only probe of the candidates finds the files
-    *     with a REAL match, and the matched keys: for a small change
-    *     set with driver-comparable keys, ONE collect of the
+    *  2. a probe of the candidates finds the files with a REAL match,
+    *     and the matched keys: for a small change set with
+    *     driver-comparable keys, ONE collect — of small candidates'
+    *     full rows with a hit flag, else of the
     *     `(_metadata.file_path, key…)` rows an exact key predicate
     *     admits; otherwise a semi-join against the change keys;
     *  3. touched files are rewritten as (their rows matching no change
@@ -2979,15 +2997,19 @@ object Layout {
     * upstream plan runs once; a change set within the IN-list threshold
     * is analysed (counts, refusals, IN lists) in ONE bounded job. When
     * its keys are also integral, boolean, decimal, date/time or
-    * binary-collated strings, that job takes at most InMax + 1 key rows
-    * per partition to the driver, the probe is one collect with no
-    * broadcast, join, shuffle or cache, and the matched-key change record
-    * is written from the collected keys as one file: a streaming upsert
-    * runs 5 jobs (analysis, probe, rewrite and two change records).
-    * Floating-point and collated keys, and change sets past the
-    * threshold, keep the executor-side grouping and the semi-join probe.
-    * The probe and rewrite read under the footer-derived table schema,
-    * with no schema-inference job. */
+    * binary-collated strings, that job takes at most InMax + 1 update
+    * rows (whole) and tombstone keys per partition to the driver, and
+    * the probe is one collect with no broadcast, join, shuffle or cache.
+    * When the candidate files also hold at most 1 MiB on disk, that
+    * collect brings their full rows with a hit flag, and the DRIVER
+    * writes the rewrite (one file) and the change records with Spark's
+    * parquet writer — no write job, committer or listing: a streaming
+    * upsert runs 2 jobs (analysis and probe). Larger candidates take a
+    * key-column probe and Spark write jobs for the rewrite and the
+    * change records (5 jobs). Floating-point and collated keys, and
+    * change sets past the threshold, keep the executor-side grouping
+    * and the semi-join probe. The probe and rewrite read under the
+    * footer-derived table schema, with no schema-inference job. */
   def snapshotMergeInto(spark: SparkSession, dir: String,
       updates: DataFrame, keyCols: Seq[String],
       meta: Seq[String] = Nil,
@@ -3050,25 +3072,37 @@ object Layout {
           case t: StringType => UnsafeRowUtils.isBinaryStable(t)
           case _ => false
         }
-      val sample: Array[Row] =
+      // the update side's rows are taken WHOLE, as the executed plan's
+      // rows: a small merge writes them from the driver
+      val updKey = UnsafeProjection.create(keyCols.map { k =>
+        val i = updCached.schema.fieldNames.indexWhere(_.equalsIgnoreCase(k))
+        BoundReference(i, updCached.schema(i).dataType, true)
+      })
+      val (sample, updRows) =
         if (onDriver) {
           // the driver keeps at most InMax + 1 rows of each side
-          val taken = Map(false -> scala.collection.mutable.ArrayBuffer.empty[Row],
-            true -> scala.collection.mutable.ArrayBuffer.empty[Row])
+          val taken = Map(false -> scala.collection.mutable.ArrayBuffer.empty[InternalRow],
+            true -> scala.collection.mutable.ArrayBuffer.empty[InternalRow])
+          val whole = (false -> updCached.select(col("*"))) +: sides.tail
           spark.sparkContext.runJob(
-            spark.sparkContext.union(sides.map { case (d, df) => df.rdd.map(d -> _) }),
-            (it: Iterator[(Boolean, Row)]) => it.take(InMax + 1).toArray,
-            (_: Int, rs: Array[(Boolean, Row)]) => rs.foreach { case (d, r) =>
+            spark.sparkContext.union(whole.map { case (d, df) =>
+              df.queryExecution.toRdd.map(r => d -> r.copy()) }),
+            (it: Iterator[(Boolean, InternalRow)]) => it.take(InMax + 1).toArray,
+            (_: Int, rs: Array[(Boolean, InternalRow)]) => rs.foreach { case (d, r) =>
               if (taken(d).size <= InMax) taken(d) += r
             })
-          taken.toSeq.flatMap { case (d, rs) => rs.map(d -> _) }
+          // key tuples as external rows, as `df.rdd` gives them
+          val keyRow = CatalystTypeConverters.createToScalaConverter(
+            updKeys.schema).andThen(_.asInstanceOf[Row])
+          ((taken(false).map(r => false -> keyRow(updKey(r))) ++
+            taken(true).map(r => true -> keyRow(r)))
             .groupBy(_._2).map { case (k, rs) =>
               val nDel = rs.count(_._1).toLong
               Row.fromSeq(k.toSeq ++ Seq(rs.size - nDel, nDel, rs.size.toLong))
-            }.toArray
-        } else tagged(Some(InMax + 1)).groupBy(keyCols.map(col): _*)
+            }.toArray, taken(false).toSeq)
+        } else (tagged(Some(InMax + 1)).groupBy(keyCols.map(col): _*)
           .agg(count(when(!col("_gdel"), 1)), count(when(col("_gdel"), 1)),
-            count(lit(1))).collect()
+            count(lit(1))).collect(), Seq.empty[InternalRow])
       def cnt(tag: Option[Boolean])(r: Row): Long =
         r.getLong(keyCols.size + tag.fold(2)(d => if (d) 1 else 0))
       final case class KeyStats(n: Long, nd: Long, nulls: Seq[Long],
@@ -3180,34 +3214,120 @@ object Layout {
           // INDEPENDENTLY (a tight update range and a tight delete range
           // each prune better than their disjunction, which the
           // conjunct-wise pruner cannot use) — but the surviving union is
-          // probed in ONE key-column scan, not one per side: a file a
-          // side's stats pruned provably holds none of that side's keys,
-          // so one probe against the combined change keys touches exactly
-          // the union the two per-side probes would. An exact probe is
-          // ONE collect of the matching (file, key) rows — the touched
-          // files and the matched keys, no join; otherwise a semi-join
-          // against the change keys finds them. The file path is
-          // materialized BEFORE any join: a file-backed probe partner
-          // would make `_metadata` ambiguous after it. A lost race's probe
-          // is stale: an attempt releases the previous one's.
+          // probed in ONE scan, not one per side: a file a side's stats
+          // pruned provably holds none of that side's keys, so one probe
+          // against the combined change keys touches exactly the union
+          // the two per-side probes would. A lost race's probe is stale:
+          // an attempt releases the previous one's.
           probed.foreach(_.unpersist()); probed = None
-          val (touched, matchedKeys) =
-            if (updPred.isEmpty && delPred.isEmpty) (Nil, None)
+          val candidates: Option[DataFrame] =
+            if (updPred.isEmpty && delPred.isEmpty) None
             else {
               val rels = base.files
               val kept = (updPred.map(statsKeptRels(spark, rels, base.meta, _))
                 .getOrElse(Nil) ++
                 delPred.map(statsKeptRels(spark, rels, base.meta, _))
                   .getOrElse(Nil)).distinct
-              if (kept.isEmpty) (Nil, None)
-              else {
-                // row-group skipping hint; exactness is the exact predicate
-                // or the semi-join
-                val anyPred = (updPred.toSeq ++ delPred.toSeq).reduce(_ || _)
-                val scan = reader(kept)
-                  .select(col("_metadata.file_path").as("_gfile") +:
+              Option.when(kept.nonEmpty)(reader(kept))
+            }
+          // a concurrently-appended file whose stats admit one of the
+          // change set's keys would leave a duplicate live row after a
+          // staged retry — the key-range/IN disjunction is the exact
+          // conflict filter
+          val conflict = (updPred.toSeq ++ delPred.toSeq).reduceOption(_ || _)
+          // change records for the typed feed, on either path: delete side
+          // = the keys whose rows were ACTUALLY dropped (matched in a
+          // touched file — a tombstone for an absent key is a no-op, not a
+          // change); upsert side = every update row. An updated key thus
+          // replays as delete(old key) + insert(new row), an unmatched one
+          // as a bare insert — exactly the CDC shape downstream consumers
+          // apply. Update pre-images are opt-IN here (unlike
+          // snapshotUpdateWhere's default-on): merge apply latency is the
+          // CDC pipeline's tracked floor.
+          type Staged = (Seq[String], Option[StageRows], Option[CdcData])
+          // Small candidates under an exact predicate: ONE collect of the
+          // candidates' full rows, each with its file and a hit flag, gives
+          // the driver the touched files, the survivors (no hit — a NULL
+          // key included, as under left_anti), the matched keys and the
+          // pre-images; the driver writes the rewrite (survivors ∪
+          // updates, one file) and the change records, each under the
+          // schema the executor path would write it with
+          def mergeOnDriver(p: Column): Staged = {
+            val n = tableSchema.size
+            val probe = candidates.map(_.select(outCols ++ Seq(
+              col("_metadata.file_path").as("_gfile"),
+              coalesce(p, lit(false)).as("_ghit")): _*))
+            def project(fields: Seq[(Int, DataType)]) = UnsafeProjection.create(
+              fields.map { case (i, t) => BoundReference(i, t, true) })
+            def ordinal(s: StructType, name: String) =
+              s.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+            val tableRow = project(tableSchema.map(_.dataType).zipWithIndex
+              .map(_.swap))
+            // the rows are kept as table rows, grouped by file: the path
+            // is held once per file, not once per row
+            val paths = scala.collection.mutable.ArrayBuffer.empty[String]
+            val fileOf = scala.collection.mutable.HashMap.empty[
+              org.apache.spark.unsafe.types.UTF8String, Int]
+            val noHit = scala.collection.mutable.ArrayBuffer.empty[
+              scala.collection.mutable.ArrayBuffer[InternalRow]]
+            val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+            val hitFiles = scala.collection.mutable.SortedSet.empty[Int]
+            probe.foreach(org.apache.spark.sql.GraftPlanBridge.collectInternal(_)
+              .foreach { r =>
+                val f = fileOf.getOrElseUpdate(r.getUTF8String(n).clone(), {
+                  paths += r.getUTF8String(n).toString
+                  noHit += scala.collection.mutable.ArrayBuffer.empty
+                  paths.size - 1
+                })
+                val row = tableRow(r).copy()
+                if (r.getBoolean(n + 1)) { hits += row; hitFiles += f }
+                else noHit(f) += row
+              })
+            val touched = hitFiles.toSeq.map(f => relOfFilePath(paths(f)))
+            val survivors = hitFiles.toSeq.flatMap(noHit)
+            val readSchema = probe.map(d => StructType(d.schema.take(n)))
+            val updOut = updCached.select(outCols: _*)
+            val ups = {
+              val toTable = project(tableSchema.map { f =>
+                val i = ordinal(updCached.schema, f.name)
+                i -> updCached.schema(i).dataType
+              })
+              updRows.map(toTable(_).copy())
+            }
+            val hitKey = project(keyCols.map { k =>
+              val i = ordinal(tableSchema, k); i -> tableSchema(i).dataType })
+            val matched = hits.map(hitKey(_).copy()).distinct.toSeq
+            val rows =
+              if (touched.isEmpty && nUpd == 0) None
+              else if (touched.isEmpty) Some(DriverRows(updOut.schema, ups))
+              else Some(DriverRows(readSchema.get, survivors ++ ups))
+            val pre = Option.when(preImages && touched.nonEmpty && nUpd > 0) {
+              val updated = updRows.map(updKey(_).copy()).toSet
+              DriverRows(readSchema.get,
+                hits.filter(r => updated(hitKey(r))).toSeq)
+            }
+            (touched, rows, Option.when(nUpd > 0 || matched.nonEmpty)(CdcData(
+              Option.when(nUpd > 0)(DriverRows(updOut.schema, ups)),
+              Option.when(matched.nonEmpty)(DriverRows(StructType(
+                candidates.get.select(keyCols.map(col): _*).schema), matched)),
+              keyCols, pre = pre)))
+          }
+          // Otherwise a key-column probe finds the touched files and the
+          // matched keys: under an exact predicate ONE collect of the
+          // matching (file, key) rows, no join; else a semi-join against
+          // the change keys. The file path is materialized BEFORE any
+          // join: a file-backed probe partner would make `_metadata`
+          // ambiguous after it. The rewrite and the change records are
+          // Spark write jobs.
+          def mergeOnExecutors(): Staged = {
+            val (touched, matchedKeys) = candidates match {
+              case None => (Nil, None)
+              case Some(c) =>
+                // row-group skipping hint; exactness is the exact
+                // predicate or the semi-join
+                val scan = c.select(col("_metadata.file_path").as("_gfile") +:
                     keyCols.map(col): _*)
-                  .filter(exact.getOrElse(anyPred))
+                  .filter(exact.orElse(conflict).get)
                 exact match {
                   case Some(_) =>
                     val hits = scan.collect()
@@ -3225,56 +3345,43 @@ object Layout {
                     (files, Option.when(files.nonEmpty)(
                       p.select(keyCols.map(col): _*).distinct()))
                 }
+            }
+            val rows =
+              if (touched.isEmpty && nUpd == 0) None
+              else if (touched.isEmpty) Some(updCached.select(outCols: _*))
+              else {
+                val survivors = exact.fold(
+                  reader(touched).join(dropKeys, keyCols, "left_anti"))(p =>
+                  reader(touched).filter(!coalesce(p, lit(false))))
+                  .select(outCols: _*)
+                // bound the rewrite's file count near the touched count:
+                // the union's partitioning (touched files + the batch's
+                // own partitions) would otherwise GROW the file census on
+                // EVERY merge of a long CDC stream, inflating every later
+                // probe/scan — coalesce is shuffle-free; the small floor
+                // keeps write parallelism on small tables
+                Some((if (nUpd == 0) survivors
+                  else survivors.unionByName(updCached.select(outCols: _*)))
+                  .coalesce(math.max(touched.size, 8)))
               }
-            }
-          val rows =
-            if (touched.isEmpty && nUpd == 0) None
-            else if (touched.isEmpty) Some(updCached.select(outCols: _*))
-            else {
-              // a touched file's rows that match no change key — a NULL
-              // key included, as under left_anti
-              val survivors = exact.fold(
-                reader(touched).join(dropKeys, keyCols, "left_anti"))(p =>
-                reader(touched).filter(!coalesce(p, lit(false))))
-                .select(outCols: _*)
-              // bound the rewrite's file count near the touched count: the
-              // union's partitioning (touched files + the batch's own
-              // partitions) would otherwise GROW the file census on EVERY
-              // merge of a long CDC stream, inflating every later
-              // probe/scan — coalesce is shuffle-free; the small floor
-              // keeps write parallelism on small tables
-              Some((if (nUpd == 0) survivors
-                else survivors.unionByName(updCached.select(outCols: _*)))
-                .coalesce(math.max(touched.size, 8)))
-            }
-          // opt-in update pre-images: the old rows the update keys
-          // replace, captured by one more semi-join scan of the touched
-          // files. Opt-IN here (unlike snapshotUpdateWhere's default-on)
-          // because the merge probe reads key columns only — the pre
-          // side is a scan the commit was NOT already doing, and merge
-          // apply latency is the CDC pipeline's tracked floor.
-          val pre =
-            if (!preImages || touched.isEmpty || nUpd == 0) None
-            else Some(reader(touched)
-              .join(updKeys, keyCols, "left_semi")
-              .select(outCols: _*))
-          // change record for the typed feed: delete side = the keys whose
-          // rows were ACTUALLY dropped (matched in a touched file — a
-          // tombstone for an absent key is a no-op, not a change); upsert
-          // side = every update row. An updated key thus replays as
-          // delete(old key) + insert(new row), an unmatched one as a bare
-          // insert — exactly the CDC shape downstream consumers apply.
-          val cdc =
-            if (nUpd == 0 && matchedKeys.isEmpty) None
-            else Some(CdcData(
-              if (nUpd > 0) Some(updCached.select(outCols: _*)) else None,
-              matchedKeys, keyCols, pre = pre))
-          // a concurrently-appended file whose stats admit one of the
-          // change set's keys would leave a duplicate live row after a
-          // staged retry — the key-range/IN disjunction is the exact
-          // conflict filter
-          (touched, rows, cdc,
-            (updPred.toSeq ++ delPred.toSeq).reduceOption(_ || _))
+            // the pre side is one more semi-join scan of the touched files
+            val pre =
+              if (!preImages || touched.isEmpty || nUpd == 0) None
+              else Some(reader(touched)
+                .join(updKeys, keyCols, "left_semi")
+                .select(outCols: _*))
+            (touched, rows.map(FrameRows),
+              Option.when(nUpd > 0 || matchedKeys.nonEmpty)(CdcData(
+                Option.when(nUpd > 0)(FrameRows(updCached.select(outCols: _*))),
+                matchedKeys.map(FrameRows), keyCols, pre = pre.map(FrameRows))))
+          }
+          val (touched, rows, cdc) = exact.filter(_ => candidates.forall(c =>
+              org.apache.spark.sql.GraftPlanBridge.scannedFileBytes(c) <=
+                DriverMergeMaxBytes)) match {
+            case Some(p) => mergeOnDriver(p)
+            case None => mergeOnExecutors()
+          }
+          (touched, rows, cdc, conflict)
       }
     } finally (pins ++ probed).foreach(_.unpersist())
   }
@@ -3337,7 +3444,7 @@ object Layout {
       op: String, metaOf: (Seq[String], Int) => Seq[String])(
       touch: (Manifest, Seq[String] => DataFrame,
         org.apache.spark.sql.types.StructType)
-        => (Seq[String], Option[DataFrame], Option[CdcData],
+        => (Seq[String], Option[StageRows], Option[CdcData],
             Option[Column])): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // two retry budgets: full RE-DERIVES are expensive (jobs, writes)
@@ -3427,53 +3534,48 @@ object Layout {
         val token = java.util.UUID.randomUUID().toString.take(8)
         val rel = f"data/v$v%08d-$token"
         val dataDir = new Path(dir, rel)
-        // the replacement and the commit's two change-record sides are
+        // the replacement and the commit's change-record sides (`-cdcu`
+        // upserts, `-cdcd` dropped keys, `-cdcp` pre-images: own dirs next
+        // to the data, named in a cdc= line the typed feed reads) are
         // independent writes to independent directories — run them
         // CONCURRENTLY: serially they are a CDC commit's fixed floor
         // (three write jobs back to back where the slowest alone
-        // suffices). A failed write propagates on Await exactly as it
-        // did serially; any already-written sibling becomes an orphan
-        // the expire sweep collects, same as a crash mid-commit.
+        // suffices). Rows already on the driver are written there as one
+        // file each, with no job. Once every write has settled, a failed
+        // one deletes every directory this attempt wrote and propagates.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val fFiles: Future[Seq[String]] = replacement match {
-          case Some(df) => Future {
-            df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-            dataFiles(spark, dataDir)
+        def write(rows: StageRows, to: Path): Seq[String] = rows match {
+          case FrameRows(df) =>
+            df.write.mode(SaveMode.Overwrite).parquet(to.toString)
+            dataFiles(spark, to)
+          case DriverRows(schema, rs) =>
+            Seq(org.apache.spark.sql.GraftPlanBridge.writeParquetFile(
+              spark, to.toString, schema, rs.iterator))
+        }
+        val cdcRels = cdcData.toSeq.flatMap(c =>
+          Seq("cdcu" -> c.ups, "cdcd" -> c.delKeys, "cdcp" -> c.pre))
+          .collect { case (tag, Some(rows)) => s"$rel-$tag" -> rows }
+        val written = (replacement.map(rel -> _).toSeq ++ cdcRels)
+          .map { case (r, rows) => r -> Future(write(rows, new Path(dir, r))) }
+          .map { case (r, f) => r -> Await.ready(f, Duration.Inf).value.get }
+        written.collectFirst { case (_, scala.util.Failure(t)) => t }
+          .foreach { t =>
+            written.foreach { case (r, _) => fs.delete(new Path(dir, r), true) }
+            throw t
           }
-          case None => Future.successful(Seq.empty[String])
+        val files = written.collectFirst {
+          case (`rel`, scala.util.Success(names)) => names }.getOrElse(Nil)
+        val cdcDirs = cdcRels.map { case (r, _) => new Path(dir, r) }
+        val cdcLine = cdcData.filter(_ => cdcRels.nonEmpty).map { c =>
+          def side(tag: String) = cdcRels.map(_._1).find(_ == s"$rel-$tag")
+          // pre-images append a 4th field; without them the line stays
+          // 3-field — byte-identical to pre-round-11 commits
+          s"$CdcTag${side("cdcu").getOrElse("-")}|" +
+            s"${side("cdcd").getOrElse("-")}|" + c.keyCols.mkString(",") +
+            side("cdcp").map(p => s"|$p").getOrElse("")
         }
-        // persist the commit's change record next to its data (own
-        // dirs, O(batch) writes) and name it in a cdc= line the typed
-        // feed reads
-        val fCdc: Future[(Seq[Path], Option[String])] = cdcData match {
-          case None => Future.successful((Nil, None))
-          case Some(c) =>
-            def put(side: Option[DataFrame],
-                tag: String): Future[Option[String]] = side match {
-              case None => Future.successful(None)
-              case Some(d) => Future {
-                val r = f"data/v$v%08d-$token-$tag"
-                d.write.mode(SaveMode.Overwrite)
-                  .parquet(new Path(dir, r).toString)
-                Some(r)
-              }
-            }
-            val fu = put(c.ups, "cdcu")
-            val fd = put(c.delKeys, "cdcd")
-            val fp = put(c.pre, "cdcp")
-            for (u <- fu; dl <- fd; pr <- fp) yield (
-              (u.toSeq ++ dl.toSeq ++ pr.toSeq).map(r => new Path(dir, r)),
-              if (u.isEmpty && dl.isEmpty && pr.isEmpty) None
-              // pre-images append a 4th field; without them the line
-              // stays 3-field — byte-identical to pre-round-11 commits
-              else Some(s"$CdcTag${u.getOrElse("-")}|${dl.getOrElse("-")}|" +
-                c.keyCols.mkString(",") +
-                pr.map(p => s"|$p").getOrElse("")))
-        }
-        val files = Await.result(fFiles, Duration.Inf)
-        val (cdcDirs, cdcLine) = Await.result(fCdc, Duration.Inf)
         val stats = statsMetaLines(spark, dir, rel, files, baseStatsCols)
         StagedRewrite(prevSet, touched, rel, files, dataDir, cdcDirs,
           cdcLine, stats, schemaLine, colmapLines, conflict, baseStatsCols)

@@ -150,6 +150,70 @@ object GraftPlanBridge {
       data.asNullable, None, new parquet.ParquetFileFormat, Map.empty)(cs)))
   }
 
+  /** On-disk bytes of the files `df`'s file relations scan, from their
+    * file indexes' statuses: no file system call. */
+  def scannedFileBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case execution.datasources.LogicalRelation(
+          r: execution.datasources.HadoopFsRelation, _, _, _, _) =>
+        r.location.sizeInBytes
+    }.sum
+
+  /** `df.collect()` without the conversion to external rows: the
+    * executed plan's rows, collected as one SQL execution. The driver
+    * holds the tasks' compressed result blocks; the iterator decodes one
+    * independent row at a time, so a caller keeps only what it copies
+    * out. */
+  def collectInternal(df: DataFrame): Iterator[catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollectIterator()._2)
+  }
+
+  /** Writes `rows` of `schema` as ONE parquet file in directory `dir`, on
+    * the calling thread, with Spark's own parquet writer: the writer
+    * factory `ParquetFileFormat.prepareWrite` makes for a write task,
+    * under the session's Hadoop conf, so codec, footer metadata (Spark's
+    * row schema included) and checksum siblings are a write task's. No
+    * job, committer or `_temporary` directory: the file is created in
+    * place, named as a task would name it. Returns the file's name. A
+    * failed write deletes the file it began. */
+  def writeParquetFile(spark: SparkSession, dir: String,
+      schema: types.StructType,
+      rows: Iterator[catalyst.InternalRow]): String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID,
+      TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val job = Job.getInstance(cs.sessionState.newHadoopConf())
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[catalyst.InternalRow])
+    org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+      .setOutputPath(job, new Path(dir))
+    val factory = new execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(cs, job, Map.empty, schema)
+    val jobId = java.util.UUID.randomUUID()
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID(jobId.toString.take(8), 0),
+        TaskType.MAP, 0), 0))
+    val name = s"part-00000-$jobId-c000${factory.getFileExtension(ctx)}"
+    val file = new Path(dir, name)
+    var writer: Option[execution.datasources.OutputWriter] = None
+    try {
+      writer = Some(factory.newInstance(file.toString, schema, ctx))
+      rows.foreach(writer.get.write)
+      writer.get.close()
+    } catch {
+      case t: Throwable =>
+        writer.foreach(w =>
+          try w.close() catch { case s: Throwable => t.addSuppressed(s) })
+        file.getFileSystem(job.getConfiguration).delete(file, false)
+        throw t
+    }
+    name
+  }
+
   /** By name, what the `observe(name, …)` nodes in `df`'s CACHED plan
     * collected — final once an action over `df` has ended. Unlike an
     * `Observation`: no listener-bus wait, and no session-wide observation

@@ -307,6 +307,12 @@ class LayoutSpec extends SparkSpec {
     // before the manifest PUT: an orphan data dir at the next version
     Seq((5, "GHOST")).toDF("k", "s")
       .write.parquet(s"$dir/data/v00000002-deadbeef")
+    // and a driver writer dying mid-file: a parquet body with no footer
+    val torn = new java.io.File(s"$dir/data/v00000002-0badf00d",
+      s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
+    torn.getParentFile.mkdirs()
+    java.nio.file.Files.write(torn.toPath,
+      "PAR1".getBytes("US-ASCII") ++ Array.fill[Byte](64)(7))
     assert(Layout.snapshotRead(spark, dir).as[(Int, String)]
       .collect().toMap.apply(5) === "a5", "orphan rewrite leaked into a read")
     // a fresh merge attempt commits cleanly at the SAME version number
@@ -325,6 +331,28 @@ class LayoutSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       s"$dir/data/v00000002-deadbeef")), "orphan merge data not swept")
+    assert(!torn.getParentFile.exists(), "torn driver-written file not swept")
+  }
+
+  test("snapshotMergeInto: a failed driver write deletes every directory it began") {
+    val dir = tmpDir("snapmergefail") + "/t"
+    Layout.snapshotAppend((1 to 20).map(i => (i, s"a$i")).toDF("k", "s"), dir)
+    val dataDirs = new java.io.File(s"$dir/data")
+    val before = dataDirs.list().toSet
+    // a codec with no class on the classpath: the parquet writer starts
+    // the file, then fails to make its compressor
+    val codec = "spark.sql.parquet.compression.codec"
+    val was = spark.conf.getOption(codec)
+    spark.conf.set(codec, "brotli")
+    try intercept[Exception](Layout.snapshotMergeInto(spark, dir,
+      Seq((5, "UPD"), (30, "new")).toDF("k", "s"), Seq("k")))
+    finally was.fold(spark.conf.unset(codec))(spark.conf.set(codec, _))
+    assert(dataDirs.list().toSet === before, "a failed write left data behind")
+    assert(Layout.snapshotVersions(spark, dir) === Seq(1L))
+    assert(Layout.snapshotMergeInto(spark, dir,
+      Seq((5, "UPD"), (30, "new")).toDF("k", "s"), Seq("k")) === 2L)
+    assert(Layout.snapshotRead(spark, dir).as[(Int, String)].collect().toMap ===
+      ((1 to 20).map(i => i -> s"a$i") ++ Seq(5 -> "UPD", 30 -> "new")).toMap)
   }
 
   test("snapshotMergeInto racing a concurrent append loses no rows either way") {

@@ -77,27 +77,27 @@ class JobCountSpec extends SparkSpec {
     assertBound("one upsert with tombstones", jobs, 2)
   }
 
-  test("an upsert whose candidate files pass 4 MiB keeps the executor writes: at most 5 jobs") {
+  test("an upsert whose candidate files pass 1 MiB keeps the executor writes: at most 5 jobs") {
     import org.apache.spark.sql.functions.{col, sha2}
-    // ~150k incompressible 64-char values: well past the driver's 4 MiB
+    // 60k incompressible 64-char values: well past the driver's 1 MiB
     // bound on candidate bytes, so the rewrite and change records stay
     // Spark write jobs
-    val rows = spark.range(1, 150001).select(col("id").cast("int").as("k"),
+    val rows = spark.range(1, 60001).select(col("id").cast("int").as("k"),
       sha2(col("id").cast("string"), 256).as("v"))
     val dir = tmpDir("jobs-merge-big") + "/t"
     assert(SnapshotSink.mergeOnce(rows, 0L, dir, Seq("k")))
     val onDisk = org.apache.commons.io.FileUtils.sizeOfDirectory(
       new java.io.File(s"$dir/data"))
-    assert(onDisk > (4L << 20), s"table holds only $onDisk bytes")
+    assert(onDisk > (2L << 20), s"table holds only $onDisk bytes")
     val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(
-      Seq((5, "x"), (150001, "y")).toDF("k", "v"), 1L, dir, Seq("k"))))
+      Seq((5, "x"), (60001, "y")).toDF("k", "v"), 1L, dir, Seq("k"))))
     assertBound("one upsert into large files", jobs, 5)
     assert(jobs.size > 2, "large candidate files took the driver writes:" +
       SparkJobs.labels(jobs))
     val got = graft.Tables.snapshot(spark, dir)
-    assert(got.count() === 150001L)
-    assert(got.filter(col("k").isin(5, 150001)).as[(Int, String)].collect()
-      .sorted.toSeq === Seq((5, "x"), (150001, "y")))
+    assert(got.count() === 60001L)
+    assert(got.filter(col("k").isin(5, 60001)).as[(Int, String)].collect()
+      .sorted.toSeq === Seq((5, "x"), (60001, "y")))
     assert(got.filter(col("k") === 6).as[(Int, String)].head()._2.length === 64)
   }
 }

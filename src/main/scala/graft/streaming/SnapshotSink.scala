@@ -97,7 +97,7 @@ object SnapshotSink {
   def appendOnce(batch: DataFrame, batchId: Long, dir: String,
       statsCols: Seq[String] = Nil,
       branch: Option[String] = None): Boolean =
-    unlessReplay(batch.sparkSession, batchId, dir, branch) {
+    unlessReplay(batch.sparkSession, batchId, dir, branch) { _ =>
       branch match {
         case Some(b) =>
           Layout.snapshotBranchAppend(batch, dir, b,
@@ -160,7 +160,7 @@ object SnapshotSink {
       deleteCol: Option[String] = None,
       preImages: Boolean = false): Boolean = {
     val spark = batch.sparkSession
-    unlessReplay(spark, batchId, dir) {
+    unlessReplay(spark, batchId, dir) { marked =>
       val folded0 = seqCol match {
         case None => batch
         case Some(seq) =>
@@ -192,7 +192,9 @@ object SnapshotSink {
             Some(folded0.filter(isDel)
               .select(keyCols.map(col): _*)))
       }
-      if (Layout.snapshotLatestVersion(spark, dir).isEmpty) {
+      // a committed batch marker proves the table exists: only an
+      // unmarked table pays a second lookup to tell bootstrap from merge
+      if (!marked && Layout.snapshotLatestVersion(spark, dir).isEmpty) {
         // the bootstrap append must uphold the merge's unique-key
         // contract — a duplicate admitted here would silently persist
         // until some later batch happens to touch the key
@@ -231,10 +233,10 @@ object SnapshotSink {
     * marker (descending lazy probe, O(1) GETs), no-op a replay, fail
     * loudly on a batchId regression deeper than engine recovery can
     * produce, and run `commit` (which must attach `batch=<batchId>` to
-    * its manifest) otherwise. */
+    * its manifest) otherwise, telling it whether a marker was found. */
   private def unlessReplay(spark: org.apache.spark.sql.SparkSession,
       batchId: Long, dir: String,
-      branch: Option[String] = None)(commit: => Unit): Boolean = {
+      branch: Option[String] = None)(commit: Boolean => Unit): Boolean = {
     val newest = Layout.snapshotNewestMeta(spark, dir, BatchTag, branch)
       .map(_.stripPrefix(BatchTag).toLong)
     newest match {
@@ -246,7 +248,7 @@ object SnapshotSink {
             "checkpoint or a second writer; refusing to silently drop " +
             "the batch as a replay")
       case Some(n) if batchId <= n => false
-      case _ => commit; true
+      case _ => commit(newest.isDefined); true
     }
   }
 }

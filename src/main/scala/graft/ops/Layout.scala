@@ -3308,8 +3308,8 @@ object Layout {
             }
             (touched, rows, Option.when(nUpd > 0 || matched.nonEmpty)(CdcData(
               Option.when(nUpd > 0)(DriverRows(updOut.schema, ups)),
-              Option.when(matched.nonEmpty)(DriverRows(StructType(
-                candidates.get.select(keyCols.map(col): _*).schema), matched)),
+              Option.when(matched.nonEmpty)(DriverRows(
+                candidates.get.select(keyCols.map(col): _*).schema, matched)),
               keyCols, pre = pre)))
           }
           // Otherwise a key-column probe finds the touched files and the
@@ -3350,6 +3350,8 @@ object Layout {
               if (touched.isEmpty && nUpd == 0) None
               else if (touched.isEmpty) Some(updCached.select(outCols: _*))
               else {
+                // a touched file's rows that match no change key — a NULL
+                // key included, as under left_anti
                 val survivors = exact.fold(
                   reader(touched).join(dropKeys, keyCols, "left_anti"))(p =>
                   reader(touched).filter(!coalesce(p, lit(false))))

@@ -187,10 +187,6 @@ object GraftPlanBridge {
     import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
     val cs = spark.asInstanceOf[classic.SparkSession]
     val job = Job.getInstance(cs.sessionState.newHadoopConf())
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[catalyst.InternalRow])
-    org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
-      .setOutputPath(job, new Path(dir))
     val factory = new execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(cs, job, Map.empty, schema)
     val jobId = java.util.UUID.randomUUID()

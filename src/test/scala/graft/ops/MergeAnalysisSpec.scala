@@ -43,24 +43,44 @@ class MergeAnalysisSpec extends SparkSpec {
   }
 
   test("a NULL-key table row survives an upsert of its file") {
-    val dir = tmpDir("merge-nullkey") + "/t"
-    Layout.snapshotAppend(Seq((Some(1), "a1"), (None, "n"), (Some(2), "a2"))
-      .toDF("k", "s").repartition(1), dir, statsCols = Seq("k"))
-    Layout.snapshotMergeInto(spark, dir, Seq((Some(1), "U")).toDF("k", "s"),
-      Seq("k"), deletes = Some(Seq(2).toDF("k")))
-    assert(Layout.snapshotRead(spark, dir).as[(Option[Int], String)]
-      .collect().toMap === Map(Some(1) -> "U", None -> "n"))
-    // composite key: a row NULL in either key part matches no change key
-    val ck = tmpDir("merge-nullkey-ck") + "/t"
-    Layout.snapshotAppend(Seq[(Option[String], Option[Int], String)](
-      (Some("a"), Some(1), "x"), (Some("a"), None, "n1"), (None, Some(1), "n2"))
-      .toDF("g", "k", "s").repartition(1), ck)
-    Layout.snapshotMergeInto(spark, ck,
-      Seq[(Option[String], Option[Int], String)]((Some("a"), Some(1), "U"))
-        .toDF("g", "k", "s"), Seq("g", "k"))
-    assert(Layout.snapshotRead(spark, ck)
-      .as[(Option[String], Option[Int], String)].collect().toSet === Set(
-        (Some("a"), Some(1), "U"), (Some("a"), None, "n1"), (None, Some(1), "n2")))
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{lit, sha2}
+    // `big` pads the file with 60k incompressible rows (keys from 1000),
+    // past the driver's 1 MiB bound on candidate bytes: the survivors are
+    // then the Spark rewrite's filter, not the driver's, and the merge
+    // runs that write job as its third
+    def file(rows: DataFrame, big: Boolean, keys: org.apache.spark.sql.Column*) =
+      (if (!big) rows else rows.unionByName(spark.range(1000, 61000)
+        .select(keys :+ sha2(col("id").cast("string"), 256).as("s"): _*)))
+        .repartition(1)
+    def merge(big: Boolean)(body: => Long): Unit = {
+      val jobs = SparkJobs.jobsOf(spark)(body)
+      assert((jobs.size > 2) === big, s"big = $big:" + SparkJobs.labels(jobs))
+    }
+    def live(dir: String) = Layout.snapshotRead(spark, dir)
+      .filter(col("k").isNull || col("k") < 1000)
+    Seq(false, true).foreach { big =>
+      val dir = tmpDir("merge-nullkey") + "/t"
+      Layout.snapshotAppend(file(Seq((Some(1), "a1"), (None, "n"), (Some(2), "a2"))
+        .toDF("k", "s"), big, col("id").cast("int").as("k")), dir,
+        statsCols = Seq("k"))
+      merge(big)(Layout.snapshotMergeInto(spark, dir,
+        Seq((Some(1), "U")).toDF("k", "s"), Seq("k"),
+        deletes = Some(Seq(2).toDF("k"))))
+      assert(live(dir).as[(Option[Int], String)].collect().toMap ===
+        Map(Some(1) -> "U", None -> "n"))
+      // composite key: a row NULL in either key part matches no change key
+      val ck = tmpDir("merge-nullkey-ck") + "/t"
+      Layout.snapshotAppend(file(Seq[(Option[String], Option[Int], String)](
+        (Some("a"), Some(1), "x"), (Some("a"), None, "n1"), (None, Some(1), "n2"))
+        .toDF("g", "k", "s"), big, lit("p").as("g"), col("id").cast("int").as("k")),
+        ck)
+      merge(big)(Layout.snapshotMergeInto(spark, ck,
+        Seq[(Option[String], Option[Int], String)]((Some("a"), Some(1), "U"))
+          .toDF("g", "k", "s"), Seq("g", "k")))
+      assert(live(ck).as[(Option[String], Option[Int], String)].collect().toSet ===
+        Set((Some("a"), Some(1), "U"), (Some("a"), None, "n1"), (None, Some(1), "n2")))
+    }
   }
 
   test("a change set spread over 4 partitions is analysed in one job") {

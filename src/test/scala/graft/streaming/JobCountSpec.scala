@@ -14,9 +14,10 @@ import graft.SparkJobs.Job
   * probe collect, the driver writing the rewrite and both change records
   * (15, 10, then 5 jobs before); a change that adds a job fails here
   * first. Composite keys and tombstones take the same path; candidate
-  * files past the driver's byte bound keep the executor writes. Parquet
-  * schema-inference jobs (`parquet at …`, a one-task footer read) must
-  * not come back at all. */
+  * files past the driver's byte bound add one job, the Spark write of
+  * the rewrite, while the driver still writes the change records.
+  * Parquet schema-inference jobs (`parquet at …`, a one-task footer
+  * read) must not come back at all. */
 class JobCountSpec extends SparkSpec {
   import spark.implicits._
 
@@ -77,11 +78,12 @@ class JobCountSpec extends SparkSpec {
     assertBound("one upsert with tombstones", jobs, 2)
   }
 
-  test("an upsert whose candidate files pass 1 MiB keeps the executor writes: at most 5 jobs") {
+  test("an upsert whose candidate files pass 1 MiB: 3 jobs (analysis, probe, rewrite)") {
     import org.apache.spark.sql.functions.{col, sha2}
     // 60k incompressible 64-char values: well past the driver's 1 MiB
-    // bound on candidate bytes, so the rewrite and change records stay
-    // Spark write jobs
+    // bound on candidate bytes, so the probe collects only the hit rows
+    // and the rewrite is a Spark write job; the change records are
+    // written from the driver
     val rows = spark.range(1, 60001).select(col("id").cast("int").as("k"),
       sha2(col("id").cast("string"), 256).as("v"))
     val dir = tmpDir("jobs-merge-big") + "/t"
@@ -91,8 +93,8 @@ class JobCountSpec extends SparkSpec {
     assert(onDisk > (2L << 20), s"table holds only $onDisk bytes")
     val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(
       Seq((5, "x"), (60001, "y")).toDF("k", "v"), 1L, dir, Seq("k"))))
-    assertBound("one upsert into large files", jobs, 5)
-    assert(jobs.size > 2, "large candidate files took the driver writes:" +
+    assertBound("one upsert into large files", jobs, 3)
+    assert(jobs.size === 3, "large candidate files took the driver rewrite:" +
       SparkJobs.labels(jobs))
     val got = graft.Tables.snapshot(spark, dir)
     assert(got.count() === 60001L)

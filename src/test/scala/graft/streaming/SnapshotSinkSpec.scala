@@ -72,6 +72,14 @@ class SnapshotSinkSpec extends SparkSpec {
     val mergeReads = Layout.manifestReads.get() - before3
     assert(mergeReads <= 2,
       s"one mergeOnce upsert read $mergeReads manifests")
+    // an empty micro-batch on the same history: the replay probe's GET
+    // and the no-op's latest-version lookup, not one GET per version
+    val before4 = Layout.manifestReads.get()
+    assert(SnapshotSink.mergeOnce(Seq.empty[Int].toDF("v"), 14L, dir,
+      Seq("v")))
+    val emptyReads = Layout.manifestReads.get() - before4
+    assert(emptyReads <= 2,
+      s"one empty mergeOnce read $emptyReads manifests")
   }
 
   test("appendOnce: a batchId far below the newest marker fails loudly") {

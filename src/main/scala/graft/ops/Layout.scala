@@ -2934,10 +2934,12 @@ object Layout {
   }
 
 
-  /** On-disk bytes of candidate files at or under which an exact merge
-    * runs on the driver (collects the candidates' rows, writes the
-    * rewrite and change records itself); SCALE.md "Driver-written small
-    * upserts" gives the memory bound. */
+  /** On-disk bytes of candidate files at or under which an exact merge's
+    * probe collects the candidates' rows whole and the driver writes the
+    * rewrite; past it the probe collects only the hit rows and the
+    * rewrite is a Spark write job. The driver writes the change records
+    * either way. SCALE.md "Driver-written small upserts" gives the
+    * memory bound. */
   private val DriverMergeMaxBytes = 1L << 20
 
   /** FILE-GRANULAR copy-on-write MERGE (upsert): every row of `updates`
@@ -2959,10 +2961,12 @@ object Layout {
     *     files overlapping the update's keys, not the corpus;
     *  2. a probe of the candidates finds the files with a REAL match,
     *     and the matched keys: for a small change set with
-    *     driver-comparable keys, ONE collect — of small candidates'
-    *     full rows with a hit flag, else of the
-    *     `(_metadata.file_path, key…)` rows an exact key predicate
-    *     admits; otherwise a semi-join against the change keys;
+    *     driver-comparable keys, ONE collect of table rows with their
+    *     file and a hit flag under an exact key predicate — small
+    *     candidates whole, larger ones only the rows the predicate
+    *     admits — from which the driver derives the touched files, the
+    *     matched keys and the pre-images; otherwise a semi-join against
+    *     the change keys;
     *  3. touched files are rewritten as (their rows matching no change
     *     key — the null-safe negation of the exact predicate, else an
     *     anti-join) ∪ updates; every untouched file is carried
@@ -3000,16 +3004,17 @@ object Layout {
     * binary-collated strings, that job takes at most InMax + 1 update
     * rows (whole) and tombstone keys per partition to the driver, and
     * the probe is one collect with no broadcast, join, shuffle or cache.
-    * When the candidate files also hold at most 1 MiB on disk, that
-    * collect brings their full rows with a hit flag, and the DRIVER
-    * writes the rewrite (one file) and the change records with Spark's
-    * parquet writer — no write job, committer or listing: a streaming
-    * upsert runs 2 jobs (analysis and probe). Larger candidates take a
-    * key-column probe and Spark write jobs for the rewrite and the
-    * change records (5 jobs). Floating-point and collated keys, and
-    * change sets past the threshold, keep the executor-side grouping
-    * and the semi-join probe. The probe and rewrite read under the
-    * footer-derived table schema, with no schema-inference job. */
+    * The DRIVER then writes the change records with Spark's parquet
+    * writer — no write job, committer or listing. When the candidate
+    * files also hold at most 1 MiB on disk, the collect brings their
+    * full rows and the driver writes the rewrite too (one file): a
+    * streaming upsert runs 2 jobs (analysis and probe). Larger
+    * candidates add one Spark write job for the rewrite (3 jobs).
+    * Floating-point and collated keys, tombstones typed unlike the
+    * table's keys, and change sets past the threshold keep the
+    * executor-side grouping, the semi-join probe and Spark write jobs.
+    * The probe and rewrite read under the footer-derived table schema,
+    * with no schema-inference job. */
   def snapshotMergeInto(spark: SparkSession, dir: String,
       updates: DataFrame, keyCols: Seq[String],
       meta: Seq[String] = Nil,
@@ -3146,7 +3151,7 @@ object Layout {
       // tombstones may legitimately repeat — they dedupe to a key SET
       val nDel = nOf(Some(true)); val ndDel = ndOf(Some(true))
       if (nUpd == 0 && nDel == 0)
-        return snapshotVersions(spark, dir).lastOption
+        return snapshotLatestVersion(spark, dir)
           .getOrElse(sys.error(s"no committed snapshot at $dir")) // no-op
       require(ndOf(None) == ndUpd + ndDel,
         "snapshotMergeInto: a key appears in BOTH updates and deletes — " +
@@ -3245,18 +3250,39 @@ object Layout {
           // snapshotUpdateWhere's default-on): merge apply latency is the
           // CDC pipeline's tracked floor.
           type Staged = (Seq[String], Option[StageRows], Option[CdcData])
-          // Small candidates under an exact predicate: ONE collect of the
-          // candidates' full rows, each with its file and a hit flag, gives
-          // the driver the touched files, the survivors (no hit — a NULL
-          // key included, as under left_anti), the matched keys and the
-          // pre-images; the driver writes the rewrite (survivors ∪
-          // updates, one file) and the change records, each under the
-          // schema the executor path would write it with
-          def mergeOnDriver(p: Column): Staged = {
+          val updOut = updCached.select(outCols: _*)
+          // touched files rewritten by a Spark write job: `survivors`
+          // (their rows matching no change key) ∪ updates. The rewrite's
+          // file count stays near the touched count: the union's
+          // partitioning (touched files + the batch's own partitions)
+          // would otherwise GROW the file census on EVERY merge of a long
+          // CDC stream, inflating every later probe/scan — coalesce is
+          // shuffle-free; the small floor keeps write parallelism on
+          // small tables
+          def rewriteJob(touched: Seq[String], survivors: DataFrame): StageRows = {
+            val kept = survivors.select(outCols: _*)
+            FrameRows((if (nUpd == 0) kept else kept.unionByName(updOut))
+              .coalesce(math.max(touched.size, 8)))
+          }
+          // Under an exact predicate ONE collect brings the driver table
+          // rows with their file and a hit flag: small candidates whole,
+          // larger ones only the rows the predicate itself admits (so
+          // row-group skipping applies), at most one per change key. The
+          // driver derives touched files, matched keys and pre-images and
+          // writes every change record; the rewrite is its survivors (no
+          // hit — a NULL key included, as under left_anti) ∪ updates when
+          // the candidates came whole, else a Spark write job.
+          def mergeExact(p: Column): Staged = {
+            val whole = candidates.forall(c =>
+              org.apache.spark.sql.GraftPlanBridge.scannedFileBytes(c) <=
+                DriverMergeMaxBytes)
             val n = tableSchema.size
-            val probe = candidates.map(_.select(outCols ++ Seq(
-              col("_metadata.file_path").as("_gfile"),
-              coalesce(p, lit(false)).as("_ghit")): _*))
+            val probe = candidates.map { c =>
+              val rows = c.select(outCols ++ Seq(
+                col("_metadata.file_path").as("_gfile"),
+                coalesce(p, lit(false)).as("_ghit")): _*)
+              if (whole) rows else rows.filter(p)
+            }
             def project(fields: Seq[(Int, DataType)]) = UnsafeProjection.create(
               fields.map { case (i, t) => BoundReference(i, t, true) })
             def ordinal(s: StructType, name: String) =
@@ -3284,9 +3310,7 @@ object Layout {
                 else noHit(f) += row
               })
             val touched = hitFiles.toSeq.map(f => relOfFilePath(paths(f)))
-            val survivors = hitFiles.toSeq.flatMap(noHit)
             val readSchema = probe.map(d => StructType(d.schema.take(n)))
-            val updOut = updCached.select(outCols: _*)
             val ups = {
               val toTable = project(tableSchema.map { f =>
                 val i = ordinal(updCached.schema, f.name)
@@ -3298,9 +3322,11 @@ object Layout {
               val i = ordinal(tableSchema, k); i -> tableSchema(i).dataType })
             val matched = hits.map(hitKey(_).copy()).distinct.toSeq
             val rows =
-              if (touched.isEmpty && nUpd == 0) None
-              else if (touched.isEmpty) Some(DriverRows(updOut.schema, ups))
-              else Some(DriverRows(readSchema.get, survivors ++ ups))
+              if (touched.isEmpty) Option.when(nUpd > 0)(DriverRows(updOut.schema, ups))
+              else if (whole)
+                Some(DriverRows(readSchema.get, hitFiles.toSeq.flatMap(noHit) ++ ups))
+              else Some(rewriteJob(touched,
+                reader(touched).filter(!coalesce(p, lit(false)))))
             val pre = Option.when(preImages && touched.nonEmpty && nUpd > 0) {
               val updated = updRows.map(updKey(_).copy()).toSet
               DriverRows(readSchema.get,
@@ -3312,77 +3338,40 @@ object Layout {
                 candidates.get.select(keyCols.map(col): _*).schema, matched)),
               keyCols, pre = pre)))
           }
-          // Otherwise a key-column probe finds the touched files and the
-          // matched keys: under an exact predicate ONE collect of the
-          // matching (file, key) rows, no join; else a semi-join against
-          // the change keys. The file path is materialized BEFORE any
-          // join: a file-backed probe partner would make `_metadata`
-          // ambiguous after it. The rewrite and the change records are
-          // Spark write jobs.
+          // Otherwise a semi-join of the candidates' (file, key) rows
+          // against the change keys finds the touched files and the
+          // matched keys. The file path is materialized BEFORE the join: a
+          // file-backed probe partner would make `_metadata` ambiguous
+          // after it. The rewrite and the change records are Spark write
+          // jobs.
           def mergeOnExecutors(): Staged = {
             val (touched, matchedKeys) = candidates match {
               case None => (Nil, None)
               case Some(c) =>
-                // row-group skipping hint; exactness is the exact
-                // predicate or the semi-join
-                val scan = c.select(col("_metadata.file_path").as("_gfile") +:
+                // the conflict predicate is a row-group skipping hint;
+                // the semi-join is exact
+                val p = c.select(col("_metadata.file_path").as("_gfile") +:
                     keyCols.map(col): _*)
-                  .filter(exact.orElse(conflict).get)
-                exact match {
-                  case Some(_) =>
-                    val hits = scan.collect()
-                    val keys = hits.map(r => Row.fromSeq(r.toSeq.tail)).distinct
-                    (hits.map(r => relOfFilePath(r.getString(0))).distinct.toSeq,
-                      // the dropped-key record as ONE file: a local relation
-                      // would spread it over defaultParallelism partitions
-                      Option.when(keys.nonEmpty)(spark.createDataFrame(
-                        java.util.Arrays.asList(keys: _*),
-                        StructType(scan.schema.tail)).coalesce(1)))
-                  case None =>
-                    val p = scan.join(dropKeys, keyCols, "left_semi").persist()
-                    probed = Some(p)
-                    val files = probeTouchedFiles(p)
-                    (files, Option.when(files.nonEmpty)(
-                      p.select(keyCols.map(col): _*).distinct()))
-                }
+                  .filter(conflict.get)
+                  .join(dropKeys, keyCols, "left_semi").persist()
+                probed = Some(p)
+                val files = probeTouchedFiles(p)
+                (files, Option.when(files.nonEmpty)(
+                  p.select(keyCols.map(col): _*).distinct()))
             }
             val rows =
-              if (touched.isEmpty && nUpd == 0) None
-              else if (touched.isEmpty) Some(updCached.select(outCols: _*))
-              else {
-                // a touched file's rows that match no change key — a NULL
-                // key included, as under left_anti
-                val survivors = exact.fold(
-                  reader(touched).join(dropKeys, keyCols, "left_anti"))(p =>
-                  reader(touched).filter(!coalesce(p, lit(false))))
-                  .select(outCols: _*)
-                // bound the rewrite's file count near the touched count:
-                // the union's partitioning (touched files + the batch's
-                // own partitions) would otherwise GROW the file census on
-                // EVERY merge of a long CDC stream, inflating every later
-                // probe/scan — coalesce is shuffle-free; the small floor
-                // keeps write parallelism on small tables
-                Some((if (nUpd == 0) survivors
-                  else survivors.unionByName(updCached.select(outCols: _*)))
-                  .coalesce(math.max(touched.size, 8)))
-              }
+              if (touched.isEmpty) Option.when(nUpd > 0)(FrameRows(updOut))
+              else Some(rewriteJob(touched,
+                reader(touched).join(dropKeys, keyCols, "left_anti")))
             // the pre side is one more semi-join scan of the touched files
-            val pre =
-              if (!preImages || touched.isEmpty || nUpd == 0) None
-              else Some(reader(touched)
-                .join(updKeys, keyCols, "left_semi")
-                .select(outCols: _*))
-            (touched, rows.map(FrameRows),
-              Option.when(nUpd > 0 || matchedKeys.nonEmpty)(CdcData(
-                Option.when(nUpd > 0)(FrameRows(updCached.select(outCols: _*))),
-                matchedKeys.map(FrameRows), keyCols, pre = pre.map(FrameRows))))
+            val pre = Option.when(preImages && touched.nonEmpty && nUpd > 0)(
+              FrameRows(reader(touched).join(updKeys, keyCols, "left_semi")
+                .select(outCols: _*)))
+            (touched, rows, Option.when(nUpd > 0 || matchedKeys.nonEmpty)(CdcData(
+              Option.when(nUpd > 0)(FrameRows(updOut)),
+              matchedKeys.map(FrameRows), keyCols, pre = pre)))
           }
-          val (touched, rows, cdc) = exact.filter(_ => candidates.forall(c =>
-              org.apache.spark.sql.GraftPlanBridge.scannedFileBytes(c) <=
-                DriverMergeMaxBytes)) match {
-            case Some(p) => mergeOnDriver(p)
-            case None => mergeOnExecutors()
-          }
+          val (touched, rows, cdc) = exact.fold(mergeOnExecutors())(mergeExact)
           (touched, rows, cdc, conflict)
       }
     } finally (pins ++ probed).foreach(_.unpersist())
@@ -3408,18 +3397,6 @@ object Layout {
     s"${p.getParent.getParent.getName}/${p.getParent.getName}/${p.getName}"
   }
 
-  /** Optimistic FILE-GRANULAR commit (shared by [[snapshotDeleteWhere]]
-    * and [[snapshotMergeInto]]): `touch(base, readerOf, tableSchema)`
-    * names the manifest-relative files to REPLACE, the frame of
-    * replacement rows, and (optionally) the commit's [[CdcData]] change
-    * record — persisted to its own `-cdcu`/`-cdcd` data directories and
-    * recorded as a `cdc=` manifest line so [[snapshotChangesTyped]] can
-    * replay the commit row-level. Every untouched file of `base` is
-    * carried forward byte-identical WITH its stats line, and
-    * replacement files get fresh stats over the same tracked column
-    * set. Losing the version race re-probes against the new base (a
-    * concurrent append's files are never dropped); a racer that loses
-    * to us carries our manifest forward on its retry. */
   /** The staged products of one file-granular attempt, retained across
     * a lost commit race for the VALIDATE-AND-RETRY fast path: an
     * expensive rewrite (a merge re-derives for seconds — analysis,
@@ -3442,6 +3419,19 @@ object Layout {
       schemaLine: Option[String], colmapLines: Seq[String],
       conflict: Option[Column], baseStatsCols: Seq[String])
 
+  /** Optimistic FILE-GRANULAR commit (shared by [[snapshotDeleteWhere]],
+    * [[snapshotUpdateWhere]] and [[snapshotMergeInto]]):
+    * `touch(base, readerOf, tableSchema)` names the manifest-relative
+    * files to REPLACE, the replacement rows, and (optionally) the
+    * commit's [[CdcData]] change record — persisted to its own
+    * `-cdcu`/`-cdcd`/`-cdcp` data directories and recorded as a `cdc=`
+    * manifest line so [[snapshotChangesTyped]] can replay the commit
+    * row-level. Every untouched file of `base` is carried forward
+    * byte-identical WITH its stats line, and replacement files get
+    * fresh stats over the same tracked column set. Losing the version
+    * race re-probes against the new base (a concurrent append's files
+    * are never dropped); a racer that loses to us carries our manifest
+    * forward on its retry. */
   private def commitFileGranular(spark: SparkSession, dir: String,
       op: String, metaOf: (Seq[String], Int) => Seq[String])(
       touch: (Manifest, Seq[String] => DataFrame,
@@ -3599,7 +3589,7 @@ object Layout {
   }
 
   /** Optimistic commit of a snapshot DERIVED from the newest committed
-    * version (shared by [[snapshotCompact]] / [[snapshotDeleteWhere]]):
+    * version (used by [[snapshotCompact]]):
     * stage `derive(base)`'s data, then create the manifest at the next
     * free version. LOSING the race (another writer committed meanwhile)
     * discards the staged data and re-derives against the new base — a

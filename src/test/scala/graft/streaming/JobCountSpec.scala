@@ -91,11 +91,26 @@ class JobCountSpec extends SparkSpec {
     val onDisk = org.apache.commons.io.FileUtils.sizeOfDirectory(
       new java.io.File(s"$dir/data"))
     assert(onDisk > (2L << 20), s"table holds only $onDisk bytes")
-    val jobs = SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(
+    // the probe's scan schemas, seen by a listener on the bus the job
+    // record drains
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (name == "collect") probes.add(qe.executedPlan.toString)
+      def onFailure(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs = try SparkJobs.jobsOf(spark)(assert(SnapshotSink.mergeOnce(
       Seq((5, "x"), (60001, "y")).toDF("k", "v"), 1L, dir, Seq("k"))))
+    finally spark.listenerManager.unregister(listener)
     assertBound("one upsert into large files", jobs, 3)
     assert(jobs.size === 3, "large candidate files took the driver rewrite:" +
       SparkJobs.labels(jobs))
+    // without pre-images the probe decodes the key column only, not `v`
+    assert(probes.size === 1)
+    assert(probes.peek().contains("ReadSchema: struct<k:int>"), probes.peek())
     val got = graft.Tables.snapshot(spark, dir)
     assert(got.count() === 60001L)
     assert(got.filter(col("k").isin(5, 60001)).as[(Int, String)].collect()

@@ -2936,9 +2936,9 @@ object Layout {
 
   /** On-disk bytes of candidate files at or under which an exact merge's
     * probe collects the candidates' rows whole and the driver writes the
-    * rewrite; past it the probe collects only the hit rows and the
-    * rewrite is a Spark write job. The driver writes the change records
-    * either way. SCALE.md "Driver-written small upserts" gives the
+    * rewrite; past it the probe collects only the hit rows (their key
+    * columns, unless pre-images need them whole) and the rewrite is a
+    * Spark write job. The driver writes the change records either way. SCALE.md "Driver-written small upserts" gives the
     * memory bound. */
   private val DriverMergeMaxBytes = 1L << 20
 
@@ -2964,9 +2964,9 @@ object Layout {
     *     driver-comparable keys, ONE collect of table rows with their
     *     file and a hit flag under an exact key predicate — small
     *     candidates whole, larger ones only the rows the predicate
-    *     admits — from which the driver derives the touched files, the
-    *     matched keys and the pre-images; otherwise a semi-join against
-    *     the change keys;
+    *     admits (only their keys without pre-images) — from which the
+    *     driver derives the touched files, the matched keys and the
+    *     pre-images; otherwise a semi-join against the change keys;
     *  3. touched files are rewritten as (their rows matching no change
     *     key — the null-safe negation of the exact predicate, else an
     *     anti-join) ∪ updates; every untouched file is carried
@@ -3267,30 +3267,35 @@ object Layout {
           // Under an exact predicate ONE collect brings the driver table
           // rows with their file and a hit flag: small candidates whole,
           // larger ones only the rows the predicate itself admits (so
-          // row-group skipping applies), at most one per change key. The
-          // driver derives touched files, matched keys and pre-images and
-          // writes every change record; the rewrite is its survivors (no
-          // hit — a NULL key included, as under left_anti) ∪ updates when
-          // the candidates came whole, else a Spark write job.
+          // row-group skipping applies), at most one per change key, and
+          // only their key columns unless pre-images need them whole (the
+          // scan then decodes just the key columns of the row groups it
+          // keeps). The driver derives touched files, matched keys and
+          // pre-images and writes every change record; the rewrite is its
+          // survivors (no hit — a NULL key included, as under left_anti)
+          // ∪ updates when the candidates came whole, else a Spark write
+          // job.
           def mergeExact(p: Column): Staged = {
             val whole = candidates.forall(c =>
               org.apache.spark.sql.GraftPlanBridge.scannedFileBytes(c) <=
                 DriverMergeMaxBytes)
-            val n = tableSchema.size
+            def ordinal(s: StructType, name: String) =
+              s.fieldNames.indexWhere(_.equalsIgnoreCase(name))
+            val read = StructType(
+              if (whole || preImages && nUpd > 0) tableSchema
+              else keyCols.map(k => tableSchema(ordinal(tableSchema, k))))
+            val n = read.size
             val probe = candidates.map { c =>
-              val rows = c.select(outCols ++ Seq(
+              val rows = c.select(read.fieldNames.toSeq.map(col) ++ Seq(
                 col("_metadata.file_path").as("_gfile"),
                 coalesce(p, lit(false)).as("_ghit")): _*)
               if (whole) rows else rows.filter(p)
             }
             def project(fields: Seq[(Int, DataType)]) = UnsafeProjection.create(
               fields.map { case (i, t) => BoundReference(i, t, true) })
-            def ordinal(s: StructType, name: String) =
-              s.fieldNames.indexWhere(_.equalsIgnoreCase(name))
-            val tableRow = project(tableSchema.map(_.dataType).zipWithIndex
-              .map(_.swap))
-            // the rows are kept as table rows, grouped by file: the path
-            // is held once per file, not once per row
+            val readRow = project(read.map(_.dataType).zipWithIndex.map(_.swap))
+            // the rows are kept as read, grouped by file: the path is
+            // held once per file, not once per row
             val paths = scala.collection.mutable.ArrayBuffer.empty[String]
             val fileOf = scala.collection.mutable.HashMap.empty[
               org.apache.spark.unsafe.types.UTF8String, Int]
@@ -3305,7 +3310,7 @@ object Layout {
                   noHit += scala.collection.mutable.ArrayBuffer.empty
                   paths.size - 1
                 })
-                val row = tableRow(r).copy()
+                val row = readRow(r).copy()
                 if (r.getBoolean(n + 1)) { hits += row; hitFiles += f }
                 else noHit(f) += row
               })
@@ -3319,7 +3324,7 @@ object Layout {
               updRows.map(toTable(_).copy())
             }
             val hitKey = project(keyCols.map { k =>
-              val i = ordinal(tableSchema, k); i -> tableSchema(i).dataType })
+              val i = ordinal(read, k); i -> read(i).dataType })
             val matched = hits.map(hitKey(_).copy()).distinct.toSeq
             val rows =
               if (touched.isEmpty) Option.when(nUpd > 0)(DriverRows(updOut.schema, ups))

@@ -2938,8 +2938,8 @@ object Layout {
     * probe collects the candidates' rows whole and the driver writes the
     * rewrite; past it the probe collects only the hit rows (their key
     * columns, unless pre-images need them whole) and the rewrite is a
-    * Spark write job. The driver writes the change records either way. SCALE.md "Driver-written small upserts" gives the
-    * memory bound. */
+    * Spark write job. The driver writes the change records either way.
+    * SCALE.md "Driver-written small upserts" gives the memory bound. */
   private val DriverMergeMaxBytes = 1L << 20
 
   /** FILE-GRANULAR copy-on-write MERGE (upsert): every row of `updates`

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Synthesizes N raw breadcrumb JSON records (deterministic), lands them
   * as JSONL, then drains them through the full batch path — schema-on-read
-  * parse → transform → validate → trip dedup + anti-join insert →
+  * parse → transform → validate → trip dedup + insert-if-absent →
   * date-partitioned parquet append — and prints one JSON line with
   * records/sec. Usage: runMain graft.ctran.EtlBench [nRecords]
   */
@@ -39,9 +39,8 @@ object EtlBench {
 
       val t0 = System.nanoTime()
       val raw = spark.read.schema(Schemas.rawBreadcrumb).json(in)
-      val (consumed, inserted, skipped) = Load.ingest(spark, raw, s"$dir/trip") {
-        bc => Load.insertBreadcrumbs(bc, s"$dir/bc"); true
-      }
+      val (consumed, inserted, skipped) =
+        Load.ingest(spark, raw, s"$dir/trip", Load.AppendTo(s"$dir/bc"))
       val sec = (System.nanoTime() - t0) / 1e9
       Result(consumed / sec, consumed, inserted, skipped, sec)
     } finally

@@ -1,7 +1,14 @@
 package graft.ctran
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, InterpretedOrdering, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.io.{DataWriter, DriverRows}
 
 /** Batch load paths (reference load_inserts.py / update_inserts.py) onto
   * Parquet-backed tables.
@@ -11,9 +18,11 @@ import org.apache.spark.sql.functions._
   * at 100 TB this is the difference between scanning one service day and
   * scanning the fleet's history. Trip is a single small dimension table.
   *
-  * Idempotency: the reference's `ON CONFLICT DO NOTHING` becomes a
-  * left-anti join against existing keys (J3) — the Spark-native
-  * insert-if-absent. The stop-event path is the reference's keyed UPDATE
+  * Idempotency: the reference's `ON CONFLICT DO NOTHING` becomes an
+  * insert of only the trips the Trip table does not hold yet (J3): a
+  * small batch probes the table for its own trip ids and the driver
+  * writes the rest, a large one left-anti joins against the existing
+  * keys ([[ingest]]). The stop-event path is the reference's keyed UPDATE
   * (J2) as a MERGE-shaped join + full dimension rewrite (fine at Trip
   * scale). Its O(batch) form is the snapshot table's file-granular MERGE:
   * [[graft.streaming.SnapshotSink.mergeOnce]] →
@@ -27,24 +36,71 @@ object Load {
   def readRawJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", value = true).schema(Schemas.rawBreadcrumb).json(path)
 
+  /** Where [[ingest]] puts a batch's breadcrumbs. */
+  sealed trait BreadcrumbSink
+
+  /** A plain append to the `opd_date`-partitioned table at `dir`
+    * ([[insertBreadcrumbs]]' layout). */
+  final case class AppendTo(dir: String) extends BreadcrumbSink
+
+  /** Any other write of the breadcrumb frame (with `opd_date`); returns
+    * false when it wrote nothing (an exactly-once replay). */
+  final case class WriteWith(write: DataFrame => Boolean) extends BreadcrumbSink
+
+  /** Validated rows of a batch at or under which [[ingest]] inserts from
+    * the driver. SCALE.md "Driver-written micro-batch inserts" gives the
+    * crossover it comes from. */
+  private[graft] val DriverIngestMaxRows = 1 << 15
+
   /** The one ingest body of [[loadFile]] and [[graft.streaming.StreamEtl]]:
     * transform → validate → idempotent trip insert → breadcrumb `sink`.
     * The validated rows are persisted once (and released however the call
-    * ends), so both writes share one read of `raw`. The counters come from
+    * ends), so every read shares one read of `raw`. The counters come from
     * one observation ([[graft.streaming.Metrics.observed]]) before the
-    * validity filter, collected when the trip insert every call runs
-    * builds the cache — no counting job. `sink` returns false when it
-    * wrote nothing (an exactly-once replay): consumed, not inserted. */
-  def ingest(spark: SparkSession, raw: DataFrame, tripDir: String)(
-      sink: DataFrame => Boolean): (Long, Long, Long) = {
+    * validity filter, collected when the first job builds the cache — no
+    * counting job. Returns (consumed, inserted, skipped); a sink that
+    * wrote nothing inserted nothing.
+    *
+    * A small batch runs at most two jobs. The first builds the cache and,
+    * while the batch holds at most `DriverIngestMaxRows` validated rows,
+    * brings them to the driver, which picks each trip's first crumb in
+    * `Transform.toTrips`' order. When that leaves at most
+    * [[graft.ops.Layout.InMax]] trips, the second probes the Trip table's
+    * files for those trip ids (skipped while the table has none), and
+    * the driver writes the fresh trips as one file and an [[AppendTo]]
+    * sink's breadcrumbs as one file per `opd_date=` directory
+    * ([[DataWriter.writeFiles]]). A larger batch takes the Spark path
+    * over the same cache: a left-anti insert ([[insertTrips]]) and a
+    * partitioned append ([[insertBreadcrumbs]]). Every job is described,
+    * and its stages named, `graft:ingest:<phase>`. */
+  def ingest(spark: SparkSession, raw: DataFrame, tripDir: String,
+      sink: BreadcrumbSink): (Long, Long, Long) = {
     graft.io.LocalFs.ensureInstalled(spark)
     val valid = graft.streaming.Metrics
       .observed(Transform.enrich(raw), "ingest", Transform.isValid)
       .filter(Transform.isValid).persist()
     try {
-      insertTrips(spark, Transform.toTrips(valid), tripDir)
-      val wrote = sink(Transform.toBreadcrumbs(valid)
-        .withColumn("opd_date", to_date(col("tstamp"))))
+      val bc = Transform.toBreadcrumbs(valid)
+        .withColumn("opd_date", to_date(col("tstamp")))
+      val wrote = phase(spark, "collect")(collectSmall(valid))
+        .filter(_.trips.rows.size <= graft.ops.Layout.InMax) match {
+        case Some(b) =>
+          insertTripRows(spark, b.trips, tripDir)
+          sink match {
+            case AppendTo(dir) =>
+              DataWriter.writeFiles(spark, b.crumbs.map { case (part, rows) =>
+                new Path(dir, part) -> rows })
+              true
+            case WriteWith(write) => phase(spark, "bc-write")(write(bc))
+          }
+        case None =>
+          phase(spark, "trip-write")(
+            insertTrips(spark, Transform.toTrips(valid), tripDir))
+          phase(spark, "bc-write")(sink match {
+            case AppendTo(dir) => insertBreadcrumbs(bc, dir); true
+            case WriteWith(write) => write(bc)
+          })
+      }
       val m = GraftPlanBridge.cachedObservedMetrics(valid)("ingest")
       val consumed = m.getAs[Long]("consumed")
       val inserted = if (wrote) m.getAs[Long]("kept") else 0L
@@ -52,7 +108,85 @@ object Load {
     } finally { valid.unpersist(); () }
   }
 
-  /** Idempotent append of new trips (insert-if-absent on the PK). */
+  /** A small batch on the driver: each trip's first crumb, and the
+    * breadcrumbs by their `opd_date=` directory name. */
+  private final case class Collected(trips: DriverRows,
+      crumbs: Seq[(String, DriverRows)])
+
+  /** The cache-building job: the validated rows while there are at most
+    * `DriverIngestMaxRows`, as breadcrumb rows under Spark's
+    * partition-path encoding of their `opd_date` and as trip rows, one
+    * per trip: its first crumb by [[Transform.firstCrumbOrder]], bound
+    * to the collected columns by Spark's analyzer. Both keep the
+    * collected columns' types and nullability, which are what the
+    * Spark path writes. */
+  private def collectSmall(valid: DataFrame): Option[Collected] = {
+    val frame = valid.select(Transform.breadcrumbColumns ++
+      (to_date(col("tstamp")).cast("string").as("_opd_date") +:
+        Transform.tripColumns): _*)
+    GraftPlanBridge.collectBounded(frame, DriverIngestMaxRows).map { rows =>
+      val part = Transform.breadcrumbColumns.size
+      val crumbSchema = StructType(frame.schema.take(part))
+      val tripSchema = StructType(frame.schema.drop(part + 1))
+      def project(from: Int, s: StructType) = UnsafeProjection.create(
+        s.zipWithIndex.map { case (f, i) =>
+          BoundReference(from + i, f.dataType, f.nullable) })
+      val (crumb, trip) = (project(0, crumbSchema), project(part + 1, tripSchema))
+      val order = frame.orderBy(Transform.firstCrumbOrder: _*)
+        .queryExecution.analyzed.collectFirst { case s: Sort =>
+          new InterpretedOrdering(BindReferences.bindReferences(s.order, s.child.output))
+        }.get
+      val tripId = crumbSchema.fieldIndex("trip_id")
+      val first = rows.groupBy(_.getInt(tripId)).toSeq.sortBy(_._1)
+        .map(_._2.min(order))
+      val dirs = rows.groupBy(r => ExternalCatalogUtils.getPartitionPathString(
+          "opd_date", if (r.isNullAt(part)) null else r.getUTF8String(part).toString))
+        .toSeq.sortBy(_._1)
+      Collected(DriverRows(tripSchema, first.map(trip(_).copy())),
+        dirs.map { case (d, rs) => d -> DriverRows(crumbSchema, rs.map(crumb(_).copy())) })
+    }
+  }
+
+  /** The driver form of [[insertTrips]]: `trips` minus those the table
+    * already holds, found by ONE exact `trip_id IN (…)` probe over one
+    * listing of `tripDir` (row-group skipping applies; no probe while the
+    * table has no data file), written as one file. Writes nothing when
+    * every trip exists, except into a table with no data file: there an
+    * empty file makes the table readable, as a Spark write would. */
+  private def insertTripRows(spark: SparkSession, trips: DriverRows,
+      tripDir: String): Unit = {
+    val dir = new Path(tripDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val files =
+      try fs.listStatus(dir).toSeq.filter(s =>
+        s.isFile && DataWriter.isDataFile(s.getPath.getName))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val id = trips.schema.fieldIndex("trip_id")
+    val existing =
+      if (files.isEmpty || trips.rows.isEmpty) Set.empty[Int]
+      else phase(spark, "probe")(GraftPlanBridge.collectInternal(
+        GraftPlanBridge.parquetStatuses(spark, files, StructType(Seq(trips.schema(id))))
+          .filter(col("trip_id").isin(trips.rows.map(_.getInt(id)): _*)))
+        .map(_.getInt(0)).toSet)
+    val fresh = trips.rows.filterNot(r => existing(r.getInt(id)))
+    if (fresh.nonEmpty || files.isEmpty)
+      DataWriter.writeFiles(spark, Seq(dir -> DriverRows(trips.schema, fresh)))
+    ()
+  }
+
+  /** Runs `body` with the Spark jobs it starts described, and their
+    * stages named, `graft:ingest:<name>` (the job description and the
+    * short call site), then restores the caller's. */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = Seq("spark.job.description", "callSite.short")
+      .map(k => k -> sc.getLocalProperty(k))
+    caller.foreach { case (k, _) => sc.setLocalProperty(k, s"graft:ingest:$name") }
+    try body finally caller.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  /** Idempotent append of new trips (insert-if-absent on the PK): a
+    * left-anti join against the existing keys and a Spark write. */
   def insertTrips(spark: SparkSession, trips: DataFrame, tripDir: String): Unit = {
     val fresh =
       if (tableExists(spark, tripDir)) {
@@ -63,8 +197,8 @@ object Load {
   }
 
   /** Append breadcrumbs partitioned by service date. The streaming path is
-    * at-least-once (reference parity, SURVEY §1.4); exact-once arrives via
-    * the checkpointed stream + this same writer in foreachBatch. */
+    * at-least-once (reference parity, SURVEY §1.4); exact-once is
+    * [[graft.streaming.StreamEtl.runExactlyOnce]]'s sink. */
   def insertBreadcrumbs(bc: DataFrame, bcDir: String): Unit =
     bc.write.mode(SaveMode.Append).partitionBy("opd_date").parquet(bcDir)
 
@@ -73,9 +207,7 @@ object Load {
     * (consumed = inserted + skipped) from observed metrics. */
   def loadFile(spark: SparkSession, jsonPath: String,
       bcDir: String, tripDir: String): (Long, Long, Long) =
-    ingest(spark, readRawJson(spark, jsonPath), tripDir) { bc =>
-      insertBreadcrumbs(bc, bcDir); true
-    }
+    ingest(spark, readRawJson(spark, jsonPath), tripDir, AppendTo(bcDir))
 
   /** Keyed update of Trip from stop events (J2, stop_consumer.py:76-78):
     * match on (trip_id, vehicle_id, service_key), set route_id/direction.

@@ -96,11 +96,24 @@ object Transform {
     (col("speed").isNull || col("speed").between(0, 200)) &&         // F4
     col("tstamp") <= col("svc_date").cast("timestamp") + expr("INTERVAL 2 DAYS") // F5
 
+  /** P6 — the BreadCrumb fact columns of an enriched row. */
+  val breadcrumbColumns: Seq[Column] = Seq(
+    col("tstamp"), col("latitude"), col("longitude"),
+    col("direction"), col("speed"), col("trip_id"))
+
   /** P6 — project the enriched stream to the BreadCrumb fact schema. */
   def toBreadcrumbs(enriched: DataFrame): DataFrame =
-    enriched.select(
-      col("tstamp"), col("latitude"), col("longitude"),
-      col("direction"), col("speed"), col("trip_id"))
+    enriched.select(breadcrumbColumns: _*)
+
+  /** P6 — the Trip dimension columns of an enriched row. */
+  val tripColumns: Seq[Column] = Seq(
+    col("trip_id"), col("route_id"), col("vehicle_id"),
+    col("service_key"), col("trip_direction").as("direction"))
+
+  /** The order of a trip's crumbs whose first row is the trip's row
+    * ([[toTrips]]). */
+  val firstCrumbOrder: Seq[Column] =
+    Seq(col("tstamp").asc_nulls_last, col("service_key"))
 
   /** P6 — project to the Trip dimension (one row per distinct trip —
     * the reference's set-dedup, A2).
@@ -116,11 +129,8 @@ object Transform {
   def toTrips(enriched: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("trip_id"))
-      .orderBy(col("tstamp").asc_nulls_last, col("service_key"))
-    enriched.select(
-        col("trip_id"), col("route_id"), col("vehicle_id"),
-        col("service_key"), col("trip_direction").as("direction"),
-        col("tstamp"))
+      .orderBy(firstCrumbOrder: _*)
+    enriched.select(tripColumns :+ col("tstamp"): _*)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn", "tstamp")

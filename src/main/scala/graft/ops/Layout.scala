@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.{DataWriter, DriverRows, FrameRows, StageRows}
+import graft.io.DataWriter.dataFiles
 import graft.ops.SnapshotManifest._
 
 /** Physical-layout tools for 100 TB joins: bucketing (co-located joins —
@@ -169,14 +171,6 @@ object Layout {
     df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
     (rel, dataFiles(df.sparkSession, dataDir))
   }
-
-  /** The data files Spark wrote into `dataDir`, sorted (markers and
-    * hidden files excluded). */
-  private def dataFiles(spark: SparkSession, dataDir: Path): Seq[String] =
-    dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dataDir).map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .sorted.toSeq
 
   /** [[SnapshotManifest.existsConflictMessage]]: does an IOException
     * message read as a create-once existence conflict? */
@@ -1476,15 +1470,6 @@ object Layout {
   private[ops] final case class CdcData(ups: Option[StageRows],
       delKeys: Option[StageRows], keyCols: Seq[String],
       pre: Option[StageRows] = None)
-
-  /** Rows a file-granular commit stages as one data directory: a frame
-    * Spark writes in a write job, or rows already on the driver, which
-    * the driver writes as ONE file with no job
-    * ([[org.apache.spark.sql.GraftPlanBridge.writeParquetFile]]). */
-  private[ops] sealed trait StageRows
-  private[ops] final case class FrameRows(df: DataFrame) extends StageRows
-  private[ops] final case class DriverRows(schema: StructType,
-      rows: Seq[InternalRow]) extends StageRows
 
   /** MERGE-ON-READ row deletion: commit a parquet file of KEY TUPLES and
     * a `delete=` manifest line — zero data files touched, O(keys) write —
@@ -2942,6 +2927,12 @@ object Layout {
     * SCALE.md "Driver-written small upserts" gives the memory bound. */
   private val DriverMergeMaxBytes = 1L << 20
 
+  /** The IN-list threshold: a change set with at most this many keys a
+    * side is analysed on the driver and probed by IN lists of its keys
+    * (a larger one by key ranges). The micro-batch ingest probes the
+    * Trip table by the same bound ([[graft.ctran.Load.ingest]]). */
+  private[graft] val InMax = 1024
+
   /** FILE-GRANULAR copy-on-write MERGE (upsert): every row of `updates`
     * whose `keyCols` match an existing row REPLACES it; every other
     * updates row is INSERTED — `MERGE WHEN MATCHED UPDATE / WHEN NOT
@@ -3058,7 +3049,6 @@ object Layout {
       // threshold falls back to a rollup whose per-side rows carry count /
       // distinct-key count / per-key null counts / min-max bounds, and
       // whose grand-total row shows an overlap as |U ∪ D| < |U| + |D|.
-      val InMax = 1024
       // Keys whose Spark equality is the driver values' own equality —
       // integral, boolean, decimal, date/time and binary-collated string
       // keys, typed alike on both sides — are grouped on the DRIVER from
@@ -3534,36 +3524,15 @@ object Layout {
         // the replacement and the commit's change-record sides (`-cdcu`
         // upserts, `-cdcd` dropped keys, `-cdcp` pre-images: own dirs next
         // to the data, named in a cdc= line the typed feed reads) are
-        // independent writes to independent directories — run them
-        // CONCURRENTLY: serially they are a CDC commit's fixed floor
-        // (three write jobs back to back where the slowest alone
-        // suffices). Rows already on the driver are written there as one
-        // file each, with no job. Once every write has settled, a failed
-        // one deletes every directory this attempt wrote and propagates.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        def write(rows: StageRows, to: Path): Seq[String] = rows match {
-          case FrameRows(df) =>
-            df.write.mode(SaveMode.Overwrite).parquet(to.toString)
-            dataFiles(spark, to)
-          case DriverRows(schema, rs) =>
-            Seq(org.apache.spark.sql.GraftPlanBridge.writeParquetFile(
-              spark, to.toString, schema, rs.iterator))
-        }
+        // independent writes to independent directories, written
+        // concurrently; a failed one deletes every directory of the attempt
         val cdcRels = cdcData.toSeq.flatMap(c =>
           Seq("cdcu" -> c.ups, "cdcd" -> c.delKeys, "cdcp" -> c.pre))
           .collect { case (tag, Some(rows)) => s"$rel-$tag" -> rows }
-        val written = (replacement.map(rel -> _).toSeq ++ cdcRels)
-          .map { case (r, rows) => r -> Future(write(rows, new Path(dir, r))) }
-          .map { case (r, f) => r -> Await.ready(f, Duration.Inf).value.get }
-        written.collectFirst { case (_, scala.util.Failure(t)) => t }
-          .foreach { t =>
-            written.foreach { case (r, _) => fs.delete(new Path(dir, r), true) }
-            throw t
-          }
-        val files = written.collectFirst {
-          case (`rel`, scala.util.Success(names)) => names }.getOrElse(Nil)
+        val writes = replacement.map(rel -> _).toSeq ++ cdcRels
+        val files = writes.map(_._1).zip(DataWriter.writeDirs(spark,
+            writes.map { case (r, rows) => new Path(dir, r) -> rows }))
+          .collectFirst { case (`rel`, names) => names }.getOrElse(Nil)
         val cdcDirs = cdcRels.map { case (r, _) => new Path(dir, r) }
         val cdcLine = cdcData.filter(_ => cdcRels.nonEmpty).map { c =>
           def side(tag: String) = cdcRels.map(_._1).find(_ == s"$rel-$tag")

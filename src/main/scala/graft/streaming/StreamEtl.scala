@@ -13,8 +13,10 @@ import graft.ctran.{Load, Schemas}
   * `foreachBatch` + `Trigger.AvailableNow` (drain the backlog, then stop:
   * the same daily-cron contract, T2). Offsets + commit log live in the
   * checkpoint (T3): restarts resume exactly where they left off, and the
-  * anti-join insert keeps the Trip dimension idempotent under replay
-  * (effectively-once, the upgrade over the reference's at-least-once).
+  * insert-if-absent of [[Load.ingest]] (only trip ids the Trip table
+  * does not hold yet are written) keeps the Trip dimension idempotent
+  * under replay (effectively-once, the upgrade over the reference's
+  * at-least-once).
   *
   * Source here is a file stream (the hermetic stand-in the tests drive);
   * swapping `readStream.format("kafka").option("subscribe", …)` +
@@ -31,13 +33,13 @@ object StreamEtl {
   /** Shared pipeline body: each micro-batch runs [[Load.ingest]] (parse →
     * transform → validate → idempotent trip insert, one read of the
     * batch, counters from observed metrics rather than counting jobs)
-    * with the breadcrumb SINK injected — [[run]] and [[runExactlyOnce]]
-    * differ only there, so the transform/validation graph cannot drift
-    * between the two delivery modes, nor from the batch load. The sink
-    * returns whether it durably wrote the batch. */
+    * with the breadcrumb SINK of its batch id injected — [[run]] and
+    * [[runExactlyOnce]] differ only there, so the transform/validation
+    * graph cannot drift between the two delivery modes, nor from the
+    * batch load. */
   private def runWith(spark: SparkSession, inputDir: String,
       tripDir: String, checkpointDir: String, maxFilesPerTrigger: Int)(
-      bcSink: (DataFrame, Long) => Boolean): Counters = {
+      bcSink: Long => Load.BreadcrumbSink): Counters = {
     @volatile var consumed = 0L
     @volatile var inserted = 0L
     // before start(): the stream runs on a clone of the session's conf
@@ -50,7 +52,7 @@ object StreamEtl {
       .option("checkpointLocation", checkpointDir)      // T3: offsets + commits
       .trigger(Trigger.AvailableNow())                  // T2: drain then stop
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (n, ins, _) = Load.ingest(spark, batch, tripDir)(bcSink(_, batchId))
+        val (n, ins, _) = Load.ingest(spark, batch, tripDir, bcSink(batchId))
         consumed += n
         inserted += ins
         ()
@@ -62,19 +64,19 @@ object StreamEtl {
 
   /** Run the streaming ETL over all JSON files in `inputDir`, draining
     * available input then stopping. Batch-local dedup + cross-batch
-    * anti-join parity with the reference (A2 + J3). */
+    * insert-if-absent parity with the reference (A2 + J3). */
   def run(spark: SparkSession, inputDir: String, bcDir: String,
       tripDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10): Counters =
     runWith(spark, inputDir, tripDir, checkpointDir, maxFilesPerTrigger) {
-      (bc, _) => Load.insertBreadcrumbs(bc, bcDir); true
+      _ => Load.AppendTo(bcDir)
     }
 
   /** Exactly-once variant of [[run]]: breadcrumb appends commit through
     * [[IdempotentSink.appendOnce]] (batchId-keyed rename commit), so a
     * micro-batch replayed after a mid-write failure cannot duplicate
     * rows — the at-least-once upgrade the reference's consumer lacks.
-    * Trips were already replay-safe via the anti-join insert. The
+    * Trips were already replay-safe via the insert-if-absent. The
     * breadcrumb table gains the `ingest_batch` partition column (the
     * replay audit handle). A replayed batch still counts as consumed
     * but inserts 0 — its counters come from the trip insert, which runs
@@ -84,7 +86,7 @@ object StreamEtl {
       tripDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10): Counters =
     runWith(spark, inputDir, tripDir, checkpointDir, maxFilesPerTrigger) {
-      (bc, batchId) => IdempotentSink.appendOnce(bc, batchId, bcDir)
+      batchId => Load.WriteWith(IdempotentSink.appendOnce(_, batchId, bcDir))
     }
 
   /** Watermarked dedup variant (T6): drop replayed breadcrumbs within the

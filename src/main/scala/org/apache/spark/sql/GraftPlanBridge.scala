@@ -79,7 +79,8 @@ object GraftPlanBridge {
       plan.collect { case p => p }.forall(_.expressions.forall(exprOk))
   }
 
-  /** Schema of a parquet file (or a directory's first data file by name)
+  /** Schema of a parquet file (or a directory's first data file by name,
+    * skipping `_`-staged and hidden files)
     * read from its footer ON THE DRIVER — no Spark job.
     * `spark.read.parquet(path).schema` (and a schemaless
     * `spark.read.parquet(...)`) run parquet schema inference as a
@@ -101,7 +102,8 @@ object GraftPlanBridge {
     val file =
       if (!fs.getFileStatus(p).isDirectory) p
       else fs.listStatus(p).iterator
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
+          graft.io.DataWriter.isDataFile(s.getPath.getName))
         .map(_.getPath).toSeq.sortBy(_.getName).headOption
         .getOrElse(sys.error(s"parquetSchemaOf: no parquet data file under $p"))
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, hconf)
@@ -123,14 +125,21 @@ object GraftPlanBridge {
     * path that names a directory is listed as the reader lists it. */
   def parquetFiles(spark: SparkSession, paths: Seq[String],
       schema: types.StructType): DataFrame = {
+    val hconf = spark.sessionState.newHadoopConf()
+    parquetStatuses(spark, paths.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      path.getFileSystem(hconf).getFileStatus(path)
+    }, schema)
+  }
+
+  /** [[parquetFiles]] over statuses the caller already holds, from a
+    * listing: no file system call. */
+  def parquetStatuses(spark: SparkSession,
+      statuses: Seq[org.apache.hadoop.fs.FileStatus],
+      schema: types.StructType): DataFrame = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     import execution.datasources._
     val cs = spark.asInstanceOf[classic.SparkSession]
-    val hconf = cs.sessionState.newHadoopConf()
-    val statuses = paths.map { p =>
-      val path = new Path(p)
-      path.getFileSystem(hconf).getFileStatus(path)
-    }
     val known = statuses.filter(_.isFile).map(s => s.getPath ->
       Array(new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize,
         s.getModificationTime, s.getPath))).toMap
@@ -159,6 +168,29 @@ object GraftPlanBridge {
         r.location.sizeInBytes
     }.sum
 
+  /** The rows of `df`'s executed plan, collected in ONE job (a SQL
+    * execution) only while they number at most `maxRows`: each of the
+    * plan's n partitions returns its rows when it holds at most
+    * maxRows / n of them, so the driver never receives more than
+    * `maxRows`. None when a partition held more. Such a partition stops
+    * reading after its share; over a persisted frame the job still
+    * builds the whole cache, since a cached partition is stored whole
+    * before its rows are read. */
+  def collectBounded(df: DataFrame, maxRows: Int)
+      : Option[Seq[catalyst.InternalRow]] = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = qe.executedPlan.execute()
+      val share = maxRows / math.max(1, rdd.getNumPartitions)
+      val parts = rdd.sparkContext.runJob(rdd,
+        (it: Iterator[catalyst.InternalRow]) => {
+          val taken = it.take(share + 1).map(_.copy()).toArray
+          Option.when(taken.length <= share)(taken)
+        })
+      Option.when(parts.forall(_.isDefined))(parts.toSeq.flatMap(_.get))
+    }
+  }
+
   /** `df.collect()` without the conversion to external rows: the
     * executed plan's rows, collected as one SQL execution. The driver
     * holds the tasks' compressed result blocks; the iterator decodes one
@@ -170,23 +202,22 @@ object GraftPlanBridge {
       qe.executedPlan.executeCollectIterator()._2)
   }
 
-  /** Writes `rows` of `schema` as ONE parquet file in directory `dir`, on
-    * the calling thread, with Spark's own parquet writer: the writer
-    * factory `ParquetFileFormat.prepareWrite` makes for a write task,
-    * under the session's Hadoop conf, so codec, footer metadata (Spark's
-    * row schema included) and checksum siblings are a write task's. No
-    * job, committer or `_temporary` directory: the file is created in
-    * place, named as a task would name it. Returns the file's name. A
-    * failed write deletes the file it began. */
-  def writeParquetFile(spark: SparkSession, dir: String,
-      schema: types.StructType,
-      rows: Iterator[catalyst.InternalRow]): String = {
-    import org.apache.hadoop.fs.Path
+  /** Spark's own parquet writer for `schema`, as a write task gets it:
+    * the writer factory `ParquetFileFormat.prepareWrite` makes, under
+    * `hconf` (a session's Hadoop conf), so codec, footer metadata
+    * (Spark's row schema included) and checksum siblings are a write
+    * task's. Returns the file name a write task would give the file and
+    * a function that writes rows as ONE file at a path, on the calling
+    * thread, with no job, committer or `_temporary` directory. A failed
+    * write closes the file and rethrows; it does not delete it. */
+  def parquetOutput(spark: SparkSession,
+      hconf: org.apache.hadoop.conf.Configuration, schema: types.StructType)
+      : (String, (String, Iterator[catalyst.InternalRow]) => Unit) = {
     import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID,
       TaskType}
     import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
     val cs = spark.asInstanceOf[classic.SparkSession]
-    val job = Job.getInstance(cs.sessionState.newHadoopConf())
+    val job = Job.getInstance(hconf)
     val factory = new execution.datasources.parquet.ParquetFileFormat()
       .prepareWrite(cs, job, Map.empty, schema)
     val jobId = java.util.UUID.randomUUID()
@@ -194,20 +225,16 @@ object GraftPlanBridge {
       new TaskAttemptID(new TaskID(new JobID(jobId.toString.take(8), 0),
         TaskType.MAP, 0), 0))
     val name = s"part-00000-$jobId-c000${factory.getFileExtension(ctx)}"
-    val file = new Path(dir, name)
-    var writer: Option[execution.datasources.OutputWriter] = None
-    try {
-      writer = Some(factory.newInstance(file.toString, schema, ctx))
-      rows.foreach(writer.get.write)
-      writer.get.close()
-    } catch {
-      case t: Throwable =>
-        writer.foreach(w =>
-          try w.close() catch { case s: Throwable => t.addSuppressed(s) })
-        file.getFileSystem(job.getConfiguration).delete(file, false)
-        throw t
-    }
-    name
+    (name, (path, rows) => {
+      val writer = factory.newInstance(path, schema, ctx)
+      try rows.foreach(writer.write)
+      catch {
+        case t: Throwable =>
+          try writer.close() catch { case s: Throwable => t.addSuppressed(s) }
+          throw t
+      }
+      writer.close()
+    })
   }
 
   /** By name, what the `observe(name, …)` nodes in `df`'s CACHED plan

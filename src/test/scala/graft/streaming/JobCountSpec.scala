@@ -9,11 +9,14 @@ import graft.SparkJobs.Job
   * `StreamEtl.run` micro-batch and a `SnapshotSink.mergeOnce` upsert.
   * Their fixed cost is mostly Spark jobs, each a scheduling round trip,
   * so the bounds are the counts measured once the counters came from
-  * observed metrics (9 jobs before) and a small change set's rows and
-  * small candidate files stayed on the driver: one analysis job and one
-  * probe collect, the driver writing the rewrite and both change records
-  * (15, 10, then 5 jobs before); a change that adds a job fails here
-  * first. Composite keys and tombstones take the same path; candidate
+  * observed metrics (9 jobs before) and a small batch's or change set's
+  * rows and small candidate files stayed on the driver. A micro-batch
+  * runs the cache-building collect and the Trip probe, the driver
+  * writing the fresh trips and the breadcrumbs (5 jobs before); one past
+  * the driver's row bound keeps the Spark insert and append. An upsert
+  * runs one analysis job and one probe collect, the driver writing the
+  * rewrite and both change records (15, 10, then 5 jobs before); a
+  * change that adds a job fails here first. Composite keys and tombstones take the same path; candidate
   * files past the driver's byte bound add one job, the Spark write of
   * the rewrite, while the driver still writes the change records.
   * Parquet schema-inference jobs (`parquet at …`, a one-task footer
@@ -30,13 +33,13 @@ class JobCountSpec extends SparkSpec {
   private def crumb(trip: Int, act: Int): String =
     s"""{"EVENT_NO_TRIP": "$trip", "OPD_DATE": "05-OCT-20", "ACT_TIME": "$act", "VEHICLE_ID": "4008", "GPS_LATITUDE": "45.52", "GPS_LONGITUDE": "-122.68", "DIRECTION": "117", "VELOCITY": "25"}"""
 
-  test("one StreamEtl.run micro-batch: at most 5 jobs, no schema inference") {
+  test("one StreamEtl.run micro-batch: at most 2 jobs, no schema inference") {
     val dir = tmpDir("jobs-etl")
     val in = s"$dir/in"; new java.io.File(in).mkdirs()
     def put(name: String, rows: Seq[String]) = java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$in/$name"), rows.mkString("\n"))
     // the first run creates the Trip table, so the measured batch pays
-    // the anti-join against existing trips
+    // the probe of existing trips
     put("b1.json", Seq(crumb(1, 3600), crumb(2, 100)))
     StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
     put("b2.json", Seq(crumb(2, 200), crumb(3, 300), crumb(3, 305)))
@@ -44,7 +47,28 @@ class JobCountSpec extends SparkSpec {
       val c = StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
       assert(c === StreamEtl.Counters(3, 3, 0))
     }
-    assertBound("one micro-batch", jobs, 5)
+    assertBound("one micro-batch", jobs, 2)
+    assert(jobs.map(_.label) === Seq("graft:ingest:collect", "graft:ingest:probe"),
+      SparkJobs.labels(jobs))
+  }
+
+  test("a micro-batch past the driver's row bound: at most 5 jobs, no schema inference") {
+    val dir = tmpDir("jobs-etl-big")
+    val in = s"$dir/in"; new java.io.File(in).mkdirs()
+    def put(name: String, rows: Seq[String]) = java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$in/$name"), rows.mkString("\n"))
+    put("b1.json", Seq(crumb(1, 3600), crumb(2, 100)))
+    StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+    val n = graft.ctran.Load.DriverIngestMaxRows + 1
+    put("b2.json", (0 until n).map(i => crumb(2 + i / 500, i % 80000)))
+    val jobs = SparkJobs.jobsOf(spark) {
+      val c = StreamEtl.run(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+      assert(c === StreamEtl.Counters(n, n, 0))
+    }
+    assertBound("one micro-batch past the bound", jobs, 5)
+    assert(jobs.exists(_.label == "graft:ingest:trip-write") &&
+      jobs.exists(_.label == "graft:ingest:bc-write"), SparkJobs.labels(jobs))
+    assert(spark.read.parquet(s"$dir/trip").count() === 2L + (n - 1) / 500)
   }
 
   /** The jobs of one `mergeOnce` upsert of `ups` into a table bootstrapped

@@ -40,7 +40,7 @@ object EtlBench {
       val t0 = System.nanoTime()
       val raw = spark.read.schema(Schemas.rawBreadcrumb).json(in)
       val (consumed, inserted, skipped) =
-        Load.ingest(spark, raw, s"$dir/trip", Load.AppendTo(s"$dir/bc"))
+        Load.ingest(spark, raw, s"$dir/trip", s"$dir/bc", None)
       val sec = (System.nanoTime() - t0) / 1e9
       Result(consumed / sec, consumed, inserted, skipped, sec)
     } finally

@@ -1,7 +1,8 @@
 package graft.ctran
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, InterpretedOrdering, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
@@ -17,6 +18,8 @@ import graft.io.{DataWriter, DriverRows}
   * `opd_date` so the hotspot query's date predicates prune partitions —
   * at 100 TB this is the difference between scanning one service day and
   * scanning the fleet's history. Trip is a single small dimension table.
+  * An exactly-once ingest ([[ingest]] with a batch id) nests the same
+  * layout under `ingest_batch=<id>`, so the date predicates still prune.
   *
   * Idempotency: the reference's `ON CONFLICT DO NOTHING` becomes an
   * insert of only the trips the Trip table does not hold yet (J3): a
@@ -36,30 +39,19 @@ object Load {
   def readRawJson(spark: SparkSession, path: String): DataFrame =
     spark.read.option("multiLine", value = true).schema(Schemas.rawBreadcrumb).json(path)
 
-  /** Where [[ingest]] puts a batch's breadcrumbs. */
-  sealed trait BreadcrumbSink
-
-  /** A plain append to the `opd_date`-partitioned table at `dir`
-    * ([[insertBreadcrumbs]]' layout). */
-  final case class AppendTo(dir: String) extends BreadcrumbSink
-
-  /** Any other write of the breadcrumb frame (with `opd_date`); returns
-    * false when it wrote nothing (an exactly-once replay). */
-  final case class WriteWith(write: DataFrame => Boolean) extends BreadcrumbSink
-
   /** Validated rows of a batch at or under which [[ingest]] inserts from
     * the driver. SCALE.md "Driver-written micro-batch inserts" gives the
     * crossover it comes from. */
   private[graft] val DriverIngestMaxRows = 1 << 15
 
   /** The one ingest body of [[loadFile]] and [[graft.streaming.StreamEtl]]:
-    * transform → validate → idempotent trip insert → breadcrumb `sink`.
-    * The validated rows are persisted once (and released however the call
-    * ends), so every read shares one read of `raw`. The counters come from
-    * one observation ([[graft.streaming.Metrics.observed]]) before the
-    * validity filter, collected when the first job builds the cache — no
-    * counting job. Returns (consumed, inserted, skipped); a sink that
-    * wrote nothing inserted nothing.
+    * transform → validate → idempotent trip insert → breadcrumb append to
+    * the `opd_date`-partitioned table at `bcDir`. The validated rows are
+    * persisted once (and released however the call ends), so every read
+    * shares one read of `raw`. The counters come from one observation
+    * ([[graft.streaming.Metrics.observed]]) before the validity filter,
+    * collected when the first job builds the cache — no counting job.
+    * Returns (consumed, inserted, skipped).
     *
     * A small batch runs at most two jobs. The first builds the cache and,
     * while the batch holds at most `DriverIngestMaxRows` validated rows,
@@ -67,51 +59,69 @@ object Load {
     * `Transform.toTrips`' order. When that leaves at most
     * [[graft.ops.Layout.InMax]] trips, the second probes the Trip table's
     * files for those trip ids (skipped while the table has none), and
-    * the driver writes the fresh trips as one file and an [[AppendTo]]
-    * sink's breadcrumbs as one file per `opd_date=` directory
-    * ([[DataWriter.writeFiles]]). A larger batch takes the Spark path
-    * over the same cache: a left-anti insert ([[insertTrips]]) and a
-    * partitioned append ([[insertBreadcrumbs]]). Every job is described,
-    * and its stages named, `graft:ingest:<phase>`. */
+    * the driver writes the fresh trips as one file and the breadcrumbs as
+    * one file per `opd_date=` directory ([[DataWriter.writeFiles]]). A
+    * larger batch takes the Spark path over the same cache: a left-anti
+    * insert ([[insertTrips]]) and a partitioned append
+    * ([[insertBreadcrumbs]]). Both paths insert trips against ONE listing
+    * of the Trip table. Every job is described, and its stages named,
+    * `graft:ingest:<phase>`.
+    *
+    * With `batchId = Some(id)` the append is exactly-once. Whichever
+    * writer the batch takes writes its breadcrumbs into the hidden
+    * directory `.staging-ingest_batch-<id>` (cleared first: a crashed try
+    * may have left it), and one directory rename commits them as
+    * `ingest_batch=<id>`, so readers get the batch id as a partition
+    * column above `opd_date`. A crash before the rename leaves nothing
+    * visible. When `ingest_batch=<id>` exists the batch is a replay: the
+    * trip insert runs as on any batch, no breadcrumb is written, and it
+    * inserts 0. A batch with no valid row commits one empty file under
+    * the null `opd_date` partition, so the table reads even when every
+    * batch so far was empty. */
   def ingest(spark: SparkSession, raw: DataFrame, tripDir: String,
-      sink: BreadcrumbSink): (Long, Long, Long) = {
+      bcDir: String, batchId: Option[Long]): (Long, Long, Long) = {
     graft.io.LocalFs.ensureInstalled(spark)
     val valid = graft.streaming.Metrics
       .observed(Transform.enrich(raw), "ingest", Transform.isValid)
       .filter(Transform.isValid).persist()
     try {
-      val bc = Transform.toBreadcrumbs(valid)
-        .withColumn("opd_date", to_date(col("tstamp")))
-      val wrote = phase(spark, "collect")(collectSmall(valid))
+      lazy val fs = new Path(bcDir).getFileSystem(spark.sessionState.newHadoopConf())
+      val committed = batchId.map(id => new Path(bcDir, s"ingest_batch=$id"))
+      val replay = committed.exists(fs.exists)
+      val out = batchId.fold(new Path(bcDir))(id =>
+        new Path(bcDir, s".staging-ingest_batch-$id"))
+      if (committed.isDefined && !replay) fs.delete(out, true)
+      val trips = tripFiles(spark, tripDir)
+      phase(spark, "collect")(collectSmall(valid))
         .filter(_.trips.rows.size <= graft.ops.Layout.InMax) match {
         case Some(b) =>
-          insertTripRows(spark, b.trips, tripDir)
-          sink match {
-            case AppendTo(dir) =>
-              DataWriter.writeFiles(spark, b.crumbs.map { case (part, rows) =>
-                new Path(dir, part) -> rows })
-              true
-            case WriteWith(write) => phase(spark, "bc-write")(write(bc))
-          }
+          insertTripRows(spark, b.trips, tripDir, trips)
+          val dirs = if (b.crumbs.isEmpty && committed.isDefined)
+            Seq(ExternalCatalogUtils.getPartitionPathString("opd_date", null) -> Nil)
+          else b.crumbs
+          if (!replay) DataWriter.writeFiles(spark, dirs.map { case (part, rows) =>
+            new Path(out, part) -> DriverRows(b.crumbSchema, rows) })
         case None =>
           phase(spark, "trip-write")(
-            insertTrips(spark, Transform.toTrips(valid), tripDir))
-          phase(spark, "bc-write")(sink match {
-            case AppendTo(dir) => insertBreadcrumbs(bc, dir); true
-            case WriteWith(write) => write(bc)
-          })
+            insertTrips(spark, Transform.toTrips(valid), tripDir, trips))
+          if (!replay) phase(spark, "bc-write")(insertBreadcrumbs(
+            Transform.toBreadcrumbs(valid).withColumn("opd_date", to_date(col("tstamp"))),
+            out.toString))
       }
+      if (!replay) committed.foreach(to =>
+        if (!fs.rename(out, to)) sys.error(s"commit rename $out -> $to failed"))
       val m = GraftPlanBridge.cachedObservedMetrics(valid)("ingest")
       val consumed = m.getAs[Long]("consumed")
-      val inserted = if (wrote) m.getAs[Long]("kept") else 0L
+      val inserted = if (replay) 0L else m.getAs[Long]("kept")
       (consumed, inserted, consumed - inserted)
     } finally { valid.unpersist(); () }
   }
 
   /** A small batch on the driver: each trip's first crumb, and the
-    * breadcrumbs by their `opd_date=` directory name. */
+    * breadcrumb rows (of `crumbSchema`) by their `opd_date=` directory
+    * name. */
   private final case class Collected(trips: DriverRows,
-      crumbs: Seq[(String, DriverRows)])
+      crumbSchema: StructType, crumbs: Seq[(String, Seq[InternalRow])])
 
   /** The cache-building job: the validated rows while there are at most
     * `DriverIngestMaxRows`, as breadcrumb rows under Spark's
@@ -142,25 +152,28 @@ object Load {
       val dirs = rows.groupBy(r => ExternalCatalogUtils.getPartitionPathString(
           "opd_date", if (r.isNullAt(part)) null else r.getUTF8String(part).toString))
         .toSeq.sortBy(_._1)
-      Collected(DriverRows(tripSchema, first.map(trip(_).copy())),
-        dirs.map { case (d, rs) => d -> DriverRows(crumbSchema, rs.map(crumb(_).copy())) })
+      Collected(DriverRows(tripSchema, first.map(trip(_).copy())), crumbSchema,
+        dirs.map { case (d, rs) => d -> rs.map(crumb(_).copy()) })
     }
   }
 
-  /** The driver form of [[insertTrips]]: `trips` minus those the table
-    * already holds, found by ONE exact `trip_id IN (…)` probe over one
-    * listing of `tripDir` (row-group skipping applies; no probe while the
-    * table has no data file), written as one file. Writes nothing when
-    * every trip exists, except into a table with no data file: there an
-    * empty file makes the table readable, as a Spark write would. */
-  private def insertTripRows(spark: SparkSession, trips: DriverRows,
-      tripDir: String): Unit = {
+  /** The Trip table's data files, from ONE listing (none while the
+    * directory does not exist): what both trip inserts probe. */
+  private def tripFiles(spark: SparkSession, tripDir: String): Seq[FileStatus] = {
     val dir = new Path(tripDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val files =
-      try fs.listStatus(dir).toSeq.filter(s =>
-        s.isFile && DataWriter.isDataFile(s.getPath.getName))
-      catch { case _: java.io.FileNotFoundException => Nil }
+    try dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir).toSeq
+      .filter(s => s.isFile && DataWriter.isDataFile(s.getPath.getName))
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** The driver form of [[insertTrips]]: `trips` minus those the table's
+    * data `files` already hold, found by ONE exact `trip_id IN (…)` probe
+    * (row-group skipping applies; no probe while the table has no data
+    * file), written as one file. Writes nothing when every trip exists,
+    * except into a table with no data file: there an empty file makes
+    * the table readable, as a Spark write would. */
+  private def insertTripRows(spark: SparkSession, trips: DriverRows,
+      tripDir: String, files: Seq[FileStatus]): Unit = {
     val id = trips.schema.fieldIndex("trip_id")
     val existing =
       if (files.isEmpty || trips.rows.isEmpty) Set.empty[Int]
@@ -170,7 +183,7 @@ object Load {
         .map(_.getInt(0)).toSet)
     val fresh = trips.rows.filterNot(r => existing(r.getInt(id)))
     if (fresh.nonEmpty || files.isEmpty)
-      DataWriter.writeFiles(spark, Seq(dir -> DriverRows(trips.schema, fresh)))
+      DataWriter.writeFiles(spark, Seq(new Path(tripDir) -> DriverRows(trips.schema, fresh)))
     ()
   }
 
@@ -187,18 +200,22 @@ object Load {
 
   /** Idempotent append of new trips (insert-if-absent on the PK): a
     * left-anti join against the existing keys and a Spark write. */
-  def insertTrips(spark: SparkSession, trips: DataFrame, tripDir: String): Unit = {
+  def insertTrips(spark: SparkSession, trips: DataFrame, tripDir: String): Unit =
+    insertTrips(spark, trips, tripDir, tripFiles(spark, tripDir))
+
+  /** [[insertTrips]] against the Trip table's data `files`. */
+  private def insertTrips(spark: SparkSession, trips: DataFrame, tripDir: String,
+      files: Seq[FileStatus]): Unit = {
     val fresh =
-      if (tableExists(spark, tripDir)) {
-        val existing = readTable(spark, tripDir).select("trip_id")
-        trips.join(existing, Seq("trip_id"), "left_anti")
-      } else trips
+      if (files.isEmpty) trips
+      else trips.join(GraftPlanBridge.parquetStatuses(spark, files,
+        StructType(Seq(trips.schema("trip_id")))), Seq("trip_id"), "left_anti")
     fresh.write.mode(SaveMode.Append).parquet(tripDir)
   }
 
   /** Append breadcrumbs partitioned by service date. The streaming path is
-    * at-least-once (reference parity, SURVEY §1.4); exact-once is
-    * [[graft.streaming.StreamEtl.runExactlyOnce]]'s sink. */
+    * at-least-once (reference parity, SURVEY §1.4); exactly-once is
+    * [[ingest]] with a batch id ([[graft.streaming.StreamEtl.runExactlyOnce]]). */
   def insertBreadcrumbs(bc: DataFrame, bcDir: String): Unit =
     bc.write.mode(SaveMode.Append).partitionBy("opd_date").parquet(bcDir)
 
@@ -207,7 +224,7 @@ object Load {
     * (consumed = inserted + skipped) from observed metrics. */
   def loadFile(spark: SparkSession, jsonPath: String,
       bcDir: String, tripDir: String): (Long, Long, Long) =
-    ingest(spark, readRawJson(spark, jsonPath), tripDir, AppendTo(bcDir))
+    ingest(spark, readRawJson(spark, jsonPath), tripDir, bcDir, None)
 
   /** Keyed update of Trip from stop events (J2, stop_consumer.py:76-78):
     * match on (trip_id, vehicle_id, service_key), set route_id/direction.
@@ -268,10 +285,4 @@ object Load {
   /** A plain parquet table under its footer schema: no inference job. */
   private def readTable(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(GraftPlanBridge.parquetSchemaOf(spark, dir)).parquet(dir)
-
-  private def tableExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
 }

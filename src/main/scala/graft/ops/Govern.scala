@@ -194,7 +194,7 @@ object Govern {
     // cascade again" never converges with the same bad argument
     // (review r15)
     corpora.foreach { case (cd, ck) =>
-      require(Layout.snapshotVersions(spark, cd).nonEmpty,
+      require(Layout.snapshotLatestVersion(spark, cd).isDefined,
         s"$op: no committed snapshot at $cd — " +
           "refused BEFORE any index purge")
       viaBranch.foreach(b =>

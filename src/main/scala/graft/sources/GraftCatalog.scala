@@ -124,15 +124,15 @@ class GraftCatalog extends TableCatalog
       .foldLeft(new Path(root))(new Path(_, _)).toString
 
   private def exists(ident: Identifier): Boolean =
-    Layout.snapshotVersions(spark, dirOf(ident)).nonEmpty
+    Layout.snapshotLatestVersion(spark, dirOf(ident)).isDefined
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = namespace.foldLeft(new Path(root))(new Path(_, _))
     val fs = ns.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(ns)) throw new NoSuchNamespaceException(namespace)
     fs.listStatus(ns).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(n => Layout.snapshotVersions(
-        spark, new Path(ns, n).toString).nonEmpty)
+      .filter(n => Layout.snapshotLatestVersion(
+        spark, new Path(ns, n).toString).isDefined)
       .map(Identifier.of(namespace, _))
   }
 

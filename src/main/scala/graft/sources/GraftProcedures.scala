@@ -80,7 +80,7 @@ private[sources] object GraftProcedures {
     def tableDir(input: InternalRow): String = {
       val table = input.getUTF8String(0).toString
       val dir = dirOf(table)
-      require(Layout.snapshotVersions(spark, dir).nonEmpty,
+      require(Layout.snapshotLatestVersion(spark, dir).isDefined,
         s"catalog $catalogName: '$table' is not a committed snapshot " +
           s"table under this catalog's root (resolved to $dir)")
       dir

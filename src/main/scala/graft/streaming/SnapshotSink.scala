@@ -4,17 +4,16 @@ import org.apache.spark.sql.DataFrame
 
 import graft.ops.Layout
 
-/** Exactly-once streaming appends COMMITTED AS TABLE SNAPSHOTS — the
-  * object-store generation of [[IdempotentSink]].
+/** Exactly-once streaming appends COMMITTED AS TABLE SNAPSHOTS.
   *
-  * [[IdempotentSink.appendOnce]] gets exactly-once from an atomic
-  * directory RENAME keyed by batchId — correct on HDFS/POSIX, but
-  * rename is exactly the primitive S3-class stores lack, and its
-  * committed layout is a bare partitioned directory: readers see
+  * [[graft.ctran.Load.ingest]] with a batch id gets exactly-once from
+  * one atomic directory RENAME to `ingest_batch=<id>` — correct on
+  * HDFS/POSIX, but rename is exactly the primitive S3-class stores lack,
+  * and its committed layout is a bare partitioned directory: readers see
   * whatever files exist, with no versioning and no incremental scan.
   * This sink commits every micro-batch through
-  * [[Layout.snapshotAppend]] instead, so one call buys four properties
-  * at once:
+  * [[Layout.snapshotAppend]] instead, so one call buys exactly-once
+  * with no rename, plus three properties a directory rename cannot give:
   *
   *  - **exactly-once under replay**: the batchId travels IN the
   *    manifest (a `batch=<id>` metadata line). `foreachBatch` replays

@@ -31,15 +31,15 @@ object StreamEtl {
   final case class Counters(consumed: Long, inserted: Long, skipped: Long)
 
   /** Shared pipeline body: each micro-batch runs [[Load.ingest]] (parse →
-    * transform → validate → idempotent trip insert, one read of the
-    * batch, counters from observed metrics rather than counting jobs)
-    * with the breadcrumb SINK of its batch id injected — [[run]] and
+    * transform → validate → idempotent trip insert → breadcrumb append,
+    * one read of the batch, counters from observed metrics rather than
+    * counting jobs), given its batch id when `exactlyOnce` — [[run]] and
     * [[runExactlyOnce]] differ only there, so the transform/validation
     * graph cannot drift between the two delivery modes, nor from the
     * batch load. */
-  private def runWith(spark: SparkSession, inputDir: String,
-      tripDir: String, checkpointDir: String, maxFilesPerTrigger: Int)(
-      bcSink: Long => Load.BreadcrumbSink): Counters = {
+  private def runWith(spark: SparkSession, inputDir: String, bcDir: String,
+      tripDir: String, checkpointDir: String, maxFilesPerTrigger: Int,
+      exactlyOnce: Boolean): Counters = {
     @volatile var consumed = 0L
     @volatile var inserted = 0L
     // before start(): the stream runs on a clone of the session's conf
@@ -52,7 +52,8 @@ object StreamEtl {
       .option("checkpointLocation", checkpointDir)      // T3: offsets + commits
       .trigger(Trigger.AvailableNow())                  // T2: drain then stop
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (n, ins, _) = Load.ingest(spark, batch, tripDir, bcSink(batchId))
+        val (n, ins, _) = Load.ingest(spark, batch, tripDir, bcDir,
+          Option.when(exactlyOnce)(batchId))
         consumed += n
         inserted += ins
         ()
@@ -68,26 +69,25 @@ object StreamEtl {
   def run(spark: SparkSession, inputDir: String, bcDir: String,
       tripDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10): Counters =
-    runWith(spark, inputDir, tripDir, checkpointDir, maxFilesPerTrigger) {
-      _ => Load.AppendTo(bcDir)
-    }
+    runWith(spark, inputDir, bcDir, tripDir, checkpointDir, maxFilesPerTrigger,
+      exactlyOnce = false)
 
-  /** Exactly-once variant of [[run]]: breadcrumb appends commit through
-    * [[IdempotentSink.appendOnce]] (batchId-keyed rename commit), so a
-    * micro-batch replayed after a mid-write failure cannot duplicate
-    * rows — the at-least-once upgrade the reference's consumer lacks.
-    * Trips were already replay-safe via the insert-if-absent. The
-    * breadcrumb table gains the `ingest_batch` partition column (the
-    * replay audit handle). A replayed batch still counts as consumed
-    * but inserts 0 — its counters come from the trip insert, which runs
-    * on replay too — so the reconciliation invariant
-    * (consumed = inserted + skipped) keeps holding under replay. */
+  /** Exactly-once variant of [[run]]: each micro-batch's breadcrumbs
+    * commit by one rename to `ingest_batch=<batchId>` ([[Load.ingest]]
+    * with the batch id), so a micro-batch replayed after a mid-write
+    * failure cannot duplicate rows — the at-least-once upgrade the
+    * reference's consumer lacks. Trips were already replay-safe via the
+    * insert-if-absent. The breadcrumb table gains the `ingest_batch`
+    * partition column (the replay audit handle) above `opd_date`. A
+    * replayed batch still counts as consumed but inserts 0 — its
+    * counters come from the trip insert, which runs on replay too — so
+    * the reconciliation invariant (consumed = inserted + skipped) keeps
+    * holding under replay. */
   def runExactlyOnce(spark: SparkSession, inputDir: String, bcDir: String,
       tripDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10): Counters =
-    runWith(spark, inputDir, tripDir, checkpointDir, maxFilesPerTrigger) {
-      batchId => Load.WriteWith(IdempotentSink.appendOnce(_, batchId, bcDir))
-    }
+    runWith(spark, inputDir, bcDir, tripDir, checkpointDir, maxFilesPerTrigger,
+      exactlyOnce = true)
 
   /** Watermarked dedup variant (T6): drop replayed breadcrumbs within the
     * reference's 48 h lateness envelope before they reach the sink. */

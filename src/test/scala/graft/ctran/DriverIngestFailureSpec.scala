@@ -42,9 +42,10 @@ class FaultyLocalFileSystem extends graft.io.NioLocalFileSystem {
 }
 
 /** A driver write of a small micro-batch that throws, on either table,
-  * leaves no visible file and no `_`-staged file behind, and rerunning
-  * the stream from its checkpoint converges: every trip once, every
-  * breadcrumb once. */
+  * leaves no visible file and no `_`-staged file behind, an exactly-once
+  * batch whose commit rename throws leaves no breadcrumb visible, and
+  * rerunning the stream from its checkpoint converges: every trip once,
+  * every breadcrumb once. */
 class DriverIngestFailureSpec extends SparkSpec {
 
   private def crumb(trip: Int, act: Int): String =
@@ -85,9 +86,9 @@ class DriverIngestFailureSpec extends SparkSpec {
     }
   }
 
-  /** The run's failure, asserted to be the injected fault. */
-  private def failed(dir: String): Unit = {
-    val e = intercept[StreamingQueryException](run(dir))
+  /** `run`'s failure, asserted to be the injected fault. */
+  private def failed(run: => StreamEtl.Counters): Unit = {
+    val e = intercept[StreamingQueryException](run)
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("injected")), e)
   }
@@ -106,7 +107,7 @@ class DriverIngestFailureSpec extends SparkSpec {
     put(dir, "b1.json", crumb(1, 3600), crumb(1, 3605), crumb(2, 7200))
     withFaults {
       Faults.close = Some(s"$dir/trip/_part")
-      failed(dir)
+      failed(run(dir))
       assert(visible(s"$dir/trip").isEmpty && staged(s"$dir/trip").isEmpty,
         files(s"$dir/trip"))
       assert(files(s"$dir/bc").isEmpty)
@@ -128,7 +129,7 @@ class DriverIngestFailureSpec extends SparkSpec {
     put(dir, "b2.json", crumb(2, 7300), crumb(3, 86000), crumb(3, 86800))
     withFaults {
       Faults.rename = Some("opd_date=2020-10-06")
-      failed(dir)
+      failed(run(dir))
       assert(visible(s"$dir/bc").toSet === before)
       assert(staged(s"$dir/bc").isEmpty, files(s"$dir/bc"))
       // the Trip insert ran before the breadcrumb write
@@ -139,5 +140,29 @@ class DriverIngestFailureSpec extends SparkSpec {
     assert(tripIds(dir) === Seq(1, 2, 3))
     assert(spark.read.parquet(s"$dir/bc").count() === 5L)
     assert(staged(dir).isEmpty)
+  }
+
+  test("an exactly-once commit rename that throws shows no breadcrumb; a rerun converges") {
+    val dir = tmpDir("ingest-fail-commit")
+    new File(s"$dir/in").mkdirs()
+    def once() = StreamEtl.runExactlyOnce(spark, s"$dir/in", s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+    def crumbs() = spark.read.parquet(s"$dir/bc").collect().map(_.toString).toSeq.sorted
+    put(dir, "b1.json", crumb(1, 3600), crumb(2, 7200))
+    assert(once() === StreamEtl.Counters(2, 2, 0))
+    val before = crumbs()
+    put(dir, "b2.json", crumb(2, 7300), crumb(3, 86000), crumb(3, 86800))
+    withFaults {
+      Faults.rename = Some(s"$dir/bc/ingest_batch=1")
+      failed(once())
+      assert(crumbs() === before)
+      assert(!new File(s"$dir/bc/ingest_batch=1").exists())
+      Faults.rename = None
+      assert(once() === StreamEtl.Counters(3, 3, 0))
+    }
+    assert(tripIds(dir) === Seq(1, 2, 3))
+    val after = crumbs()
+    assert(after.size === 5 && after.distinct.size === 5)
+    assert(after.diff(before).size === 3)
+    assert(new File(s"$dir/bc").list().toSeq.sorted === Seq("ingest_batch=0", "ingest_batch=1"))
   }
 }

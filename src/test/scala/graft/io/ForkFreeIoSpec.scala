@@ -66,6 +66,24 @@ class ForkFreeIoSpec extends SparkSpec {
     }
   }
 
+  test("a 2-slice StreamEtl.runExactlyOnce starts no chmod/readlink/ls/stat process") {
+    val dir = tmpDir("fork-free-etl-once")
+    val in = s"$dir/in"; new java.io.File(in).mkdirs()
+    Files.writeString(Paths.get(s"$in/s1.json"),
+      Seq(crumb(1, 3600), crumb(2, 100)).mkString("\n"))
+    Files.writeString(Paths.get(s"$in/s2.json"),
+      Seq(crumb(2, 200), crumb(3, 300)).mkString("\n"))
+    // each slice stages its breadcrumbs in new directories and commits
+    // them by a directory rename
+    assertNoHelpers("StreamEtl.runExactlyOnce") {
+      val c = StreamEtl.runExactlyOnce(spark, in, s"$dir/bc", s"$dir/trip",
+        s"$dir/ckpt", maxFilesPerTrigger = 1)
+      assert(c === StreamEtl.Counters(4, 4, 0))
+    }
+    assert(new java.io.File(s"$dir/bc").list().toSeq.sorted ===
+      Seq("ingest_batch=0", "ingest_batch=1"))
+  }
+
   test("SnapshotSink.mergeOnce into a new table, then an upsert, starts no chmod/readlink/ls/stat process") {
     val dir = tmpDir("fork-free-merge") + "/t"
     assertNoHelpers("SnapshotSink.mergeOnce") {

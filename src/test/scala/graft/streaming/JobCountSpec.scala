@@ -12,7 +12,8 @@ import graft.SparkJobs.Job
   * observed metrics (9 jobs before) and a small batch's or change set's
   * rows and small candidate files stayed on the driver. A micro-batch
   * runs the cache-building collect and the Trip probe, the driver
-  * writing the fresh trips and the breadcrumbs (5 jobs before); one past
+  * writing the fresh trips and the breadcrumbs (5 jobs before), also
+  * when it commits them exactly-once by a rename (3 before); one past
   * the driver's row bound keeps the Spark insert and append. An upsert
   * runs one analysis job and one probe collect, the driver writing the
   * rewrite and both change records (15, 10, then 5 jobs before); a
@@ -48,6 +49,23 @@ class JobCountSpec extends SparkSpec {
       assert(c === StreamEtl.Counters(3, 3, 0))
     }
     assertBound("one micro-batch", jobs, 2)
+    assert(jobs.map(_.label) === Seq("graft:ingest:collect", "graft:ingest:probe"),
+      SparkJobs.labels(jobs))
+  }
+
+  test("one runExactlyOnce micro-batch: at most 2 jobs, no write job") {
+    val dir = tmpDir("jobs-etl-once")
+    val in = s"$dir/in"; new java.io.File(in).mkdirs()
+    def put(name: String, rows: Seq[String]) = java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$in/$name"), rows.mkString("\n"))
+    put("b1.json", Seq(crumb(1, 3600), crumb(2, 100)))
+    StreamEtl.runExactlyOnce(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+    put("b2.json", Seq(crumb(2, 200), crumb(3, 300), crumb(3, 305)))
+    val jobs = SparkJobs.jobsOf(spark) {
+      val c = StreamEtl.runExactlyOnce(spark, in, s"$dir/bc", s"$dir/trip", s"$dir/ckpt")
+      assert(c === StreamEtl.Counters(3, 3, 0))
+    }
+    assertBound("one exactly-once micro-batch", jobs, 2)
     assert(jobs.map(_.label) === Seq("graft:ingest:collect", "graft:ingest:probe"),
       SparkJobs.labels(jobs))
   }

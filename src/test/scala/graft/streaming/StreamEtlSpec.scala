@@ -122,16 +122,55 @@ class StreamEtlSpec extends SparkSpec {
     assert(bc.count() === 2)
     // the committed layout exposes the producing batch id
     assert(bc.columns.contains("ingest_batch"))
-    // simulate foreachBatch replaying batch 0 after a mid-write failure:
-    // the batchId-keyed commit must skip, leaving the table unchanged
-    val raw = graft.ctran.Load.readRawJson(spark, s"$in/b1.json")
-    val valid = graft.ctran.Transform.enrich(raw)
-      .filter(graft.ctran.Transform.isValid)
-    val replay = graft.ctran.Transform.toBreadcrumbs(valid)
-      .withColumn("opd_date", org.apache.spark.sql.functions.to_date(
-        org.apache.spark.sql.functions.col("tstamp")))
-    assert(IdempotentSink.appendOnce(replay, 0L, s"$dir/bc") === false)
-    assert(spark.read.parquet(s"$dir/bc").count() === 2)
+    // foreachBatch replaying batch 0 after a mid-write failure: the
+    // batchId-keyed commit skips, leaving both tables unchanged
+    def rows(t: String) = spark.read.parquet(s"$dir/$t").collect().map(_.toString).sorted.toSeq
+    val (bcBefore, tripBefore) = (rows("bc"), rows("trip"))
+    val replay = spark.read.schema(graft.ctran.Schemas.rawBreadcrumb).json(s"$in/b1.json")
+    assert(graft.ctran.Load.ingest(spark, replay, s"$dir/trip", s"$dir/bc", Some(0L)) ===
+      ((2L, 0L, 2L)))
+    assert(rows("bc") === bcBefore && rows("trip") === tripBefore)
+  }
+
+  /** Ingests the JSON lines `crumbs` into `<dir>/bc` and `<dir>/trip` as
+    * the exactly-once batch `id`. */
+  private def ingestOnce(dir: String, id: Long, crumbs: String*): (Long, Long, Long) = {
+    writeBatch(dir, s"b$id.json", crumbs)
+    graft.ctran.Load.ingest(spark,
+      spark.read.schema(graft.ctran.Schemas.rawBreadcrumb).json(s"$dir/b$id.json"),
+      s"$dir/trip", s"$dir/bc", Some(id))
+  }
+
+  test("exactly-once ingest: a replayed batch id writes nothing twice") {
+    val dir = tmpDir("exactly-once")
+    val batch = Seq(crumb(1, 3600), crumb(1, 3605), crumb(2, 100))
+    assert(ingestOnce(dir, 7L, batch: _*) === ((3L, 3L, 0L)))
+    assert(ingestOnce(dir, 7L, batch: _*) === ((3L, 0L, 3L))) // replay
+    assert(ingestOnce(dir, 8L, batch: _*) === ((3L, 3L, 0L)))
+    val got = spark.read.parquet(s"$dir/bc")
+    assert(got.count() === 6)
+    // the committed layout IS a partition column, above opd_date
+    assert(got.select("ingest_batch").distinct().as[Int].collect().sorted
+      === Array(7, 8))
+    assert(new java.io.File(s"$dir/bc/ingest_batch=7").list().toSeq
+      === Seq("opd_date=2020-10-05"))
+    assert(got.schema("opd_date").dataType === org.apache.spark.sql.types.DateType)
+  }
+
+  test("exactly-once ingest: a half-written staging dir is hidden, retried") {
+    val dir = tmpDir("exactly-once-crash")
+    ingestOnce(dir, 1L, crumb(1, 3600), crumb(1, 3605))
+    // a crash mid-write of batch 2: its staging directory holds part of
+    // the batch, and nothing is committed
+    spark.read.parquet(s"$dir/bc").drop("ingest_batch", "opd_date").limit(1)
+      .write.parquet(s"$dir/bc/.staging-ingest_batch-2/opd_date=2020-10-05")
+    assert(spark.read.parquet(s"$dir/bc").count() === 2) // hidden from readers
+    // the retry overwrites the junk and commits the whole batch
+    assert(ingestOnce(dir, 2L, crumb(2, 100), crumb(3, 200), crumb(3, 205)) ===
+      ((3L, 3L, 0L)))
+    assert(spark.read.parquet(s"$dir/bc").count() === 5)
+    assert(spark.read.parquet(s"$dir/bc/ingest_batch=2").count() === 3)
+    assert(!new java.io.File(s"$dir/bc/.staging-ingest_batch-2").exists())
   }
 
   test("runExactlyOnce: an in-stream replay counts the batch consumed, inserts 0") {

@@ -1,5 +1,6 @@
 package graft.ctran
 
+import graft.functions.Param
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,20 +17,29 @@ object Analytics {
     * (lat, lon) group key. With the `opd_date` partition layout, the
     * month/day predicates prune to one service day's partitions when
     * expressed on the partition column (done here — SURVEY §7.4.5).
+    *
+    * Vehicle, route, month, day and hours are [[Param]]s, not literals:
+    * a literal is inlined into the generated Java, so every new lookup
+    * compiled its classes again (3.5 Janino compiles per lookup), while
+    * a `Param` is read at runtime and the code compiles once per plan
+    * shape. Partition pruning still evaluates them; what they give up is
+    * the parquet pushdown of the dim's `vehicle_id`/`route_id` filter,
+    * which only takes literals — the Trip table is one small file.
     */
   def hotspot(bc: DataFrame, trip: DataFrame,
       vehicleId: Int = 4008, routeId: Int = 65,
       month_ : Int = 10, day: Int = 18,
       hourLo: Int = 9, hourHi: Int = 11): DataFrame = {
-    val dim = trip.filter(col("vehicle_id") === vehicleId &&
-        col("route_id") === routeId && col("direction") === "Out")
+    val dim = trip.filter(col("vehicle_id") === Param.of(vehicleId) &&
+        col("route_id") === Param.of(routeId) && col("direction") === "Out")
       .select(col("trip_id"))
+    val (m, d) = (Param.of(month_), Param.of(day))
     bc
-      .filter(month(col("opd_date")) === month_ &&
-              dayofmonth(col("opd_date")) === day) // partition-prunable form
-      .filter(month(col("tstamp")) === month_ &&
-              dayofmonth(col("tstamp")) === day &&
-              hour(col("tstamp")).between(hourLo, hourHi))
+      .filter(month(col("opd_date")) === m &&
+              dayofmonth(col("opd_date")) === d) // partition-prunable form
+      .filter(month(col("tstamp")) === m &&
+              dayofmonth(col("tstamp")) === d &&
+              hour(col("tstamp")).between(Param.of(hourLo), Param.of(hourHi)))
       .join(broadcast(dim), Seq("trip_id"))
       .filter(col("speed").isNotNull) // F6
       .groupBy(col("latitude"), col("longitude"))

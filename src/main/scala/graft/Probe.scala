@@ -9,9 +9,11 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Where did a query's time go? A terminal stand-in for the Spark UI's
   * job and stage pages (guide §7.1): each target gets one un-timed
   * warm-up (codegen, fixture builds), then `reps` timed reps (default 3),
-  * each forced end to end with a `noop` write and followed by its table
-  * of completed stages (wall ms, tasks, executor CPU, input and shuffle
-  * bytes) and its slowest jobs, as [[SparkJobs]] recorded them.
+  * each forced end to end with a `noop` write. A rep's header names its
+  * jobs, stages and codegen compiles (count and ms: a rep that still
+  * compiles generates new Java per call); its table of completed stages
+  * (wall ms, tasks, executor CPU, input and shuffle bytes) and its
+  * slowest jobs follow, as [[SparkJobs]] recorded them.
   *
   * Usage: `runMain graft.Probe <q1,q2,…|headline|merge> [sfDir] [reps]
   * [--plans <tag> <suffix>] [--ab <k=v~k=v…>]`
@@ -123,7 +125,8 @@ object Probe {
   private def report(name: String, rep: Int, sec: Double, note: String,
       log: SparkJobs.Log): Unit = {
     println(f"%n=== $name rep$rep: $sec%.3f s, ${log.jobs.size} jobs, " +
-      f"${log.stages.size} stages$note ===")
+      f"${log.stages.size} stages, ${log.compiles} compiles " +
+      f"(${log.compileMs}%.0f ms)$note ===")
     println(f"${"stage"}%6s ${"ms"}%7s ${"tasks"}%5s ${"cpuMs"}%7s " +
       f"${"inMB"}%8s ${"inRec"}%9s ${"shRdMB"}%7s ${"shWrMB"}%7s  name")
     log.stages.sortBy(_.id).foreach { s =>

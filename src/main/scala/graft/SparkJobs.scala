@@ -4,12 +4,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Records the Spark jobs and completed stages a piece of library code
-  * starts: the per-stage execution statistics [[Probe]] prints and the
-  * job counts the specs pin. */
+  * starts, and the generated classes it compiled: the per-stage execution
+  * statistics [[Probe]] prints and the job counts the specs pin. */
 object SparkJobs {
 
   /** One Spark job: its description (else its call site), whether it is
@@ -24,9 +26,14 @@ object SparkJobs {
       inputBytes: Long, inputRecords: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, cpuMs: Long)
 
-  final case class Log(jobs: Seq[Job], stages: Seq[Stage])
+  /** `compiles` and `compileMs` are the Janino compiles (codegen cache
+    * misses) and their time while `body` ran, as deltas of Spark's
+    * JVM-wide `CodegenMetrics` and `CodeGenerator.compileTime`: work
+    * of another thread in the same JVM counts too. */
+  final case class Log(jobs: Seq[Job], stages: Seq[Stage], compiles: Long,
+      compileMs: Double)
 
-  /** The jobs and stages `body` ran. */
+  /** The jobs, stages and compiles `body` ran. */
   def record(spark: SparkSession)(body: => Unit): Log = {
     val started = new ConcurrentLinkedQueue[(SparkListenerJobStart, String)]
     val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]
@@ -56,7 +63,9 @@ object SparkJobs {
     val sc = spark.sparkContext
     sc.addSparkListener(l)
     try {
+      val (n0, ns0) = (compiles(), CodeGenerator.compileTime)
       body
+      val (n, ns) = (compiles() - n0, CodeGenerator.compileTime - ns0)
       // the bus delivers in order: once the fence job is seen, so is
       // every job `body` started and every stage it completed
       sc.setJobDescription(fence)
@@ -75,9 +84,12 @@ object SparkJobs {
               s.contains("parallelize") || s.contains("mapPartitions")),
             if (ended.containsKey(e.jobId)) ended.get(e.jobId) - e.time else -1L)
         },
-        stages.asScala.toSeq.filterNot(s => fenceStages(s.id)))
+        stages.asScala.toSeq.filterNot(s => fenceStages(s.id)),
+        n, ns / 1e6)
     } finally sc.removeSparkListener(l)
   }
+
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The jobs started while `body` ran. */
   def jobsOf(spark: SparkSession)(body: => Unit): Seq[Job] =

@@ -3792,10 +3792,12 @@ object Layout {
   /** Versions with a COMPLETE manifest, ascending. Incomplete (torn)
     * manifests are invisible — the reader-side half of the protocol. */
   def snapshotVersions(spark: SparkSession, dir: String): Seq[Long] =
-    listVersions(spark, dir).filter { v =>
-      try { read(spark, dir, v); true }
-      catch { case scala.util.control.NonFatal(_) => false }
-    }
+    listVersions(spark, dir).filter(complete(spark, dir, _))
+
+  /** Whether main-line version `v`'s manifest is complete (one GET). */
+  private def complete(spark: SparkSession, dir: String, v: Long): Boolean =
+    try { read(spark, dir, v); true }
+    catch { case scala.util.control.NonFatal(_) => false }
 
   /** Read the latest complete snapshot (or pinned `version` — time
     * travel). Reads ONLY the manifest's file list: orphaned data from a
@@ -3841,14 +3843,19 @@ object Layout {
     * surviving version is younger than the asked-for instant (history
     * before it was expired, or the table did not exist yet) — the
     * caller distinguishes "expired" from "wrong path" by whether ANY
-    * version exists. Pass the result to [[snapshotRead]]. */
+    * version exists. Pass the result to [[snapshotRead]].
+    *
+    * A descending walk over the version listing: newer manifests cost a
+    * status call each, and only one at or before the instant is read
+    * (a torn one is skipped) — one manifest GET in the common case. */
   def snapshotVersionAsOf(spark: SparkSession, dir: String,
       tsMillis: Long): Option[Long] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    snapshotVersions(spark, dir).reverseIterator.find { v =>
-      val m = new Path(dir, f"_snapshots/v$v%08d.manifest")
-      try fs.getFileStatus(m).getModificationTime <= tsMillis
-      catch { case _: java.io.FileNotFoundException => false }
+    listVersions(spark, dir).reverseIterator.find { v =>
+      (try fs.getFileStatus(manifestPath(dir, MainSub, v))
+             .getModificationTime <= tsMillis
+       catch { case _: java.io.FileNotFoundException => false }) &&
+        complete(spark, dir, v)
     }
   }
 

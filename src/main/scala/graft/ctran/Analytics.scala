@@ -20,7 +20,7 @@ object Analytics {
     *
     * Vehicle, route, month, day and hours are [[Param]]s, not literals:
     * a literal is inlined into the generated Java, so every new lookup
-    * compiled its classes again (3.5 Janino compiles per lookup), while
+    * compiled its classes again (~3 Janino compiles per lookup), while
     * a `Param` is read at runtime and the code compiles once per plan
     * shape. Partition pruning still evaluates them; what they give up is
     * the parquet pushdown of the dim's `vehicle_id`/`route_id` filter,
